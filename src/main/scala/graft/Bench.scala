@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark main: times the OSM import phases and
@@ -264,44 +264,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core (local[32] on the target box) — a silent
-    // local[4] would report 8× the real wall time
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE's INITIAL shuffle partition count is set per-section via
-      // Tuning.sizeToInput — sized to the section's input bytes, not a
-      // core-count constant. r10's flat 8×cores killed the XL import's
-      // ~2.5 GB-partition spill (284.6 s → 149.9 s at 79M elements) but
-      // taxed every small stage ~5.6 s flat (generalization on the 100 MB
-      // extract: 2.84 s → 5.6–7.2 s); byte-sizing keeps both wins.
-      // 10 MB is a cluster-conservative default; on a single 16g-heap box
-      // a 64 MB build side is cheap, and it lets AQE flip the import's
-      // assembly semi-join (a ~22 MB id set probe side at synth400 scale)
-      // to a broadcast join — no shuffle of the wide ways rows. At planet
-      // scale the id set outgrows any threshold and AQE keeps the shuffle.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "64m"))
-      // zstd for shuffle/spill/broadcast streams (lz4 is the Spark
-      // default): ~1.5-2× smaller on this data, and scratch DISK — not
-      // CPU — is the scale ceiling here (r11: the 24×/30× import probes
-      // died on ~64 GB free with lz4 shuffle files). rdd.compress covers
-      // the DISK_ONLY / spilled stage-cache blocks, which are serialized
-      // but UNcompressed by default — at 79M elements those blocks rival
-      // the shuffle files in bytes.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // each section sizes AQE's initial shuffle partitions to its own
+    // input bytes via Session.sizeToInput
+    val spark = Session.build("graft-bench")
 
     // JVM/Catalyst warmup outside the timed region.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -387,7 +352,7 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
         !new java.io.File(monaco).exists()) Seq.empty
       else try {
-        Tuning.sizeToInput(spark, Seq(monaco)) // 270 KB → cores
+        Session.sizeToInput(spark, Seq(monaco)) // 270 KB → cores
         val mapping = new graft.mapping.CompiledMapping(
           graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
         // one UNTIMED import first: Monaco now runs first in a cold JVM, so
@@ -432,7 +397,7 @@ object Bench {
         val nElems = graft.sources.OsmPbfSynth.synthesize(
           spark, monaco, synthDir, copies)
         // ~105 MB at 400 copies → cores: the r9 plan, no wide-shuffle tax
-        Tuning.sizeToInput(spark, Seq(synthDir))
+        Session.sizeToInput(spark, Seq(synthDir))
         val mapping = new graft.mapping.CompiledMapping(
           graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
         // A5 import statistics: observe-based per-kind counters audit the
@@ -575,9 +540,9 @@ object Bench {
                       size(col("refs")).as("nrefs"),
                       posexplode(col("refs")).as(Seq("pos", "id")))
                     graft.operators.Bucketing.writeBucketed(
-                      exploded, "graft_bench_wayrefs", "id", nBuckets = cpus.toInt)
+                      exploded, "graft_bench_wayrefs", "id", nBuckets = Session.cores)
                     graft.operators.Bucketing.writeBucketed(
-                      coords, "graft_bench_coords", "id", nBuckets = cpus.toInt)
+                      coords, "graft_bench_coords", "id", nBuckets = Session.cores)
                     tBucketize = (System.nanoTime() - tb) / 1e9
                   }
                   graft.operators.WayAssembly.resolveStored(
@@ -662,7 +627,7 @@ object Bench {
         val dDir = sys.env.getOrElse("SPARK_GRAFT_DIFF_PBF_DIR",
           s"$workDir/bench-pbf-diff")
         graft.sources.OsmPbfSynth.synthesize(spark, monaco, dDir, dCopies)
-        Tuning.sizeToInput(spark, Seq(dDir))
+        Session.sizeToInput(spark, Seq(dDir))
         val mapping = new graft.mapping.CompiledMapping(
           graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
         val stateDir = s"$workDir/bench-diff-state"
@@ -779,7 +744,7 @@ object Bench {
         val sBatches = sys.env.getOrElse("SPARK_GRAFT_SOAK_BATCHES", "50").toInt
         val sDir = s"$workDir/bench-pbf-soak"
         graft.sources.OsmPbfSynth.synthesize(spark, monaco, sDir, sCopies)
-        Tuning.sizeToInput(spark, Seq(sDir))
+        Session.sizeToInput(spark, Seq(sDir))
         val mapping = new graft.mapping.CompiledMapping(
           graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
         val stateDir = s"$workDir/bench-soak-state"
@@ -871,7 +836,7 @@ object Bench {
           gridCols = math.ceil(math.sqrt(xlCopies.toDouble)).toInt)
         // ~1.05 GB at 4000 copies → 8×cores: bounds the J1 assembly's
         // per-partition bytes (the 284.6 s / 13.5 GB-spill wall at 1×cores)
-        Tuning.sizeToInput(spark, Seq(xlDir))
+        Session.sizeToInput(spark, Seq(xlDir))
         val mapping = new graft.mapping.CompiledMapping(
           graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
         resetCaches()
@@ -992,9 +957,9 @@ object Bench {
                   size(col("refs")).as("nrefs"),
                   posexplode(col("refs")).as(Seq("pos", "id")))
                 graft.operators.Bucketing.writeBucketed(
-                  exploded, "graft_bench_xl_wayrefs", "id", nBuckets = cpus.toInt)
+                  exploded, "graft_bench_xl_wayrefs", "id", nBuckets = Session.cores)
                 graft.operators.Bucketing.writeBucketed(
-                  coords, "graft_bench_xl_coords", "id", nBuckets = cpus.toInt)
+                  coords, "graft_bench_xl_coords", "id", nBuckets = Session.cores)
                 tBucketize = (System.nanoTime() - tb) / 1e9
                 graft.operators.WayAssembly.resolveStored(
                   spark.table("graft_bench_xl_wayrefs"),
@@ -1071,7 +1036,7 @@ object Bench {
         // the lat offset past the pole
         graft.sources.OsmPbfSynth.synthesize(spark, monaco, xDir, xCopies,
           gridCols = math.ceil(math.sqrt(xCopies.toDouble)).toInt)
-        Tuning.sizeToInput(spark, Seq(xDir))
+        Session.sizeToInput(spark, Seq(xDir))
         val mapping = new graft.mapping.CompiledMapping(
           graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
         val stateDir = s"$workDir/bench-diff-xl-state"
@@ -1250,7 +1215,7 @@ object Bench {
           val nElems = graft.sources.OsmPbfSynth.synthesize(
             spark, monaco, xxlDir, xxlCopies,
             gridCols = math.ceil(math.sqrt(xxlCopies.toDouble)).toInt)
-          Tuning.sizeToInput(spark, Seq(xxlDir))
+          Session.sizeToInput(spark, Seq(xxlDir))
           val mapping = new graft.mapping.CompiledMapping(
             graft.mapping.MappingConf.fromFile(
               "/root/reference/test/complete_db_mapping.json"))
@@ -1335,7 +1300,7 @@ object Bench {
     emitRecord(Seq.empty)
 
     // ======================= query list =====================================
-    Tuning.sizeToInput(spark, Seq(sfDir)) // ≤ sf0.1 (~17 MB) → cores
+    Session.sizeToInput(spark, Seq(sfDir)) // ≤ sf0.1 (~17 MB) → cores
     val names = {
       if (sys.env.get("SPARK_GRAFT_BENCH_QUERIES").contains("0")) Seq.empty
       else {

@@ -81,13 +81,6 @@ final class ImportPipeline(
     * waves, so each wave materializes in parallel: small stage jobs fill
     * the cores the wave's big shuffle leaves idle. */
   def materializeStages(): Unit = {
-    // concurrent-within-wave is a win only when the cluster has idle
-    // capacity during the big shuffles; on a saturated local[N] box the
-    // jobs contend (measured +13% vs sequential) — keep it opt-out
-    if (sys.env.get("SPARK_GRAFT_WAVES").contains("0")) {
-      persisted.foreach(_._2.count())
-      return
-    }
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)

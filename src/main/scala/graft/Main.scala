@@ -167,31 +167,19 @@ object Main {
   }
 
   private def session(a: Args): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
     // -httpprofile binds the engine's live-inspection server (reference:
     // Go pprof, config.go:189; here: the Spark UI with its stage/task/
     // memory/thread-dump views)
-    a.str("httpprofile") match {
-      case Some(addr) =>
-        val (host, port) = addr.split(":", 2) match {
-          case Array(h, p) if h.nonEmpty => (Some(h), p.toInt)
-          case Array(_, p) => (None, p.toInt)
-          case Array(p) => (None, p.toInt)
-        }
-        b.config("spark.ui.enabled", "true").config("spark.ui.port", port.toString)
-        host.foreach(h => b.config("spark.driver.host", h))
-      case None => b.config("spark.ui.enabled", "false")
+    val ui = a.str("httpprofile").fold(Map.empty[String, String]) { addr =>
+      val (host, port) = addr.split(":", 2) match {
+        case Array(h, p) if h.nonEmpty => (Some(h), p.toInt)
+        case Array(_, p) => (None, p.toInt)
+        case Array(p) => (None, p.toInt)
+      }
+      Map("spark.ui.enabled" -> "true", "spark.ui.port" -> port.toString) ++
+        host.map("spark.driver.host" -> _)
     }
-    val s = b.getOrCreate()
+    val s = Session.build("graft", deploy = ui)
     s.sparkContext.setLogLevel(if (a.bool("quiet")) "ERROR" else "WARN")
     s
   }
@@ -257,8 +245,8 @@ object Main {
       // cores: bounds per-partition bytes on big imports (measured 1.9× on
       // a 79M-element import, spill-bound at 1×cores) while small extracts
       // skip the flat scheduling tax of wide initial shuffles (r10 verdict
-      // #2: 8×cores cost a flat ~5.6 s on a 100 MB input) — see Tuning
-      Tuning.sizeToInput(spark, Seq(readPath))
+      // #2: 8×cores cost a flat ~5.6 s on a 100 MB input) — see Session
+      Session.sizeToInput(spark, Seq(readPath))
       // -limitto also prunes whole out-of-coverage PBF blobs at the source
       // (header-bbox vs buffered coverage) before the per-element filters
       var bundle = readBundle(spark, readPath, limit)
@@ -471,7 +459,7 @@ object Main {
     // size initial shuffle partitions to the corpus being processed —
     // the batch release and delta paths shuffle the whole input
     a.str("in").orElse(a.str("prev"))
-      .foreach(p => Tuning.sizeToInput(spark, Seq(p)))
+      .foreach(p => Session.sizeToInput(spark, Seq(p)))
     val manifest = a.str("delta") match {
       case Some(delta) => graft.operators.CorpusRelease.applyDelta(spark,
         a.required("prev"), delta, a.required("out"),
@@ -494,7 +482,7 @@ object Main {
     */
   private def runIndex(spark: SparkSession, a: Args): Unit = {
     // the index build shuffles every posting of the input — size to it
-    Tuning.sizeToInput(spark, Seq(a.required("in")))
+    Session.sizeToInput(spark, Seq(a.required("in")))
     val docs = spark.read.parquet(a.required("in"))
     val out = a.required("out")
     if (a.bool("append") && !new java.io.File(out).isDirectory) {

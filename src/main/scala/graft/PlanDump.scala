@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
@@ -11,8 +10,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> [suffix] [name,name,...]
   * Writes <outDir>/<query>_<suffix>.txt (suffix defaults to "plan").
-  * Session config mirrors Bench's query section so the dumped plan is
-  * the benched plan.
+  * The session comes from `Session.build`, so the dumped plan is the
+  * benched plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,20 +21,8 @@ object PlanDump {
     val names =
       if (args.length > 3) args(3).split(',').map(_.trim).filter(_.nonEmpty).toSeq
       else SparkEntry.benchQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "64m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tuning.sizeToInput(spark, Seq(sfDir))
+    val spark = Session.build("graft-plandump")
+    Session.sizeToInput(spark, Seq(sfDir))
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       try {

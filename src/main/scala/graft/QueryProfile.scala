@@ -1,35 +1,23 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement tool (optimization rounds): run ONE declared query with the
   * bench session config and print per-stage executor metrics, so "where do
   * the seconds go" is answerable without the UI (guide §1.1/§7.1).
   *
   * Usage: runMain graft.QueryProfile <sfDir> <name> [reps]
-  * Prints one line per completed stage: wall, executor run/CPU time,
-  * input bytes, shuffle read/write bytes, task count — sorted by run time.
+  * Prints one line per completed stage attempt (`id.attempt`): wall,
+  * executor run/CPU time, input bytes, shuffle read/write bytes, task
+  * count — sorted by run time.
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST", "64m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tuning.sizeToInput(spark, Seq(sfDir))
+    val spark = Session.build("graft-queryprofile")
+    Session.sizeToInput(spark, Seq(sfDir))
     final case class St(id: Int, attempt: Int, wallMs: Long, runMs: Long,
       cpuMs: Long, inMb: Double, srMb: Double, swMb: Double, tasks: Int,
       nm: String)
@@ -54,14 +42,24 @@ object QueryProfile {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the last stage-completed events drain
+      // stage-completed events arrive on the listener thread after the
+      // action returns: wait until the count holds for 300 ms (5 s cap)
+      var seen = -1
+      var steady = 0
+      val deadline = System.nanoTime() + 5000000000L
+      while (steady < 3 && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        val n = stages.size
+        steady = if (n == seen) steady + 1 else 0
+        seen = n
+      }
       System.err.println(f"== $name rep $rep: $dt%.2f s, " +
         s"${stages.size} stages ==")
       import scala.jdk.CollectionConverters._
       val sorted = stages.asScala.toSeq.sortBy(-_.runMs)
       for (s <- sorted.take(25))
         System.err.println(
-          f"  stage ${s.id}%4d wall=${s.wallMs / 1e3}%6.2fs " +
+          f"  stage ${s.id}%4d.${s.attempt} wall=${s.wallMs / 1e3}%6.2fs " +
             f"run=${s.runMs / 1e3}%7.2fs cpu=${s.cpuMs / 1e3}%7.2fs " +
             f"in=${s.inMb}%7.1fMB sr=${s.srMb}%7.1fMB sw=${s.swMb}%7.1fMB " +
             f"tasks=${s.tasks}%3d ${s.nm}")

@@ -1,28 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is parquet TIMESTAMP(NANOS): read as long (ns since epoch)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // data-sized initial shuffle partitions (AQE coalesces down) — same
-    // sizing as Bench/Main so the gated plans match the benched plans. At
-    // the gate scales this resolves to cores (r9 behavior); the 8×cores
-    // posture only engages on ~GB inputs (see Tuning).
-    Tuning.sizeToInput(spark, Seq(sfDir))
+    val spark = Session.build("graft-verify")
+    Session.sizeToInput(spark, Seq(sfDir))
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (unset in the driver environment): run only a
     // comma-separated subset of queries, and restrict the oracle dump to it

@@ -44,14 +44,12 @@ final class StateStore(spark: SparkSession, dir: String) {
   // of the same dirs is sub-millisecond each. Keep discovery on the
   // driver for the store's views; a real cluster against object storage
   // wants the opposite, so the knob stays overridable (session conf
-  // `graft.store.listThreshold` wins, then the env var). The setting is
+  // `graft.store.listThreshold`). The setting is
   // SCOPED to the store's own reads — set before each file-index build
   // and restored after (r9 advice: the old constructor-global set leaked
   // driver-side listing into every later read in the session).
   private val listThreshold: String =
-    spark.conf.getOption("graft.store.listThreshold")
-      .orElse(sys.env.get("SPARK_GRAFT_LIST_THRESHOLD"))
-      .getOrElse("65536")
+    spark.conf.getOption("graft.store.listThreshold").getOrElse("65536")
 
   /** Run `f` (a `spark.read.parquet` call — parquet resolves its file
     * index eagerly at DataFrame creation) with the store's discovery

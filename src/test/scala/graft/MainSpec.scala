@@ -98,6 +98,22 @@ class MainSpec extends SparkSpecBase {
     assert(json.contains("\"id\":1"), json)
   }
 
+  test("Main.run leaves the conf of an existing session as it is") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    // values no session build picks, so a rewrite shows on any core count
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1234567")
+    try {
+      val before = keys.map(spark.conf.get)
+      Main.run(Array("import", "-mapping", writeMapping(), "-read", writeBaseOsm(),
+        "-write", "-cachedir", Files.createTempDirectory("graft-conf-state").toString,
+        "-connection", Files.createTempDirectory("graft-conf-conn").toString))
+      assert(keys.map(spark.conf.get) == before)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("run -once replicates from a file endpoint") {
     val mappingFile = writeMapping()
     val state = Files.createTempDirectory("graft-run-state").toString

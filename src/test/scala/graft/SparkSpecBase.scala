@@ -12,21 +12,15 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpecBase {
+  val Cores = 4
+
   lazy val session: SparkSession = {
     // Per-run warehouse: managed-table CTAS (BucketingSpec) must not trip
     // over locations left on disk by a previous JVM's run.
     val warehouse =
       java.nio.file.Files.createTempDirectory("graft-warehouse-").toUri.toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.build("graft-test", Cores,
+      Map("spark.sql.warehouse.dir" -> warehouse))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.mapping.{CompiledMapping, MappingConf}
@@ -14,13 +13,7 @@ import graft.sources.{OsmPbf, TagFilters}
   */
 object AssemblyProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build("graft-assembly-probe")
     import graft.functions.GeomFunctions._
 
     val mapping = new CompiledMapping(

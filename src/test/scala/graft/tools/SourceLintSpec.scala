@@ -48,6 +48,20 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("only graft/Session.scala builds a SparkSession") {
+    // one session factory: a second builder is a second conf, and the
+    // plans it runs are not the plans the oracle certifies (the needle is
+    // split so this file does not match itself)
+    val needle = "SparkSession" + ".builder"
+    val offenders = for {
+      f <- scalaFiles("src")
+      if f.getPath != "src/main/scala/graft/Session.scala"
+      (n, l) <- linesOf(f)
+      if l.contains(needle)
+    } yield s"${f.getPath}:$n: $l"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("SQL DROP statements never backtick-quote a whole interpolated name") {
     // `\"DROP TABLE IF EXISTS `$tbl`\"` treats db.tbl as ONE identifier and
     // silently misses the real table — quote the parsed PARTS instead

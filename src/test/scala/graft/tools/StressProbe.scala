@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic (Test/runMain graft.tools.StressProbe, not part of `sbt
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object StressProbe {
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build("graft-stress-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     val src = "/root/testdata/sf0.1"
