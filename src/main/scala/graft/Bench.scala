@@ -1,132 +1,111 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Per-round benchmark main: times the OSM import phases and
-  * SparkEntry.benchQueries on SPARK_GRAFT_SF_DIR. Queries are fully
-  * materialized via the noop sink (no driver collect).
-  *
-  * Output contract: the LAST stdout line is a SHORT JSON summary (totals
-  * + OSM phases + per-rep arrays) sized to survive any tail buffer; the
-  * full per-query record is printed on the line before it for humans and
-  * the archive. The OSM phases run FIRST — before the ~10-minute query
-  * list — so the recorded import time measures the plan, not whatever
-  * heap/page-cache state the query window leaves behind.
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import graft.mapping.{CompiledMapping, MappingConf}
+import graft.model.{Kind, Op}
+import graft.sources.{OsmPbf, OsmPbfSynth, TagFilters}
+import graft.sources.OsmXml.Bundle
+import graft.streaming.DiffPipeline
+
+/** Per-round benchmark main: a table of sections run in order over one rep
+  * harness ([[reps]]). `runMain graft.Bench [section …]` runs the named
+  * sections of `Table` (default: all), in table order. After every section
+  * the record measured so far is printed, contract line last, so a run
+  * killed mid-way still leaves every finished section on the last line.
   */
 object Bench {
 
-  /** Concurrent sink drains are a throughput win only when the box has
-    * memory headroom: with the JVM heap configured past half of physical
-    * RAM (the driver's ~90g-on-125GiB case), 8 in-flight table writes
-    * amplify resident-set pressure into a page-fault storm that inflates
-    * every phase 3-20×. Degrade to a sequential drain there; override with
-    * SPARK_GRAFT_SINK_PAR.
-    */
-  private def sinkPoolSize: Int =
-    sys.env.get("SPARK_GRAFT_SINK_PAR").map(_.toInt).getOrElse {
-      val phys = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case b: com.sun.management.OperatingSystemMXBean => b.getTotalMemorySize
-        case _ => Long.MaxValue
-      }
-      if (Runtime.getRuntime.maxMemory > phys / 2) 1 else 8
-    }
+  /** Inputs every section reads. `mapping` is built on first use: a box
+    * without the seed PBF and its mapping still runs the query sections. */
+  final class Ctx(val spark: SparkSession, val seedPbf: String,
+      mappingOf: => CompiledMapping, val workDir: String, val sfDir: String,
+      val gate: () => Gate = () => admitRep()) {
+    lazy val mapping: CompiledMapping = mappingOf
 
-  /** Materialize every output table via the noop sink: stage caches are
-    * forced first (dependency order), then all tables drain concurrently
-    * off the warmed caches.
-    */
-  private def sinkAll(pipeline: ImportPipeline,
-      tables: Map[String, org.apache.spark.sql.DataFrame],
-      eagerStages: Boolean): Unit = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val dfs = tables.values.toSeq
-    // at scale, force the shared caches first (concurrent first-touch jobs
-    // duplicate partition computation); on tiny inputs the extra count jobs
-    // are pure scheduling overhead — let the first table write warm them
-    if (eagerStages) pipeline.materializeStages()
-    else dfs.head.write.format("noop").mode("overwrite").save()
-    val rest = if (eagerStages) dfs else dfs.tail
-    val pool = Executors.newFixedThreadPool(sinkPoolSize)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    Await.result(
-      Future.sequence(rest.map(df => Future {
-        df.write.format("noop").mode("overwrite").save()
-      })), Duration.Inf)
-    pool.shutdown()
+    /** Between reps and sections: persisted frames and old-gen garbage
+      * left resident measured +60% on the scale import. */
+    def reset(gc: Boolean = true): Unit = { spark.catalog.clearCache(); if (gc) System.gc() }
   }
+
+  /** One bench section: the headline keys it emits, in order, and whether
+    * it reads the seed PBF (skipped by one check when that is absent). */
+  final case class Section(name: String, keys: Seq[String], needsSeed: Boolean)(
+      val run: Ctx => Record)
 
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** Storage level for the generalization-SOURCE table caches (the
-    * materialized-untimed copies the gen phase reads after the import's
-    * stage caches are dropped). r12 made these DISK_ONLY along with the
-    * XL/XXL element caches and took a real 3× gen regression (driver:
-    * 4.0 → 12.6 s; 8-core control 5.9 s — r12 verdict #2): the gen
-    * sources are the SMALL post-match end of the pipeline (output rows,
-    * not the 79–190M-element corpus), so the DISK_ONLY OOM fix buys
-    * nothing here and re-reading zstd disk blocks is pure cost.
-    * MEMORY_AND_DISK_SER keeps them serialized (bounded churn) but
-    * memory-resident when they fit — elements stay DISK_ONLY (§5).
-    */
-  private def genSourceStorage: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_GEN_STORAGE", "MEMORY_AND_DISK_SER"))
+  /** What the bench has measured so far. */
+  final case class Record(entries: Seq[(String, Double)] = Nil,
+      details: Seq[(String, String)] = Nil, queries: Seq[(String, Double)] = Nil,
+      failedQueries: Seq[String] = Nil) {
 
-  /** 1-minute system load at a rep boundary, recorded into the JSON so a
-    * contended rep is adjudicable from the artifact alone (r9 verdict: the
-    * driver record read 2.08× baseline while the box's flat rate was
-    * 1.10× — the artifact itself must say which reps ran on a busy box). */
+    def ++(o: Record): Record = Record(entries ++ o.entries,
+      details ++ o.details, queries ++ o.queries, failedQueries ++ o.failedQueries)
+
+    /** The lines to print, contract line LAST. A failed query has no key
+      * and adds nothing to `queries_all` or `value`. `*_net` keys would
+      * count the bucketed import twice in `value`. The driver keeps a 2 kB
+      * tail, so the contract line is capped at 1500 bytes: keys drop from
+      * the end, flagged `omitted`, before the envelope ever truncates. */
+    def lines(sfDir: String): Seq[String] = {
+      val queriesAll = queries.map(_._2).sum
+      val total = entries.filterNot(_._1.endsWith("_net")).map(_._2).sum + queriesAll
+      def line(metric: String, kept: Seq[(String, Double)], extra: String): String = {
+        val kv = (kept.map { case (k, v) => s""""$k":${fmt(v)}""" } :+
+          s""""queries_all":${fmt(queriesAll)}""").mkString(",")
+        s"""{"metric":"$metric","value":${fmt(total)},"unit":"sec","queries":{$kv},"n_queries":${queries.size},"sf":"$sfDir"$extra}"""
+      }
+      val (failedCount, failedNames) =
+        if (failedQueries.isEmpty) ("", "")
+        else (s""","failed_queries":${failedQueries.size}""",
+          s""","failed_queries":${failedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")}""")
+      val queriesDetail = if (queries.isEmpty) Nil else Seq(
+        s"""{"metric":"queries_detail","value":${fmt(total)},"unit":"sec","queries":${(entries ++ queries).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},"sf":"$sfDir"}""")
+      val detail = line("sections_detail", entries,
+        failedNames + details.map { case (k, v) => s""","$k":$v""" }.mkString)
+      var kept = entries
+      var contract = line("total", kept, failedCount)
+      while (contract.getBytes("UTF-8").length > 1500 && kept.nonEmpty) {
+        kept = kept.dropRight(1)
+        contract = line("total", kept, failedCount + s""","omitted":${entries.size - kept.size}""")
+      }
+      queriesDetail ++ Seq(detail, contract)
+    }
+  }
+
+  /** Foreign-CPU budget: a rep is contended above it, and the gate waits
+    * (at most GateCapSec) for the box to drop below it. 4 of 32 cores. */
+  private val MaxForeign = 0.125
+  private val GateCapSec = 120.0
+
+  /** Admission of one rep: 1-min loadavg, seconds waited, and whether the
+    * gate gave up over budget. */
+  final case class Gate(load: Double, waited: Double, timedOut: Boolean)
+
   private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split(" ")(0).toDouble
+    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Rep admission gate (r10 verdict #1, r11 verdict #3): before a timed
-    * rep, wait — bounded — until the box's FOREIGN-CPU share is below
-    * budget, and flag the rep `contended` when the gate times out still
-    * hot. Three rounds of official records were contention-hostage (r10:
-    * reps 22.4–89.96 s, 4× spread, vs 1.11× on a flat box); the r11 gate
-    * fixed that but admitted on raw 1-min loadavg, which cannot attribute
-    * — it spent 30–60 s per rep waiting out the e^(-t/60) decay of our
-    * OWN just-finished rep (~4 min of pure gate-wait per bench run).
-    * `getCpuLoad − getProcessCpuLoad` is exactly the foreign share and
-    * reacts in seconds: when our rep ends the JVM goes idle and a clean
-    * box admits on the first 3 s window, while a box someone else owns
-    * stays over budget for as long as they hold it. The threshold is the
-    * SAME 12.5% budget the in-rep meter flags on
-    * (SPARK_GRAFT_FOREIGN_CPU_MAX), so admission and contention-flagging
-    * agree by construction. Legacy disable knob honored:
-    * SPARK_GRAFT_LOAD_GATE=0 skips the wait entirely.
-    * Returns (1-min loadavg at admission — recorded for the artifact,
-    * not gated on — , waitedSec, gateTimedOut). */
-  private def admitRep(): (Double, Double, Boolean) = {
-    val maxForeign =
-      sys.env.getOrElse("SPARK_GRAFT_FOREIGN_CPU_MAX", "0.125").toDouble
-    val capSec =
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE_WAIT", "120").toDouble
-    val disabled =
-      sys.env.get("SPARK_GRAFT_LOAD_GATE").contains("0") || maxForeign <= 0
-    // flush dirty writeback before sampling: the r11 loadavg gate's 30-60s
-    // wait was an ACCIDENTAL settle for the previous section's page-cache
-    // aftermath; this gate admits in ~3s, so make the settle explicit or
-    // in-sequence reps inherit the writeback queue (measured: diff-XL
-    // applies 50.4s in-sequence vs 41.4s isolated on identical code with
-    // foreign_cpu~0.007 — the delta was aftermath, not codec or plan).
-    // sync is untimed (before admission) and near-free on a clean cache.
-    try new ProcessBuilder("sync").start().waitFor()
-    catch { case _: Throwable => () }
+  /** Wait, bounded, until the box's FOREIGN-CPU share (`getCpuLoad −
+    * getProcessCpuLoad`, mean of a 3 s window) is below budget; loadavg
+    * cannot tell our own last rep from a foreign load. Dirty writeback is
+    * flushed first, or in-sequence reps inherit the previous section's
+    * (diff-XL applies: 50.4 s in sequence vs 41.4 s isolated). */
+  def admitRep(): Gate = {
+    try new ProcessBuilder("sync").start().waitFor() catch { case _: Throwable => () }
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    // mean foreign share over a short window; -1 (bean unsupported /
-    // first-call NaN on every sample) admits rather than blocking forever
-    def window(samples: Int): Double = {
+    // -1 (bean unsupported / NaN on every sample) admits, never blocks
+    def window(): Double = {
       var sum = 0.0; var n = 0
       os.getCpuLoad; os.getProcessCpuLoad // prime the tick baselines
-      for (_ <- 1 to samples) {
+      for (_ <- 1 to 3) {
         Thread.sleep(1000)
         val s = os.getCpuLoad; val p = os.getProcessCpuLoad
         if (s >= 0 && p >= 0) { sum += math.max(0.0, s - p); n += 1 }
@@ -134,1286 +113,488 @@ object Bench {
       if (n == 0) -1.0 else sum / n
     }
     val t0 = System.nanoTime()
-    var fs = if (disabled) -1.0 else window(3)
-    while (fs >= maxForeign && (System.nanoTime() - t0) / 1e9 < capSec)
-      fs = window(3)
-    val waited = (System.nanoTime() - t0) / 1e9
-    val timedOut = !disabled && fs >= maxForeign
-    if (waited >= 10 || timedOut) System.err.println(
-      f"[bench] rep gate: foreign=$fs%.3f after $waited%.0fs" +
-        (if (timedOut) " — CONTENDED (cap hit)" else ""))
-    (loadavg(), waited, timedOut)
+    var fs = window()
+    while (fs >= MaxForeign && secs(t0) < GateCapSec) fs = window()
+    val gate = Gate(loadavg(), secs(t0), timedOut = fs >= MaxForeign)
+    if (gate.waited >= 10 || gate.timedOut) System.err.println(f"[bench] rep gate: " +
+      f"foreign=$fs%.3f after ${gate.waited}%.0fs" + (if (gate.timedOut) " — CONTENDED" else ""))
+    gate
   }
 
-  /** One timed scale rep: element count, phase walls, and the admission +
-    * in-flight record (1-min load at admission, seconds the gate waited,
-    * mean foreign-CPU fraction and GC seconds DURING the rep, whether the
-    * rep counts as contended). */
-  private final case class RepRun(parsed: Long, parse: Double, imp: Double,
-      gen: Double, load: Double, gateWait: Double, foreignCpu: Double,
-      gcSec: Double, ioSec: Double, contended: Boolean)
-
-  /** Sum of the kernel's weighted-ms-in-queue I/O counter over physical
-    * block devices (/proc/diskstats stat #11 — device queue time × queue
-    * depth). The r12 verdict's adjudication gap (#6): identical XL code
-    * measured 68–155 s across runs with foreign_cpu ≈ 0 and gc flat, and
-    * nothing in the rep record could attribute the spread to device I/O
-    * pressure vs the plan. The DELTA of this counter across a rep is that
-    * missing signal: high io_wait with low foreign CPU = the device (page
-    * cache writeback, another process's I/O, slow virtio) owned the rep.
-    * Partitions (vda1) are excluded so bytes aren't double-counted. */
+  /** Sum of the weighted-ms-in-queue I/O counter (/proc/diskstats stat #11)
+    * over whole block devices (partitions excluded: no double count). Its
+    * delta across a rep is io_wait; -1 when unreadable. */
   private def diskWeightedIoMs(): Long =
     try {
       val src = scala.io.Source.fromFile("/proc/diskstats")
       try src.getLines().foldLeft(0L) { (acc, line) =>
         val f = line.trim.split("\\s+")
-        if (f.length > 13 &&
-          f(2).matches("(vd|sd|xvd|hd)[a-z]+|nvme\\d+n\\d+|mmcblk\\d+"))
+        if (f.length > 13 && f(2).matches("(vd|sd|xvd|hd)[a-z]+|nvme\\d+n\\d+|mmcblk\\d+"))
           acc + f(13).toLong
         else acc
       } finally src.close()
     } catch { case _: Throwable => -1L }
 
-  /** Samples foreign CPU — whole-box CPU minus this JVM's — and this JVM's
-    * accumulated GC time while a rep runs. The admission gate only sees
-    * load at rep START; a mid-rep foreign burst or a GC storm is invisible
-    * to it, and loadavg DURING a rep can't attribute (our own 32-thread
-    * work legitimately drives it to ~15–30). `getCpuLoad −
-    * getProcessCpuLoad` is exactly the foreign share, so every slow rep is
-    * adjudicable from the artifact: foreign_cpu high → the box was owned,
-    * gc high → heap aftermath, both low → the plan itself. r13 adds the
-    * device-I/O queue-time delta (see diskWeightedIoMs) as the third
-    * attribution axis. */
-  private final class RepMeter {
-    private val os = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
+  /** One rep's meter record: admission, foreign-CPU share, GC and io_wait
+    * seconds, and executor task totals. foreign_cpu high → the box was
+    * owned; gc → heap aftermath; io_wait → the device; all low → the plan. */
+  final case class Meter(load: Double, gateWait: Double, foreignCpu: Double,
+      gc: Double, ioWait: Double, contended: Boolean, shuffleWriteGb: Double,
+      memSpillGb: Double, diskSpillGb: Double, peakTaskMemGb: Double)
+  /** JSON names of the Meter fields, in field order. */
+  private val MeterNames = Seq("load", "gate_wait", "foreign_cpu", "gc", "io_wait",
+    "contended", "shuffle_write_gb", "mem_spill_gb", "disk_spill_gb", "peak_task_mem_gb")
+
+  /** Samples foreign CPU every 2 s and sums task metrics until `stop`. */
+  private final class RepMeter(spark: SparkSession)
+      extends org.apache.spark.scheduler.SparkListener {
+    import java.util.concurrent.atomic.{AtomicLong, DoubleAdder}
+    private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    private def gcMs: Long = {
-      var sum = 0L
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .forEach(b => sum += math.max(0L, b.getCollectionTime))
-      sum
-    }
+    private def gcMs: Long = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+    private val shuffle, memSpill, diskSpill, peak = new AtomicLong
     private val gc0 = gcMs
     private val io0 = diskWeightedIoMs()
-    private val foreignSum = new java.util.concurrent.atomic.DoubleAdder
-    private val samples = new java.util.concurrent.atomic.AtomicLong
+    private val foreignSum = new DoubleAdder
+    private val samples = new AtomicLong
     @volatile private var stopped = false
-    private val t = new Thread(() => {
+    private val sampler = new Thread(() => {
       while (!stopped) {
-        val s = os.getCpuLoad
-        val p = os.getProcessCpuLoad
-        if (s >= 0 && p >= 0) {
-          foreignSum.add(math.max(0.0, s - p))
-          samples.incrementAndGet()
-        }
-        try Thread.sleep(2000)
-        catch { case _: InterruptedException => () }
+        val s = os.getCpuLoad; val p = os.getProcessCpuLoad
+        if (s >= 0 && p >= 0) { foreignSum.add(math.max(0.0, s - p)); samples.incrementAndGet() }
+        try Thread.sleep(2000) catch { case _: InterruptedException => () }
       }
     })
-    t.setDaemon(true)
-    t.start()
-    /** (mean foreign-CPU fraction [0,1] or -1 if unsampled, GC seconds,
-      * device-I/O weighted queue seconds or -1 if /proc/diskstats is
-      * unreadable). */
-    def stop(): (Double, Double, Double) = {
-      discard()
-      val n = samples.get
-      val io1 = diskWeightedIoMs()
-      val ioSec = if (io0 < 0 || io1 < 0) -1.0 else (io1 - io0) / 1e3
-      (if (n == 0) -1.0 else foreignSum.sum / n, (gcMs - gc0) / 1e3, ioSec)
-    }
+    sampler.setDaemon(true)
+    sampler.start()
+    spark.sparkContext.addSparkListener(this)
 
-    /** Idempotent kill for `finally` blocks: a rep body that throws must
-      * not leak its sampler thread (the r10 ADVICE listener-leak lesson,
-      * applied to the thing that replaced it). */
-    def discard(): Unit = {
-      stopped = true
-      t.interrupt()
-      t.join(3000)
-    }
-  }
-
-  /** A rep is contended when the gate timed out still over threshold OR
-    * the in-flight foreign-CPU share exceeded the budget (default 12.5% =
-    * 4 of 32 cores — enough to matter against a ≤1.3× spread bar). */
-  private def isContended(gateTimedOut: Boolean, foreignCpu: Double): Boolean =
-    gateTimedOut || foreignCpu >
-      sys.env.getOrElse("SPARK_GRAFT_FOREIGN_CPU_MAX", "0.125").toDouble
-
-  /** Sums executor task metrics while attached — the spill/shuffle record
-    * for the 10×-scale import rep (does the plan survive a scale-up, or
-    * does it start thrashing memory). */
-  private final class TaskMetricsAccum
-      extends org.apache.spark.scheduler.SparkListener {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    val peakMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+      Option(t.taskMetrics).foreach { m =>
+        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         memSpill.addAndGet(m.memoryBytesSpilled)
         diskSpill.addAndGet(m.diskBytesSpilled)
-        peakMem.getAndAccumulate(m.peakExecutionMemory, Math.max(_, _))
+        peak.getAndAccumulate(m.peakExecutionMemory, Math.max(_, _))
+      }
+
+    def stop(gate: Gate): Meter = {
+      stopped = true
+      sampler.interrupt()
+      sampler.join(3000)
+      spark.sparkContext.removeSparkListener(this)
+      val io1 = diskWeightedIoMs()
+      val gb = 1024.0 * 1024 * 1024
+      val foreign = if (samples.get == 0) -1.0 else foreignSum.sum / samples.get
+      Meter(gate.load, gate.waited, foreign, (gcMs - gc0) / 1e3,
+        if (io0 < 0 || io1 < 0) -1.0 else (io1 - io0) / 1e3,
+        gate.timedOut || foreign > MaxForeign,
+        shuffle.get / gb, memSpill.get / gb, diskSpill.get / gb, peak.get / gb)
+    }
+  }
+
+  /** The finished reps of one measurement, each with its meter record. */
+  final case class Reps[T](done: Seq[(T, Meter)], failed: Int) {
+    def values: Seq[T] = done.map(_._1)
+    def ++(o: Reps[T]): Reps[T] = Reps(done ++ o.done, failed + o.failed)
+    /** Per-rep meter arrays and `failed_reps`, as JSON object members. */
+    def json: String = MeterNames.zipWithIndex.map { case (name, i) =>
+      val col = done.map(_._2.productElement(i)).map { case d: Double => fmt(d); case x => x }
+      s""""$name":${col.mkString("[", ",", "]")}"""
+    }.mkString(",") + s""","failed_reps":$failed"""
+  }
+
+  /** The one rep harness: for each rep, gate (if `gated`) → meter → body →
+    * reset, untimed (System.gc too unless `gc` is off, as for the short
+    * query and serve reps). A throwing rep is logged and counted. */
+  def reps[T](ctx: Ctx, label: String, n: Int, gated: Boolean, gc: Boolean = true)(
+      body: Int => T): Reps[T] = {
+    val runs = (1 to n).map { i =>
+      val gate = if (gated) ctx.gate() else Gate(loadavg(), 0.0, timedOut = false)
+      val meter = new RepMeter(ctx.spark)
+      val out = try Right(body(i)) catch { case e: Throwable => Left(e) }
+      val m = meter.stop(gate)
+      ctx.reset(gc)
+      System.err.println(f"[bench] $label rep $i/$n load=${m.load}%.2f " +
+        f"foreign=${m.foreignCpu}%.3f gc=${m.gc}%.1fs io_wait=${m.ioWait}%.1fs " +
+        f"shuffle=${m.shuffleWriteGb}%.2fGB spill=${m.memSpillGb + m.diskSpillGb}%.2fGB" +
+        (if (m.contended) " CONTENDED" else "") + out.fold(e => s" FAILED: ${e.getMessage}", _ => ""))
+      out.map(_ -> m)
+    }
+    Reps(runs.collect { case Right(r) => r }, runs.count(_.isLeft))
+  }
+
+  private def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+  private def timed(f: => Any): Double = { val t0 = System.nanoTime(); f; secs(t0) }
+  private def arr(xs: Seq[Double]): String = xs.map(fmt).mkString("[", ",", "]")
+  private def med(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+  private def delete(ctx: Ctx, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(ctx.spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
+  /** `copies` translated seed copies under the work dir, session sized to
+    * them; a grid ≥ 20 wide, square past 400 copies, keeps valid latitudes. */
+  private def synth(ctx: Ctx, name: String, copies: Int): String = {
+    val dir = s"${ctx.workDir}/bench-pbf-$name"
+    OsmPbfSynth.synthesize(ctx.spark, ctx.seedPbf, dir, copies,
+      gridCols = math.max(20, math.ceil(math.sqrt(copies.toDouble)).toInt))
+    Session.sizeToInput(ctx.spark, Seq(dir))
+    dir
+  }
+
+  /** Every output table into the noop sink. `eagerStages` forces the stage
+    * caches first (concurrent first-touch jobs duplicate partitions); else
+    * the first table write warms them. One table at a time when the heap is
+    * oversized for the box: 8 in-flight writes page-fault (phases 3-20×). */
+  private def sinkAll(pipeline: ImportPipeline, tables: Map[String, DataFrame],
+      eagerStages: Boolean): Unit = {
+    val dfs = tables.values.toSeq
+    if (eagerStages) pipeline.materializeStages() else noop(dfs.head)
+    DiffPipeline.drainConcurrently(
+      (if (eagerStages) dfs else dfs.tail).map(df => () => noop(df)),
+      par = if (ImportPipeline.heapOversized) 1 else 8)
+  }
+
+  /** The gen phase's source copies: small post-match rows, memory-resident
+    * when they fit (DISK_ONLY here was a 3× gen regression, r12 #2). */
+  private val GenSourceStorage = StorageLevel.MEMORY_AND_DISK_SER
+
+  private final case class ImportTimes(elems: Long, parse: Double, imp: Double, gen: Double)
+
+  /** One import: parse (decode into the cached element frames) → import
+    * (match, assembly, geometry, noop sink) → generalize, which reads
+    * copies of its sources filled untimed off the dropped stage caches. */
+  private def importOnce(ctx: Ctx, read: () => Bundle, storage: StorageLevel): ImportTimes = {
+    import ctx.{mapping, spark}
+    val t0 = System.nanoTime()
+    val bundle = read()
+    val parsed = bundle.coords.count() + bundle.ways.count() + bundle.relations.count()
+    val tParse = secs(t0)
+    val t1 = System.nanoTime()
+    val pipeline = new ImportPipeline(spark, mapping, storage = storage)
+    val tables = pipeline.run(bundle)
+    sinkAll(pipeline, tables, eagerStages = true)
+    val tImport = secs(t1)
+    val genSources = mapping.conf.generalizedTables.values.map(_.source).toSet
+    val stable = tables.filter { case (n, _) => genSources(n) }
+    stable.values.foreach(_.persist(GenSourceStorage))
+    stable.values.foreach(_.count())
+    pipeline.unpersistAll()
+    val tGen = timed(graft.operators.Generalize(spark, mapping, tables).values.foreach(noop))
+    stable.values.foreach(_.unpersist())
+    ImportTimes(parsed, tParse, tImport, tGen)
+  }
+
+  /** One import scale, timed reps gated. `storage` None: MEMORY_AND_DISK
+    * element caches and box-chosen stage storage; DISK_ONLY from XL up (at
+    * 79M elements: import 67.1 s vs 89.8 s). `settle`: one untimed import
+    * first (the box at bench start inflated the first timed reps 2-3×),
+    * which also takes the import statistics: no timed rep pays `observe`.
+    * `bucketedReps`: the bucketed-element-store A/B; rep 1 writes the store
+    * inside its timed import (`bucketize`), later reps reuse it (`stored`).
+    * `minFreeGb`: delete the diff/soak scratch, then skip if still short. */
+  final case class ImportRow(label: String, copies: Int, reps: Int,
+      storage: Option[StorageLevel], bucketedReps: Int, settle: Boolean,
+      detail: String, minFreeGb: Option[Double] = None)
+
+  val Synth400 = ImportRow("synth400", 400, 5, None, 3, settle = true, "osm_reps")
+  val Xl4000 = ImportRow("xl4000", 4000, 2, Some(StorageLevel.DISK_ONLY), 1, settle = false, "osm_xl")
+  val Xxl9600 = ImportRow("xxl9600", 9600, 1, Some(StorageLevel.DISK_ONLY), 0, settle = false,
+    "osm_xxl", minFreeGb = Some(42))
+
+  def importSection(r: ImportRow): Section = {
+    val l = r.label
+    Section(l, Seq(s"osm_parse_$l", s"osm_import_$l", s"osm_generalize_$l") ++
+      (if (r.bucketedReps > 0)
+        Seq(s"osm_import_${l}_bucketed", s"osm_bucketize_$l", s"osm_import_${l}_bucketed_net")
+      else Nil) ++ (if (r.bucketedReps > 1) Seq(s"osm_import_${l}_stored") else Nil),
+      needsSeed = true) { ctx =>
+      import ctx.{mapping, spark}
+      val freeGb = r.minFreeGb.map { _ =>
+        Option(new java.io.File(ctx.workDir).listFiles()).getOrElse(Array.empty)
+          .filter(_.getName.matches("bench-(pbf-)?(diff|soak).*")).foreach(f => delete(ctx, f.getPath))
+        spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_bench_"))
+          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+        new java.io.File(ctx.workDir).getUsableSpace / (1024.0 * 1024 * 1024)
+      }
+      if (freeGb.exists(f => r.minFreeGb.exists(f < _))) {
+        System.err.println(f"[bench] $l skipped: free=${freeGb.get}%.1fGB < ${r.minFreeGb.get}%.1fGB")
+        Record()
+      } else {
+        val dir = synth(ctx, l, r.copies)
+        val readStorage = r.storage.getOrElse(StorageLevel.MEMORY_AND_DISK)
+        val stageStorage = r.storage.getOrElse(ImportPipeline.defaultStorage)
+        // the reference's reader applies the tag prefilter during parse
+        def read() = OsmPbf.read(spark, dir, Some(TagFilters(mapping)), storage = readStorage)
+        val settle = reps(ctx, s"$l settle", if (r.settle) 1 else 0, gated = false) { _ =>
+          val stats = graft.operators.ImportStats.attach(spark)
+          try {
+            importOnce(ctx, () => graft.operators.ImportStats.instrument(read()), stageStorage)
+            System.err.println(s"[bench] $l stats ${stats.report()}")
+            stats.current
+          } finally graft.operators.ImportStats.detach(spark, stats)
+        }
+        val plain = reps(ctx, l, r.reps, gated = true)(_ => importOnce(ctx, () => read(), stageStorage))
+        val bucketed = reps(ctx, s"${l}_bucketed", r.bucketedReps, gated = false) { i =>
+          val bundle = read()
+          bundle.coords.count(); bundle.ways.count(); bundle.relations.count() // untimed parse
+          val (wayrefs, coords) = (s"graft_bench_${l}_wayrefs", s"graft_bench_${l}_coords")
+          var tBucketize = 0.0
+          val stored: (DataFrame, DataFrame) => DataFrame = (w, c) => {
+            if (i == 1) tBucketize = timed {
+              graft.operators.Bucketing.writeBucketed(w.select(col("id").as("way_id"),
+                size(col("refs")).as("nrefs"), posexplode(col("refs")).as(Seq("pos", "id"))),
+                wayrefs, "id", nBuckets = Session.cores)
+              graft.operators.Bucketing.writeBucketed(c, coords, "id", nBuckets = Session.cores)
+            }
+            graft.operators.WayAssembly.resolveStored(spark.table(wayrefs), spark.table(coords))
+          }
+          // box-chosen stage storage at every scale: the r13 basis of this A/B
+          val t1 = System.nanoTime()
+          val pipeline = new ImportPipeline(spark, mapping, assembler = stored)
+          sinkAll(pipeline, pipeline.run(bundle), eagerStages = true)
+          val tImport = secs(t1)
+          pipeline.unpersistAll()
+          (tImport, tBucketize)
+        }
+        val (ps, bs) = (plain.values, bucketed.values)
+        def medians(rs: Seq[ImportTimes]) = s"""{"parse":${fmt(med(rs.map(_.parse)))},""" +
+          s""""import":${fmt(med(rs.map(_.imp)))},"gen":${fmt(med(rs.map(_.gen)))}}"""
+        val clean = plain.done.filterNot(_._2.contended).map(_._1)
+        val detail = s"""{"copies":${r.copies},"elems":${ps.head.elems},""" +
+          s""""parse":${arr(ps.map(_.parse))},"import":${arr(ps.map(_.imp))},""" +
+          s""""gen":${arr(ps.map(_.gen))},${plain.json},"median":${medians(ps)}""" +
+          (if (clean.nonEmpty && clean.size < ps.size) s""","median_clean":${medians(clean)}""" else "") +
+          settle.done.map { case (stats, m) =>
+            s""","settle_load":${fmt(m.load)},"settle":{${settle.json}},""" +
+              s""""import_stats":{"basis":"untimed settle rep"""" +
+              stats.map { case (k, v) => s""","$k":$v""" }.mkString + "}"
+          }.mkString +
+          (if (r.bucketedReps == 0) "" else s""","bucketed":{"import":${arr(bs.map(_._1))},""" +
+            s""""bucketize":${arr(bs.map(_._2))},${bucketed.json}}""") +
+          freeGb.map(f => s""","free_gb_before":${fmt(f)}""").mkString + "}"
+        Record(Seq(s"osm_parse_$l" -> ps.map(_.parse).min, s"osm_import_$l" -> ps.map(_.imp).min,
+          s"osm_generalize_$l" -> ps.map(_.gen).min) ++
+          bs.headOption.toSeq.flatMap { case (tb, tz) => Seq(s"osm_import_${l}_bucketed" -> tb,
+            s"osm_bucketize_$l" -> tz, s"osm_import_${l}_bucketed_net" -> (tb - tz)) } ++
+          (if (bs.size > 1) Seq(s"osm_import_${l}_stored" -> bs.tail.map(_._1).min) else Nil),
+          Seq(r.detail -> detail))
       }
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // each section sizes AQE's initial shuffle partitions to its own
-    // input bytes via Session.sizeToInput
-    val spark = Session.build("graft-bench")
-
-    // JVM/Catalyst warmup outside the timed region.
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    // scratch root for reusable bench artifacts (indexes, diff state):
-    // derived from the working dir (overridable) rather than hardcoded, so
-    // a run from another checkout neither writes into this tree nor races
-    // a concurrent bench JVM on shared paths.
-    val workDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_WORKDIR",
-      new java.io.File("target").getAbsolutePath)
-
-    // phase hygiene: queries leave persisted frames (e.g. the minhash
-    // signature cache) and old-gen garbage behind; measured +60% on the
-    // scale import when they stay resident. Each phase starts clean.
-    def resetCaches(): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
+  /** The full seed import, after an untimed prime that takes the cold
+    * JVM's first-touch codegen and classloading. */
+  val Monaco: Section = Section("monaco", Seq("osm_import_monaco"), needsSeed = true) { ctx =>
+    import ctx.{mapping, spark}
+    Session.sizeToInput(spark, Seq(ctx.seedPbf))
+    def importSeed(): Unit = {
+      val pipeline = new ImportPipeline(spark, mapping)
+      sinkAll(pipeline, pipeline.run(OsmPbf.read(spark, ctx.seedPbf)), eagerStages = false)
+      pipeline.unpersistAll()
     }
+    importSeed()
+    ctx.reset()
+    val r = reps(ctx, "monaco", 1, gated = false)(_ => timed(importSeed()))
+    Record(Seq("osm_import_monaco" -> r.values.min), Seq("osm_monaco" -> s"{${r.json}}"))
+  }
 
-    // per-section record state, filled as sections run (see emitRecord)
-    var osmReps: Option[String] = None
-    var xlMetrics: Option[String] = None
-    var soakMetrics: Option[String] = None
-    var diffXlMetrics: Option[String] = None
-    var xxlMetrics: Option[String] = None
-    var osmAcc: Seq[(String, Double)] = Seq.empty
+  private val NoMembers = expr("cast(array() as array<struct<id:bigint,mtype:tinyint,role:string>>)")
 
-    /** Print the bench record with everything measured SO FAR: a DETAIL
-      * line first (rep arrays + per-rep meter blocks — archive/humans),
-      * then the machine-readable contract line LAST and headline-only.
-      * Called after every major section as truncation insurance: the
-      * driver reads the LAST matching stdout line, so if a time cap kills
-      * the JVM mid-run the record still carries every completed section.
-      *
-      * The contract line is hard-capped ≤1500 bytes (r11 verdict #1): the
-      * driver's tail capture is 2000 bytes, and r11's contract line —
-      * which carried the rep/meter blocks inline — outgrew it, cutting
-      * off the line's HEAD and leaving BENCH_r11 "parsed": null. Detail
-      * now rides only on the line above; if the headline itself ever
-      * outgrows the cap, per-key entries drop from the end (flagged
-      * "omitted":N) before the envelope ever truncates mid-JSON. */
-    def emitRecord(queryResults: Seq[(String, Double)]): Unit = {
-      // derived *_net keys (bucketed − bucketize) are DETAIL, not measured
-      // phases: summing them would count the bucketed import twice and
-      // break round-over-round comparison of `value` (r10 advice)
-      val total = osmAcc.filterNot(_._1.endsWith("_net")).map(_._2).sum +
-        queryResults.map(_._2).sum
-      val repsField = osmReps.map(r => s""","osm_reps":$r""").getOrElse("") +
-        xlMetrics.map(m => s""","osm_xl":$m""").getOrElse("") +
-        soakMetrics.map(m => s""","osm_soak":$m""").getOrElse("") +
-        diffXlMetrics.map(m => s""","osm_diff_xl":$m""").getOrElse("") +
-        xxlMetrics.map(m => s""","osm_xxl":$m""").getOrElse("")
-      def line(entries: Seq[(String, Double)], metric: String,
-          extra: String): String = {
-        val kv = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-          .mkString(",")
-        val sep = if (kv.isEmpty) "" else ","
-        s"""{"metric":"$metric","value":${fmt(total)},"unit":"sec","queries":{$kv$sep"queries_all":${fmt(queryResults.map(_._2).sum)}},"n_queries":${queryResults.size},"sf":"$sfDir"$extra}"""
+  /** A node-move batch: every kept node shifted `dLon` degrees east. */
+  private def nodeMoves(coords: DataFrame, keep: Column, dLon: Double): DataFrame =
+    coords.filter(keep).select(lit(Kind.Node).cast("tinyint").as("kind"),
+      col("id"), (col("lon") + lit(dLon)).as("lon"), col("lat"),
+      typedLit(Map.empty[String, String]).as("tags"),
+      typedLit(Seq.empty[Long]).as("refs"), NoMembers.as("members"),
+      lit(Op.Modify).cast("tinyint").as("op"))
+
+  /** `nodes` plus a foreign-tag touch of every 89th way (pulls coord
+    * buckets through the rebuild) and 13th relation (member fetch, ring
+    * assembly). Refs and members are kept: table membership cannot flip. */
+  private def mixedBatch(st: Bundle, nodes: DataFrame): DataFrame = {
+    def touch(df: DataFrame, kind: Byte, every: Int, refs: Column, members: Column) =
+      df.filter(col("id") % every === 0).select(lit(kind).cast("tinyint").as("kind"),
+        col("id"), lit(null).cast("double").as("lon"), lit(null).cast("double").as("lat"),
+        map_concat(col("tags"), map(lit("graft:touched"), lit("1"))).as("tags"),
+        refs.as("refs"), members.as("members"), lit(Op.Modify).cast("tinyint").as("op"))
+    nodes.unionByName(touch(st.ways, Kind.Way, 89, col("refs"), NoMembers))
+      .unionByName(touch(st.relations, Kind.Relation, 13, typedLit(Seq.empty[Long]),
+        expr("transform(members, m -> struct(m.id as id, m.type as mtype, m.role as role))")))
+  }
+
+  /** Diff-apply at one store size: a diff-ready init (min of `initReps`,
+    * each from a deleted store), then `applyDiff` of a ~1% node-move batch
+    * and of a mixed batch, re-applied onto the same committed version
+    * (commit=false) so every rep measures one plan. `Diff`: ~2M elements at
+    * 256 buckets (~7k rows per bucket ≈ file-sized); `DiffXl`: 10× that. */
+  final case class DiffRow(suffix: String, copies: Int, buckets: Int,
+      initReps: Int, applyReps: Int, mixedReps: Int, gated: Boolean)
+  val Diff = DiffRow("", 100, 256, 1, 3, 3, gated = false)
+  val DiffXl = DiffRow("_xl", 1000, 512, 2, 2, 1, gated = true)
+
+  def diffSection(r: DiffRow): Section = {
+    val s = r.suffix
+    Section(s"diff$s", Seq(s"osm_diff_init$s", s"osm_diff_apply$s", s"osm_diff_apply_mixed$s"),
+      needsSeed = true) { ctx =>
+      import ctx.{mapping, spark}
+      val dir = synth(ctx, s"diff$s", r.copies)
+      val state = s"${ctx.workDir}/bench-diff$s-state"
+      val bundle = OsmPbf.read(spark, dir, Some(TagFilters(mapping)))
+      val init = reps(ctx, s"diff$s init", r.initReps, r.gated) { _ =>
+        delete(ctx, state)
+        timed(DiffPipeline.init(spark, mapping, state, bundle, nBuckets = r.buckets))
       }
-      println(line(osmAcc, "sections_detail", repsField))
-      var keep = osmAcc
-      var contract = line(keep, "total", "")
-      while (contract.length > 1500 && keep.nonEmpty) {
-        keep = keep.dropRight(1)
-        contract = line(keep, "total",
-          s""","omitted":${osmAcc.size - keep.size}""")
+      val st = DiffPipeline.storedBundleAt(spark, state, 0)
+      // the batches are not part of the timed apply
+      val nodes = nodeMoves(st.coords, col("id") % 97 === 0, 1e-6).localCheckpoint()
+      val mixed = mixedBatch(st, nodes).localCheckpoint()
+      def apply(label: String, batch: DataFrame, n: Int) = reps(ctx, label, n, r.gated) { _ =>
+        timed(DiffPipeline.applyDiff(spark, mapping, state, batch, from = Some(0), commit = false))
       }
-      println(contract)
+      val applies = apply(s"diff$s apply", nodes, r.applyReps)
+      val mixes = apply(s"diff$s apply_mixed", mixed, r.mixedReps)
+      Record(Seq(s"osm_diff_init$s" -> init.values.min, s"osm_diff_apply$s" -> applies.values.min,
+        s"osm_diff_apply_mixed$s" -> mixes.values.min),
+        // meter arrays: init reps, then apply reps, then mixed reps
+        Seq(s"osm_diff$s" -> (s"""{"copies":${r.copies},"changed":${nodes.count()},""" +
+          s""""changed_mixed":${mixed.count()},"init_reps":${arr(init.values)},""" +
+          s""""apply_reps":${arr(applies.values)},"mixed_reps":${arr(mixes.values)},""" +
+          s"""${(init ++ applies ++ mixes).json}}""")))
     }
+  }
 
-    // ======================= OSM phases (FIRST) =============================
-    // The scale import reps run before the query list ON PURPOSE: three
-    // rounds running, the driver's import record diverged from idle-box
-    // re-runs of identical code because the reps inherited the heap and
-    // page-cache state of an ~11-minute 78-query window plus whatever box
-    // contention it attracted. First-in-JVM, the record measures the plan.
+  /** Long-stream drift, as one rep: `batches` COMMITTED node-move batches
+    * (each a different node set) through applyDiff + maintain. Flat first
+    * vs last 10 medians and a bounded file count: the store keeps up. */
+  final case class SoakRow(copies: Int, batches: Int, buckets: Int)
+  val Soak = SoakRow(20, 50, 64)
 
-    // pipeline-level benchmark: full Monaco PBF import (decode, match,
-    // way/relation assembly, geometry build) against BASELINE.md's
-    // elements/s target; skipped if the fixture is absent.
-    val monaco = "/root/reference/vendor/github.com/omniscale/go-osm/parser/pbf/monaco-20150428.osm.pbf"
-    val osmResult =
-      if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
-        !new java.io.File(monaco).exists()) Seq.empty
-      else try {
-        Session.sizeToInput(spark, Seq(monaco)) // 270 KB → cores
-        val mapping = new graft.mapping.CompiledMapping(
-          graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
-        // one UNTIMED import first: Monaco now runs first in a cold JVM, so
-        // without a prime the timed rep absorbs first-touch codegen and
-        // classloading of the whole import pipeline (r8 recorded 14.1s for
-        // a 270 KB extract that runs in ~5s warm) — the same treatment the
-        // query list gets from its sf0.001 warmup pass.
-        val prime = new ImportPipeline(spark, mapping)
-        sinkAll(prime, prime.run(graft.sources.OsmPbf.read(spark, monaco)),
-          eagerStages = false)
-        prime.unpersistAll()
-        resetCaches()
-        val t0 = System.nanoTime()
-        val pipeline = new ImportPipeline(spark, mapping)
-        val tables = pipeline.run(graft.sources.OsmPbf.read(spark, monaco))
-        sinkAll(pipeline, tables, eagerStages = false)
-        pipeline.unpersistAll()
-        Seq("osm_import_monaco" -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] osm_import_monaco failed: ${e.getMessage}")
-        Seq.empty
+  def soakSection(r: SoakRow): Section = Section("soak",
+    Seq("osm_diff_soak_total", "osm_diff_soak_first10_med", "osm_diff_soak_last10_med"),
+    needsSeed = true) { ctx =>
+    import ctx.{mapping, spark}
+    val dir = synth(ctx, "soak", r.copies)
+    val state = s"${ctx.workDir}/bench-soak-state"
+    delete(ctx, state)
+    DiffPipeline.init(spark, mapping, state,
+      OsmPbf.read(spark, dir, Some(TagFilters(mapping))), nBuckets = r.buckets)
+    ctx.reset()
+    val base = DiffPipeline.storedBundleAt(spark, state, 0).coords
+      .select("id", "lon", "lat").localCheckpoint()
+    val run = reps(ctx, "soak", 1, gated = false) { _ =>
+      (1 to r.batches).map { i =>
+        val batch = nodeMoves(base, (col("id") + lit(i)) % 997 === 0, i * 1e-6).localCheckpoint()
+        val dt = timed {
+          DiffPipeline.applyDiff(spark, mapping, state, batch)
+          DiffPipeline.maintain(spark, mapping, state)
+        }
+        if (i % 10 == 0 || i == 1)
+          System.err.println(f"[bench] soak batch $i/${r.batches} apply=$dt%.1fs")
+        dt
       }
-    resetCaches()
-    osmAcc ++= osmResult
-    emitRecord(Seq.empty)
-    // scale-representative import bench (BASELINE.md ~350k elem/s target):
-    // ~100 MB of PBF — N translated Monaco copies — so fixed stage-scheduling
-    // overhead (the whole story at 270 KB) amortizes below ~20% of wall time.
-    // Stage split: parse = blob decode into the cached element frames;
-    // import = match + way/relation assembly + geometry build + noop sink.
-    // per-rep phase times, surfaced in the JSON line so the recorded
-    // bench shows min + spread (one-look adjudication of environment
-    // noise vs plan regressions)
-    val synthResult =
-      if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_OSM_SCALE").contains("0") ||
-        !new java.io.File(monaco).exists()) Seq.empty
-      else try {
-        val copies = sys.env.getOrElse("SPARK_GRAFT_PBF_COPIES", "400").toInt
-        val synthDir = sys.env.getOrElse("SPARK_GRAFT_PBF_DIR",
-          "/root/repo/target/bench-pbf")
-        val nElems = graft.sources.OsmPbfSynth.synthesize(
-          spark, monaco, synthDir, copies)
-        // ~105 MB at 400 copies → cores: the r9 plan, no wide-shuffle tax
-        Session.sizeToInput(spark, Seq(synthDir))
-        val mapping = new graft.mapping.CompiledMapping(
-          graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
-        // A5 import statistics: observe-based per-kind counters audit the
-        // elem/s claim from inside the query (stats/stats.go analog)
-        val stats = graft.operators.ImportStats.attach(spark)
-        // Phase times are min-of-N (default 3): a single run is hostage to
-        // transient cache-eviction / page-fault storms that swing one phase
-        // 4.8s↔190s on identical code; the min across reps measures what
-        // the code can do, which is what the 2×-of-baseline criterion asks.
-        // default 5 (r8 judge ask): the phases run first and are cheap, and
-        // the driver box's rep spread (r8: 25.9/78.2/42.4) needs more
-        // samples for the median to mean anything
-        val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-        // rep 0 is an UNTIMED settle import (r10, judge ask): three rounds
-        // running, whatever owns the driver box at bench start inflated the
-        // first 1-2 timed reps 2-3× (r9 median read 2.08× baseline vs the
-        // box's flat 1.10×); one settle rep absorbs that window the same
-        // way Monaco's prime absorbs cold-JVM codegen. Its result is
-        // dropped; its loadavg is recorded so the artifact shows the
-        // start-of-run contention.
-        val allRuns = (0 to reps).map { rep =>
-          // timed reps pass the loadavg admission gate; the settle rep IS
-          // the settle — it runs immediately and its load shows bench-start
-          // contention in the artifact
-          val (load, gateWait, gateTimedOut) =
-            if (rep == 0) (loadavg(), 0.0, false) else admitRep()
-          val meter = new RepMeter
-          try {
-          val t0 = System.nanoTime()
-          // the reference's reader applies the tag prefilter during parse
-          // (mapping/filter.go via reader/reader.go:124) — so do we
-          val bundle = graft.operators.ImportStats.instrument(
-            graft.sources.OsmPbf.read(spark, synthDir,
-              Some(graft.sources.TagFilters(mapping))))
-          val parsed = bundle.coords.count() + bundle.ways.count() +
-            bundle.relations.count()
-          val tParse = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val pipeline = new ImportPipeline(spark, mapping)
-          val tables = pipeline.run(bundle)
-          sinkAll(pipeline, tables, eagerStages = true)
-          val tImport = (System.nanoTime() - t1) / 1e9
-          // generalized tables are part of the reference's 7h30m planet
-          // figure (postgis.go:236-362 runs inside the import) — timed as
-          // their own entry so the stage split stays visible.
-          // Gen reads ONLY freshly-materialized copies of its source
-          // tables (filled untimed off the warm stage caches, which are
-          // then dropped), persisted at genSourceStorage: the phase time
-          // no longer depends on how much executor memory the import left
-          // behind, and the small post-match rows stay memory-resident
-          // (r12 verdict #2 — DISK_ONLY here was a 3× gen regression).
-          val genSources = mapping.conf.generalizedTables.values.map(_.source).toSet
-          val stable = tables.filter { case (n, _) => genSources(n) }
-          stable.values.foreach(_.persist(genSourceStorage))
-          stable.values.foreach(_.count())
-          pipeline.unpersistAll()
-          val t2 = System.nanoTime()
-          graft.operators.Generalize(spark, mapping, tables).values
-            .foreach(_.write.format("noop").mode("overwrite").save())
-          val tGen = (System.nanoTime() - t2) / 1e9
-          // meter stops BEFORE resetCaches: its System.gc() is phase
-          // hygiene, not rep cost, and must not pollute the gc record
-          val (foreignCpu, gcSec, ioSec) = meter.stop()
-          stable.values.foreach(_.unpersist())
-          resetCaches()
-          val contended = rep > 0 && isContended(gateTimedOut, foreignCpu)
-          val tag = if (rep == 0) "settle" else s"rep $rep/$reps"
-          System.err.println(
-            f"[bench] osm_scale $tag copies=$copies elems=$parsed/$nElems " +
-              f"load=$load%.2f foreign=$foreignCpu%.3f gc=$gcSec%.1fs " +
-              f"io_wait=$ioSec%.1fs" +
-              f"${if (contended) " CONTENDED" else ""} " +
-              f"parse=$tParse%.1fs (${parsed / tParse}%.0f elem/s) " +
-              f"import=$tImport%.1fs gen=$tGen%.1fs " +
-              f"total=${tParse + tImport + tGen}%.1fs " +
-              f"(${parsed / (tParse + tImport + tGen)}%.0f elem/s end-to-end)")
-          RepRun(parsed, tParse, tImport, tGen, load, gateWait, foreignCpu,
-            gcSec, ioSec, contended)
-          } finally meter.discard() // no sampler leak when a rep throws
-        }
-        val settleLoad = allRuns.head.load
-        val phaseRuns = allRuns.tail
-        val parsed = phaseRuns.head.parsed
-        val tParse = phaseRuns.map(_.parse).min
-        val tImport = phaseRuns.map(_.imp).min
-        val tGen = phaseRuns.map(_.gen).min
-        // median beside min (r8 judge ask): min says what the plan can do,
-        // median says what the box delivered — a wide min↔median gap marks
-        // the record as contention-dominated without a human re-run
-        def med(xs: Seq[Double]): Double = {
-          val s = xs.sorted
-          if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-        }
-        val mParse = med(phaseRuns.map(_.parse))
-        val mImport = med(phaseRuns.map(_.imp))
-        val mGen = med(phaseRuns.map(_.gen))
-        // the adjudicable record (r10 verdict #1): median over CLEAN reps
-        // only — a rep the gate admitted under threshold — reported beside
-        // the all-reps median whenever any rep started contended
-        val cleanRuns = phaseRuns.filterNot(_.contended)
-        System.err.println(
-          f"[bench] osm_scale min-of-$reps parse=$tParse%.1fs import=$tImport%.1fs " +
-            f"gen=$tGen%.1fs (${parsed / (tParse + tImport + tGen)}%.0f elem/s end-to-end); " +
-            f"median parse=$mParse%.1fs import=$mImport%.1fs gen=$mGen%.1fs " +
-            f"(${parsed / (mParse + mImport + mGen)}%.0f elem/s); " +
-            s"clean reps ${cleanRuns.size}/${phaseRuns.size}")
-        System.err.println(s"[bench] stats ${stats.report()}")
-        graft.operators.ImportStats.detach(spark, stats)
+    }
+    val times = run.values.head
+    val (first10, last10) = (med(times.take(10)), med(times.takeRight(10)))
+    def files(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(files).sum else 1L
+    Record(Seq("osm_diff_soak_total" -> times.sum, "osm_diff_soak_first10_med" -> first10,
+      "osm_diff_soak_last10_med" -> last10),
+      Seq("osm_soak" -> (s"""{"batches":${r.batches},"first10_med":${fmt(first10)},""" +
+        s""""last10_med":${fmt(last10)},"ratio":${fmt(last10 / first10)},""" +
+        s""""store_files":${files(new java.io.File(state))},${run.json}}""")))
+  }
 
-        // -- bucketed-element-store A/B (SURVEY §13 candidate): the same
-        // import with J1's ref→coord lookup joining a PRE-BUCKETED store
-        // (WayAssembly.resolveStored) instead of the in-pipeline AQE
-        // shuffle. The store write (both sides bucketed+sorted by id) is
-        // timed inside the import but also reported separately — it is the
-        // paid-once cost the layout amortizes over repeated reads (diff
-        // reruns), exactly the reference's ID-sorted cache trade
-        // (cache/delta.go:12-35).
-        val bucketed =
-          if (sys.env.get("SPARK_GRAFT_BENCH_BUCKETED").contains("0")) Seq.empty
-          else try {
-            // rep 1 writes the store inside its timed import (the paid-once
-            // cost, reported separately as osm_bucketize); reps ≥ 2 REUSE
-            // it — the repeated-read path diff reruns and `import
-            // -store-reuse` amortize against, reported as its own entry
-            val bReps = math.min(3, reps)
-            val runsB = (1 to bReps).map { rep =>
-              val bundle = graft.operators.ImportStats.instrument(
-                graft.sources.OsmPbf.read(spark, synthDir,
-                  Some(graft.sources.TagFilters(mapping))))
-              // parse untimed here (same phase as above; priming the
-              // element caches keeps the import number comparable)
-              bundle.coords.count(); bundle.ways.count(); bundle.relations.count()
-              var tBucketize = 0.0
-              val storedAssembler: (DataFrame, DataFrame) => DataFrame =
-                (ways, coords) => {
-                  if (rep == 1) {
-                    val tb = System.nanoTime()
-                    val exploded = ways.select(col("id").as("way_id"),
-                      size(col("refs")).as("nrefs"),
-                      posexplode(col("refs")).as(Seq("pos", "id")))
-                    graft.operators.Bucketing.writeBucketed(
-                      exploded, "graft_bench_wayrefs", "id", nBuckets = Session.cores)
-                    graft.operators.Bucketing.writeBucketed(
-                      coords, "graft_bench_coords", "id", nBuckets = Session.cores)
-                    tBucketize = (System.nanoTime() - tb) / 1e9
-                  }
-                  graft.operators.WayAssembly.resolveStored(
-                    spark.table("graft_bench_wayrefs"),
-                    spark.table("graft_bench_coords"))
-                }
-              val t1 = System.nanoTime()
-              val pipeline = new ImportPipeline(spark, mapping,
-                assembler = storedAssembler)
-              val tables = pipeline.run(bundle)
-              sinkAll(pipeline, tables, eagerStages = true)
-              val tImportB = (System.nanoTime() - t1) / 1e9
-              pipeline.unpersistAll()
-              resetCaches()
-              System.err.println(
-                f"[bench] osm_scale_bucketed rep $rep/$bReps " +
-                  f"import=$tImportB%.1fs (bucketize=$tBucketize%.1fs inside)")
-              (tImportB, tBucketize)
-            }
-            // _net = bucketed − bucketize: the assembly cost with the
-            // paid-once store write subtracted, directly comparable to the
-            // plain import across rounds without arithmetic (r9 verdict)
-            Seq(s"osm_import_synth${copies}_bucketed" -> runsB.head._1,
-              s"osm_bucketize_synth$copies" -> runsB.head._2,
-              s"osm_import_synth${copies}_bucketed_net" ->
-                (runsB.head._1 - runsB.head._2)) ++
-              (if (runsB.size > 1)
-                Seq(s"osm_import_synth${copies}_stored" -> runsB.tail.map(_._1).min)
-              else Seq.empty)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] osm_import_bucketed failed: ${e.getMessage}")
-            Seq.empty
-          }
+  private val QueryReps = 2
+  private val ServeReps = 3
 
-        def repArr(f: RepRun => Double) =
-          phaseRuns.map(r => fmt(f(r))).mkString("[", ",", "]")
-        val contArr = phaseRuns.map(_.contended).mkString("[", ",", "]")
-        // clean-rep medians beside the all-reps ones: when any rep started
-        // contended, the clean block is the defensible record and the flags
-        // say exactly which reps to discount (none clean → omitted, the
-        // whole record is marked foreign-load-dominated by the flags)
-        val cleanBlock =
-          if (cleanRuns.isEmpty || cleanRuns.size == phaseRuns.size) ""
-          else s""","median_clean":{"parse":${fmt(med(cleanRuns.map(_.parse)))},""" +
-            s""""import":${fmt(med(cleanRuns.map(_.imp)))},""" +
-            s""""gen":${fmt(med(cleanRuns.map(_.gen)))}}"""
-        osmReps = Some(
-          s"""{"parse":${repArr(_.parse)},"import":${repArr(_.imp)},"gen":${repArr(_.gen)},""" +
-            s""""load":${repArr(_.load)},"gate_wait":${repArr(_.gateWait)},""" +
-            s""""foreign_cpu":${repArr(_.foreignCpu)},"gc":${repArr(_.gcSec)},""" +
-            s""""io_wait":${repArr(_.ioSec)},""" +
-            s""""contended":$contArr,"settle_load":${fmt(settleLoad)},""" +
-            s""""median":{"parse":${fmt(mParse)},"import":${fmt(mImport)},"gen":${fmt(mGen)}}""" +
-            cleanBlock + "}")
-        Seq(s"osm_parse_synth$copies" -> tParse,
-          s"osm_import_synth$copies" -> tImport,
-          s"osm_generalize_synth$copies" -> tGen) ++ bucketed
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] osm_import_synth failed: ${e.getMessage}")
-        Seq.empty
-      }
-    resetCaches()
-    osmAcc ++= synthResult
-    emitRecord(Seq.empty)
-
-    // ---- diff-apply throughput (ST1–ST6) ------------------------------------
-    // The reference's headline mode is a diff-ready import plus minutely
-    // updates (update/process.go:23-317); until r9 the diff path was
-    // correctness-gated but had no throughput trend line. Init a diff-ready
-    // state store from a smaller synth extract (the paid-once import, timed
-    // separately), synthesize a ~1% node-move batch against it, and time
-    // DiffPipeline.applyDiff: dependency closure, bucket-pruned rebuild,
-    // delete-then-insert output rewrite. Reps re-apply the same batch onto
-    // the same committed version (commit=false; the store writes are
-    // mode-overwrite), so each rep measures an identical plan.
-    val diffResult =
-      if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_DIFF").contains("0") ||
-        !new java.io.File(monaco).exists()) Seq.empty
-      else try {
-        val dCopies = sys.env.getOrElse("SPARK_GRAFT_DIFF_COPIES", "100").toInt
-        val dDir = sys.env.getOrElse("SPARK_GRAFT_DIFF_PBF_DIR",
-          s"$workDir/bench-pbf-diff")
-        graft.sources.OsmPbfSynth.synthesize(spark, monaco, dDir, dCopies)
-        Session.sizeToInput(spark, Seq(dDir))
-        val mapping = new graft.mapping.CompiledMapping(
-          graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
-        val stateDir = s"$workDir/bench-diff-state"
-        val sp = new org.apache.hadoop.fs.Path(stateDir)
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-        val bundle = graft.sources.OsmPbf.read(spark, dDir,
-          Some(graft.sources.TagFilters(mapping)))
-        val tInit0 = System.nanoTime()
-        // 256 buckets: sized to the ~2M-element bench store (~7k rows per
-        // bucket ≈ file-sized); planet stores pick thousands
-        graft.streaming.DiffPipeline.init(spark, mapping, stateDir, bundle,
-          nBuckets = sys.env.getOrElse("SPARK_GRAFT_DIFF_BUCKETS", "256").toInt)
-        val tInit = (System.nanoTime() - tInit0) / 1e9
-        resetCaches()
-        // the change batch: every ~97th node moved 1e-6° (~1% of nodes).
-        // The per-batch fixed cost (Spark job scheduling across the
-        // closure + ~35 store writes) is tens of seconds regardless of
-        // batch size, so the honest Spark-first number is AMORTIZED
-        // throughput on a batched apply — the reference's own batch mode
-        // (`-commit-latest`, update/cmd.go:96-134) amortizes the same way.
-        // elem/s here = changed elements / wall; the reference's planet
-        // keep-up requirement is ~50 elem/s sustained (minutely diffs).
-        val st = graft.streaming.DiffPipeline.storedBundleAt(spark, stateDir, 0)
-        val diffBatch = st.coords.filter(col("id") % 97 === 0)
-          .select(lit(graft.model.Kind.Node).cast("tinyint").as("kind"),
-            col("id"), (col("lon") + lit(1e-6)).as("lon"), col("lat"),
-            typedLit(Map.empty[String, String]).as("tags"),
-            typedLit(Seq.empty[Long]).as("refs"),
-            expr("cast(array() as array<struct<id:bigint,mtype:tinyint,role:string>>)")
-              .as("members"),
-            lit(graft.model.Op.Modify).cast("tinyint").as("op"))
-          .localCheckpoint() // the batch itself is not part of the timed apply
-        val nChanged = diffBatch.count()
-        val dReps = math.min(3,
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt)
-        val dTimes = (1 to dReps).map { rep =>
-          val t0 = System.nanoTime()
-          graft.streaming.DiffPipeline.applyDiff(spark, mapping, stateDir,
-            diffBatch, from = Some(0), commit = false)
-          val dt = (System.nanoTime() - t0) / 1e9
-          resetCaches()
-          System.err.println(
-            f"[bench] osm_diff_apply rep $rep/$dReps changed=$nChanged " +
-              f"apply=$dt%.1fs (${nChanged / dt}%.0f elem/s)")
-          dt
-        }
-        // mixed batch: a realistic minutely diff is not node moves alone —
-        // way re-tags pull their coord buckets through the rebuild, and
-        // relation touches drive member-way fetch + ring assembly, so the
-        // closure cost has a different shape. Same refs/members are kept
-        // (a foreign tag can't flip table membership), so reps re-apply an
-        // identical plan onto the same committed version, like above.
-        val emptyMembers =
-          expr("cast(array() as array<struct<id:bigint,mtype:tinyint,role:string>>)")
-        val wayBatch = st.ways.filter(col("id") % 89 === 0)
-          .select(lit(graft.model.Kind.Way).cast("tinyint").as("kind"),
-            col("id"), lit(null).cast("double").as("lon"),
-            lit(null).cast("double").as("lat"),
-            map_concat(col("tags"), map(lit("graft:touched"), lit("1")))
-              .as("tags"),
-            col("refs"), emptyMembers.as("members"),
-            lit(graft.model.Op.Modify).cast("tinyint").as("op"))
-        val relBatch = st.relations.filter(col("id") % 13 === 0)
-          .select(lit(graft.model.Kind.Relation).cast("tinyint").as("kind"),
-            col("id"), lit(null).cast("double").as("lon"),
-            lit(null).cast("double").as("lat"),
-            map_concat(col("tags"), map(lit("graft:touched"), lit("1")))
-              .as("tags"),
-            typedLit(Seq.empty[Long]).as("refs"),
-            expr("transform(members, m -> struct(m.id as id, m.type as mtype, m.role as role))")
-              .as("members"),
-            lit(graft.model.Op.Modify).cast("tinyint").as("op"))
-        val mixedBatch = diffBatch.unionByName(wayBatch).unionByName(relBatch)
-          .localCheckpoint()
-        val nMixed = mixedBatch.count()
-        val mTimes = (1 to dReps).map { rep =>
-          val t0 = System.nanoTime()
-          graft.streaming.DiffPipeline.applyDiff(spark, mapping, stateDir,
-            mixedBatch, from = Some(0), commit = false)
-          val dt = (System.nanoTime() - t0) / 1e9
-          resetCaches()
-          System.err.println(
-            f"[bench] osm_diff_apply_mixed rep $rep/$dReps changed=$nMixed " +
-              f"apply=$dt%.1fs (${nMixed / dt}%.0f elem/s)")
-          dt
-        }
-        Seq("osm_diff_init" -> tInit, "osm_diff_apply" -> dTimes.min,
-          "osm_diff_apply_mixed" -> mTimes.min)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] osm_diff_apply failed: ${e.getMessage}")
-        Seq.empty
-      }
-    resetCaches()
-    osmAcc ++= diffResult
-    emitRecord(Seq.empty)
-
-    // ---- long-stream diff soak (r9 verdict, next-round #5) ------------------
-    // The 3-rep apply bench above measures throughput on ONE version; a
-    // planet deployment replays thousands of minutely batches, and the
-    // failure mode that matters is drift: per-batch wall time creeping up as
-    // versions, segments, and files accumulate. Drive N COMMITTED batches
-    // through the production maintenance path (applyDiff + the same
-    // compaction/vacuum runStream runs), record the first-10 vs last-10
-    // medians, and count store files at the end — flat medians + bounded
-    // files is the evidence the merge-on-read store survives an unbounded
-    // importLoop (reference: update/cmd.go:231-257).
-    val soakResult =
-      if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_DIFF").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_SOAK").contains("0") ||
-        !new java.io.File(monaco).exists()) Seq.empty
-      else try {
-        val sCopies = sys.env.getOrElse("SPARK_GRAFT_SOAK_COPIES", "20").toInt
-        val sBatches = sys.env.getOrElse("SPARK_GRAFT_SOAK_BATCHES", "50").toInt
-        val sDir = s"$workDir/bench-pbf-soak"
-        graft.sources.OsmPbfSynth.synthesize(spark, monaco, sDir, sCopies)
-        Session.sizeToInput(spark, Seq(sDir))
-        val mapping = new graft.mapping.CompiledMapping(
-          graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
-        val stateDir = s"$workDir/bench-soak-state"
-        val sp = new org.apache.hadoop.fs.Path(stateDir)
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-        graft.streaming.DiffPipeline.init(spark, mapping, stateDir,
-          graft.sources.OsmPbf.read(spark, sDir,
-            Some(graft.sources.TagFilters(mapping))),
-          nBuckets = 64)
-        resetCaches()
-        // each batch moves a DIFFERENT small node set (~minutely-diff sized
-        // relative to the extract), so every version is a real state change
-        val base = graft.streaming.DiffPipeline
-          .storedBundleAt(spark, stateDir, 0).coords
-          .select("id", "lon", "lat").localCheckpoint()
-        val times = (1 to sBatches).map { i =>
-          val batch = base.filter((col("id") + lit(i)) % 997 === 0)
-            .select(lit(graft.model.Kind.Node).cast("tinyint").as("kind"),
-              col("id"), (col("lon") + lit(i * 1e-6)).as("lon"), col("lat"),
-              typedLit(Map.empty[String, String]).as("tags"),
-              typedLit(Seq.empty[Long]).as("refs"),
-              expr("cast(array() as array<struct<id:bigint,mtype:tinyint,role:string>>)")
-                .as("members"),
-              lit(graft.model.Op.Modify).cast("tinyint").as("op"))
-            .localCheckpoint()
-          val t0 = System.nanoTime()
-          graft.streaming.DiffPipeline.applyDiff(spark, mapping, stateDir, batch)
-          graft.streaming.DiffPipeline.maintain(spark, mapping, stateDir)
-          val dt = (System.nanoTime() - t0) / 1e9
-          if (i % 10 == 0 || i == 1) System.err.println(
-            f"[bench] osm_diff_soak batch $i/$sBatches apply=$dt%.1fs " +
-              f"load=${loadavg()}%.2f")
-          dt
-        }
-        def med(xs: Seq[Double]): Double = {
-          val s = xs.sorted
-          if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-        }
-        val first10 = med(times.take(10))
-        val last10 = med(times.takeRight(10))
-        // store file census after the final vacuum: O(buckets) is the claim
-        val nFiles = {
-          def walk(f: java.io.File): Long =
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-            else 1L
-          walk(new java.io.File(stateDir))
-        }
-        System.err.println(
-          f"[bench] osm_diff_soak $sBatches batches total=${times.sum}%.1fs " +
-            f"first10_med=$first10%.2fs last10_med=$last10%.2fs " +
-            f"(ratio=${last10 / first10}%.2f) files=$nFiles")
-        soakMetrics = Some(
-          s"""{"batches":$sBatches,"first10_med":${fmt(first10)},""" +
-            s""""last10_med":${fmt(last10)},"ratio":${fmt(last10 / first10)},""" +
-            s""""store_files":$nFiles}""")
-        Seq("osm_diff_soak_total" -> times.sum,
-          "osm_diff_soak_first10_med" -> first10,
-          "osm_diff_soak_last10_med" -> last10)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] osm_diff_soak failed: ${e.getMessage}")
-        Seq.empty
-      }
-    resetCaches()
-    osmAcc ++= soakResult
-    emitRecord(Seq.empty)
-
-    // ---- 10×-scale single-rep import (r9 verdict, next-round #1) ------------
-    // Every scale claim so far extrapolated from the ~105 MB synth400 dir;
-    // this rep runs the SAME plans at ~1 GB / ~79M elements — an order of
-    // magnitude up — with per-task shuffle/spill totals recorded, so the J1
-    // shuffle, the 15-table sink fan-out, and the 16g-heap cache policy
-    // either hold or the wall shows up here instead of on a cluster.
-    // gridCols=64: the default 20-wide grid at 4000 copies would march the
-    // lat offset past the pole (200 rows × 0.6°); a square grid keeps every
-    // synthetic cell in 24–62°N — valid Mercator input.
-    val xlResult =
-      if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_OSM_SCALE").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_OSM_XL").contains("0") ||
-        !new java.io.File(monaco).exists()) Seq.empty
-      else try {
-        val xlCopies = sys.env.getOrElse("SPARK_GRAFT_PBF_COPIES_XL", "4000").toInt
-        val xlDir = sys.env.getOrElse("SPARK_GRAFT_PBF_DIR_XL",
-          s"$workDir/bench-pbf-xl")
-        val nElems = graft.sources.OsmPbfSynth.synthesize(
-          spark, monaco, xlDir, xlCopies,
-          gridCols = math.ceil(math.sqrt(xlCopies.toDouble)).toInt)
-        // ~1.05 GB at 4000 copies → 8×cores: bounds the J1 assembly's
-        // per-partition bytes (the 284.6 s / 13.5 GB-spill wall at 1×cores)
-        Session.sizeToInput(spark, Seq(xlDir))
-        val mapping = new graft.mapping.CompiledMapping(
-          graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
-        resetCaches()
-        // min-of-N like the synth section (default 2): the single r10-style
-        // rep inherited whatever the ~15-minute diff+soak window left in
-        // the page cache — measured 331.6 s in-sequence vs 126.8 s isolated
-        // on identical code and a quiet box — and the ONE number the 100 TB
-        // claim hangs on must not be hostage to section aftermath. Each rep
-        // passes the admission gate and carries its own foreign-CPU/GC/spill
-        // record; the reported phases are minimums, spill metrics come from
-        // the rep with the best import.
-        val gb = 1024.0 * 1024 * 1024
-        // clamped ≥1: zero reps would throw at minBy and silently drop the
-        // whole section (including the bucketed sub-results) to the catch
-        val xlReps =
-          math.max(1, sys.env.getOrElse("SPARK_GRAFT_XL_REPS", "2").toInt)
-        final case class XlRun(parsed: Long, parse: Double, imp: Double,
-          gen: Double, load: Double, gateWait: Double, foreignCpu: Double,
-          gcSec: Double, ioSec: Double, contended: Boolean, shuffleGb: Double,
-          memSpillGb: Double, diskSpillGb: Double, peakGb: Double)
-        // per-rep salvage (r11 advice): a throw in rep N>1 must not drop
-        // the completed reps' timings/spill/contention records to the
-        // section catch — accumulate what finished, flag what failed
-        var xlFailed = 0
-        val xlRuns = (1 to xlReps).flatMap { rep => try {
-          val acc = new TaskMetricsAccum
-          spark.sparkContext.addSparkListener(acc)
-          val (load, gateWait, gateTimedOut) = admitRep()
-          val meter = new RepMeter
-          // also on throw: the listener detaches and the sampler dies
-          val (parsed, tParse, tImport, tGen) = try {
-            val t0 = System.nanoTime()
-            // DISK_ONLY caches from XL scale up — the planet-scale config
-            // the docs prescribe, and the reference's own semantics (its
-            // node cache is on-disk LevelDB, cache/node.go). Same-box A/B
-            // at this exact scale (79M, 16g heap, DISK_ONLY running
-            // SECOND with the aftermath disadvantage): import 67.1 s vs
-            // 89.8 s MEMORY_AND_DISK, disk spill 0.62 vs 1.57 GB — the
-            // eviction churn of a heap-sized cache costs more than
-            // page-cached zstd disk reads.
-            val diskOnlyXl = org.apache.spark.storage.StorageLevel.DISK_ONLY
-            val bundle = graft.sources.OsmPbf.read(spark, xlDir,
-              Some(graft.sources.TagFilters(mapping)), storage = diskOnlyXl)
-            val parsed = bundle.coords.count() + bundle.ways.count() +
-              bundle.relations.count()
-            val tParse = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val pipeline = new ImportPipeline(spark, mapping,
-              storage = diskOnlyXl)
-            val tables = pipeline.run(bundle)
-            sinkAll(pipeline, tables, eagerStages = true)
-            val tImport = (System.nanoTime() - t1) / 1e9
-            val genSources = mapping.conf.generalizedTables.values.map(_.source).toSet
-            val stable = tables.filter { case (n, _) => genSources(n) }
-            stable.values.foreach(_.persist(genSourceStorage))
-            stable.values.foreach(_.count())
-            pipeline.unpersistAll()
-            val t2 = System.nanoTime()
-            graft.operators.Generalize(spark, mapping, tables).values
-              .foreach(_.write.format("noop").mode("overwrite").save())
-            val tGen = (System.nanoTime() - t2) / 1e9
-            stable.values.foreach(_.unpersist())
-            (parsed, tParse, tImport, tGen)
-          } finally {
-            spark.sparkContext.removeSparkListener(acc)
-            meter.discard()
-          }
-          val (foreignCpu, gcSec, ioSec) = meter.stop()
-          resetCaches()
-          val contended = isContended(gateTimedOut, foreignCpu)
-          System.err.println(
-            f"[bench] osm_scale_xl rep $rep/$xlReps copies=$xlCopies " +
-              f"elems=$parsed/$nElems " +
-              f"load=$load%.2f foreign=$foreignCpu%.3f gc=$gcSec%.1fs " +
-              f"io_wait=$ioSec%.1fs" +
-              f"${if (contended) " CONTENDED" else ""} " +
-              f"parse=$tParse%.1fs import=$tImport%.1fs gen=$tGen%.1fs " +
-              f"(${parsed / (tParse + tImport + tGen)}%.0f elem/s end-to-end) " +
-              f"shuffleWrite=${acc.shuffleWrite.get / gb}%.2fGB " +
-              f"memSpill=${acc.memSpill.get / gb}%.2fGB " +
-              f"diskSpill=${acc.diskSpill.get / gb}%.2fGB " +
-              f"peakTaskMem=${acc.peakMem.get / gb}%.3fGB")
-          Some(XlRun(parsed, tParse, tImport, tGen, load, gateWait, foreignCpu,
-            gcSec, ioSec, contended, acc.shuffleWrite.get / gb,
-            acc.memSpill.get / gb, acc.diskSpill.get / gb,
-            acc.peakMem.get / gb))
-        } catch { case e: Throwable =>
-          xlFailed += 1
-          System.err.println(
-            s"[bench] osm_scale_xl rep $rep/$xlReps failed: ${e.getMessage}")
-          resetCaches()
-          None
-        }}
-        // all reps failed → nothing to report; fall to the section catch
-        if (xlRuns.isEmpty)
-          throw new RuntimeException(s"all $xlReps XL reps failed")
-        val best = xlRuns.minBy(_.imp)
-        val parsed = best.parsed
-        val tParse = xlRuns.map(_.parse).min
-        val tImport = best.imp
-        val tGen = xlRuns.map(_.gen).min
-        // stored-assembly variant at the same scale: write the bucketed
-        // element store (timed separately — the paid-once layout cost),
-        // then one import off it (the diff-rerun read path at 10×)
-        val xlStored =
-          if (sys.env.get("SPARK_GRAFT_BENCH_BUCKETED").contains("0")) Seq.empty
-          else try {
-            val bundle2 = graft.operators.ImportStats.instrument(
-              graft.sources.OsmPbf.read(spark, xlDir,
-                Some(graft.sources.TagFilters(mapping)),
-                storage = org.apache.spark.storage.StorageLevel.DISK_ONLY))
-            bundle2.coords.count(); bundle2.ways.count(); bundle2.relations.count()
-            var tBucketize = 0.0
-            val storedAssembler: (DataFrame, DataFrame) => DataFrame =
-              (ways, coords) => {
-                val tb = System.nanoTime()
-                val exploded = ways.select(col("id").as("way_id"),
-                  size(col("refs")).as("nrefs"),
-                  posexplode(col("refs")).as(Seq("pos", "id")))
-                graft.operators.Bucketing.writeBucketed(
-                  exploded, "graft_bench_xl_wayrefs", "id", nBuckets = Session.cores)
-                graft.operators.Bucketing.writeBucketed(
-                  coords, "graft_bench_xl_coords", "id", nBuckets = Session.cores)
-                tBucketize = (System.nanoTime() - tb) / 1e9
-                graft.operators.WayAssembly.resolveStored(
-                  spark.table("graft_bench_xl_wayrefs"),
-                  spark.table("graft_bench_xl_coords"))
-              }
-            val tb0 = System.nanoTime()
-            val pipelineB = new ImportPipeline(spark, mapping,
-              assembler = storedAssembler)
-            sinkAll(pipelineB, pipelineB.run(bundle2), eagerStages = true)
-            val tImportB = (System.nanoTime() - tb0) / 1e9
-            pipelineB.unpersistAll()
-            resetCaches()
-            System.err.println(
-              f"[bench] osm_scale_xl_bucketed import=$tImportB%.1fs " +
-                f"(bucketize=$tBucketize%.1fs inside, " +
-                f"net=${tImportB - tBucketize}%.1fs)")
-            Seq(s"osm_import_xl${xlCopies}_bucketed" -> tImportB,
-              s"osm_bucketize_xl$xlCopies" -> tBucketize,
-              s"osm_import_xl${xlCopies}_bucketed_net" ->
-                (tImportB - tBucketize))
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] osm_scale_xl_bucketed failed: ${e.getMessage}")
-            Seq.empty
-          }
-        def xlArr(f: XlRun => Double) =
-          xlRuns.map(r => fmt(f(r))).mkString("[", ",", "]")
-        xlMetrics = Some(
-          s"""{"copies":$xlCopies,"elems":$parsed,""" +
-            s""""parse":${xlArr(_.parse)},"import":${xlArr(_.imp)},""" +
-            s""""gen":${xlArr(_.gen)},"load":${xlArr(_.load)},""" +
-            s""""gate_wait":${xlArr(_.gateWait)},""" +
-            s""""foreign_cpu":${xlArr(_.foreignCpu)},"gc":${xlArr(_.gcSec)},""" +
-            s""""io_wait":${xlArr(_.ioSec)},""" +
-            s""""contended":${xlRuns.map(_.contended).mkString("[", ",", "]")},""" +
-            s""""failed_reps":$xlFailed,""" +
-            s""""shuffle_write_gb":${fmt(best.shuffleGb)},""" +
-            s""""mem_spill_gb":${fmt(best.memSpillGb)},""" +
-            s""""disk_spill_gb":${fmt(best.diskSpillGb)},""" +
-            s""""peak_task_mem_gb":${fmt(best.peakGb)}}""")
-        // keys namespaced osm_*_xl$N (r10 advice): if the XL and synth
-        // sections ever run the same copy count, the two records must not
-        // collide in the JSON (r10 spelled these osm_*_synth4000)
-        Seq(s"osm_parse_xl$xlCopies" -> tParse,
-          s"osm_import_xl$xlCopies" -> tImport,
-          s"osm_generalize_xl$xlCopies" -> tGen) ++ xlStored
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] osm_import_synth_xl failed: ${e.getMessage}")
-        Seq.empty
-      }
-    resetCaches()
-    osmAcc ++= xlResult
-    emitRecord(Seq.empty)
-
-    // ---- 10×-store diff apply (r10 verdict #5: a standing bench key) --------
-    // The r10 survey-only probe was the diff path's best scale evidence —
-    // per-element apply throughput IMPROVES 3.3× against a 10× store
-    // (fixed per-batch cost amortizes; bucket pruning keeps store size out
-    // of the rebuild) — so it rides in the artifact every round now:
-    // copies=1000 (~20M elements), 512 buckets, the same ~1%-of-nodes and
-    // mixed batch shapes as the small diff section. Runs AFTER the XL
-    // import on purpose: the XL section's heap/page-cache aftermath lands
-    // here (a new key, consistently positioned) instead of on the
-    // established osm_diff_* trend line (the r10 section-order lesson:
-    // diff apply inherited XL's aftermath at +65%).
-    val diffXlResult =
-      if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_DIFF").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_DIFF_XL").contains("0") ||
-        !new java.io.File(monaco).exists()) Seq.empty
-      else try {
-        val xCopies = sys.env.getOrElse("SPARK_GRAFT_DIFF_COPIES_XL", "1000").toInt
-        val xDir = s"$workDir/bench-pbf-diff-xl"
-        // square grid: >400 copies on the default 20-wide grid would march
-        // the lat offset past the pole
-        graft.sources.OsmPbfSynth.synthesize(spark, monaco, xDir, xCopies,
-          gridCols = math.ceil(math.sqrt(xCopies.toDouble)).toInt)
-        Session.sizeToInput(spark, Seq(xDir))
-        val mapping = new graft.mapping.CompiledMapping(
-          graft.mapping.MappingConf.fromFile("/root/reference/test/complete_db_mapping.json"))
-        val stateDir = s"$workDir/bench-diff-xl-state"
-        val sp = new org.apache.hadoop.fs.Path(stateDir)
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-        val bundle = graft.sources.OsmPbf.read(spark, xDir,
-          Some(graft.sources.TagFilters(mapping)))
-        // init is min-of-N like the apply reps (r11 verdict #2): the
-        // single-shot init inherited the XL section's page-cache/writeback
-        // aftermath — committed 187.7 s vs 137.1 s isolated on identical
-        // code with foreign_cpu≈0 — and unlike the applies had no second
-        // chance. Each rep starts from a deleted store with dirty pages
-        // flushed first (sync), so the big sequential store write is not
-        // queued behind the previous section's writeback.
-        val initReps = math.max(1,
-          sys.env.getOrElse("SPARK_GRAFT_DIFF_INIT_XL_REPS", "2").toInt)
-        val fsX = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val initRuns = (1 to initReps).map { rep =>
-          fsX.delete(sp, true)
-          val (loadI, waitI, gateI) = admitRep() // sync settle inside
-
-          val meterI = new RepMeter
-          val tInit0 = System.nanoTime()
-          try graft.streaming.DiffPipeline.init(spark, mapping, stateDir,
-            bundle, nBuckets =
-              sys.env.getOrElse("SPARK_GRAFT_DIFF_BUCKETS_XL", "512").toInt)
-          finally meterI.discard()
-          val tI = (System.nanoTime() - tInit0) / 1e9
-          val (foreignI, gcI, ioI) = meterI.stop()
-          resetCaches()
-          val contI = isContended(gateI, foreignI)
-          System.err.println(
-            f"[bench] osm_diff_init_xl rep $rep/$initReps copies=$xCopies " +
-              f"load=$loadI%.2f foreign=$foreignI%.3f gc=$gcI%.1fs " +
-              f"io_wait=$ioI%.1fs" +
-              f"${if (contI) " CONTENDED" else ""} init=$tI%.1fs")
-          (tI, loadI, waitI, contI, foreignI, gcI, ioI)
-        }
-        val tInit = initRuns.map(_._1).min
-        val st = graft.streaming.DiffPipeline.storedBundleAt(spark, stateDir, 0)
-        val diffBatch = st.coords.filter(col("id") % 97 === 0)
-          .select(lit(graft.model.Kind.Node).cast("tinyint").as("kind"),
-            col("id"), (col("lon") + lit(1e-6)).as("lon"), col("lat"),
-            typedLit(Map.empty[String, String]).as("tags"),
-            typedLit(Seq.empty[Long]).as("refs"),
-            expr("cast(array() as array<struct<id:bigint,mtype:tinyint,role:string>>)")
-              .as("members"),
-            lit(graft.model.Op.Modify).cast("tinyint").as("op"))
-          .localCheckpoint()
-        val nChanged = diffBatch.count()
-        val xReps =
-          math.max(1, sys.env.getOrElse("SPARK_GRAFT_DIFF_XL_REPS", "2").toInt)
-        val gated = (1 to xReps).map { rep =>
-          val (load, wait, gateOut) = admitRep()
-          val meter = new RepMeter
-          val t0 = System.nanoTime()
-          try graft.streaming.DiffPipeline.applyDiff(spark, mapping, stateDir,
-            diffBatch, from = Some(0), commit = false)
-          finally meter.discard()
-          val dt = (System.nanoTime() - t0) / 1e9
-          val (foreign, gc, io) = meter.stop()
-          resetCaches()
-          val cont = isContended(gateOut, foreign)
-          System.err.println(
-            f"[bench] osm_diff_apply_xl rep $rep/$xReps changed=$nChanged " +
-              f"load=$load%.2f foreign=$foreign%.3f gc=$gc%.1fs " +
-              f"io_wait=$io%.1fs" +
-              f"${if (cont) " CONTENDED" else ""} " +
-              f"apply=$dt%.1fs (${nChanged / dt}%.0f elem/s)")
-          (dt, load, wait, cont, foreign, gc, io)
-        }
-        // one mixed rep (way re-tags + relation touches drive the closure
-        // through member fetch + ring assembly — the costlier shape)
-        val emptyM =
-          expr("cast(array() as array<struct<id:bigint,mtype:tinyint,role:string>>)")
-        val mixedBatch = diffBatch
-          .unionByName(st.ways.filter(col("id") % 89 === 0)
-            .select(lit(graft.model.Kind.Way).cast("tinyint").as("kind"),
-              col("id"), lit(null).cast("double").as("lon"),
-              lit(null).cast("double").as("lat"),
-              map_concat(col("tags"), map(lit("graft:touched"), lit("1")))
-                .as("tags"),
-              col("refs"), emptyM.as("members"),
-              lit(graft.model.Op.Modify).cast("tinyint").as("op")))
-          .unionByName(st.relations.filter(col("id") % 13 === 0)
-            .select(lit(graft.model.Kind.Relation).cast("tinyint").as("kind"),
-              col("id"), lit(null).cast("double").as("lon"),
-              lit(null).cast("double").as("lat"),
-              map_concat(col("tags"), map(lit("graft:touched"), lit("1")))
-                .as("tags"),
-              typedLit(Seq.empty[Long]).as("refs"),
-              expr("transform(members, m -> struct(m.id as id, m.type as mtype, m.role as role))")
-                .as("members"),
-              lit(graft.model.Op.Modify).cast("tinyint").as("op")))
-          .localCheckpoint()
-        val nMixed = mixedBatch.count()
-        val (loadM, waitM, gateM) = admitRep()
-        val meterM = new RepMeter
-        val tM0 = System.nanoTime()
-        try graft.streaming.DiffPipeline.applyDiff(spark, mapping, stateDir,
-          mixedBatch, from = Some(0), commit = false)
-        finally meterM.discard()
-        val tMixed = (System.nanoTime() - tM0) / 1e9
-        val (foreignM, gcM, ioM) = meterM.stop()
-        resetCaches()
-        val contM = isContended(gateM, foreignM)
-        System.err.println(
-          f"[bench] osm_diff_apply_mixed_xl changed=$nMixed " +
-            f"load=$loadM%.2f foreign=$foreignM%.3f gc=$gcM%.1fs " +
-            f"io_wait=$ioM%.1fs" +
-            f"${if (contM) " CONTENDED" else ""} " +
-            f"apply=$tMixed%.1fs (${nMixed / tMixed}%.0f elem/s)")
-        // array order: init reps, then apply reps, then the mixed rep
-        diffXlMetrics = Some(
-          s"""{"copies":$xCopies,"changed":$nChanged,"changed_mixed":$nMixed,""" +
-            s""""init_reps":[${initRuns.map(r => fmt(r._1)).mkString(",")}],""" +
-            s""""load":[${(initRuns.map(_._2) ++ gated.map(_._2) :+ loadM).map(fmt).mkString(",")}],""" +
-            s""""gate_wait":[${(initRuns.map(_._3) ++ gated.map(_._3) :+ waitM).map(fmt).mkString(",")}],""" +
-            s""""foreign_cpu":[${(initRuns.map(_._5) ++ gated.map(_._5) :+ foreignM).map(fmt).mkString(",")}],""" +
-            s""""gc":[${(initRuns.map(_._6) ++ gated.map(_._6) :+ gcM).map(fmt).mkString(",")}],""" +
-            s""""io_wait":[${(initRuns.map(_._7) ++ gated.map(_._7) :+ ioM).map(fmt).mkString(",")}],""" +
-            s""""contended":[${(initRuns.map(_._4) ++ gated.map(_._4) :+ contM).mkString(",")}]}""")
-        Seq("osm_diff_init_xl" -> tInit,
-          "osm_diff_apply_xl" -> gated.map(_._1).min,
-          "osm_diff_apply_mixed_xl" -> tMixed)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] osm_diff_xl failed: ${e.getMessage}")
-        Seq.empty
-      }
-    resetCaches()
-    osmAcc ++= diffXlResult
-    emitRecord(Seq.empty)
-
-    // ---- 24×-scale import (r11 verdict #4: extend the curve in-disk) --------
-    // r10 landed 158M elements (20.9 GB shuffle + 10.6 GB spill); the r11
-    // probes at 190M/237M died on ~64 GB free scratch. Two levers reclaim
-    // the headroom: the session's zstd io codec + rdd.compress (shuffle,
-    // sort-spill, and cache-spill bytes ~2× smaller than lz4/uncompressed),
-    // and running this LAST of the OSM phases with every prior section's
-    // scratch deleted first (diff/soak stores, bucketed warehouse tables).
-    // A usable-space guard skips the section honestly when the box cannot
-    // hold it — a mid-import ENOSPC abort burns ~10 min and records
-    // nothing — and logs the free-space arithmetic either way.
-    val xxlResult =
-      if (sys.env.get("SPARK_GRAFT_BENCH_OSM").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_OSM_SCALE").contains("0") ||
-        sys.env.get("SPARK_GRAFT_BENCH_OSM_XXL").contains("0") ||
-        !new java.io.File(monaco).exists()) Seq.empty
-      else try {
-        val gb = 1024.0 * 1024 * 1024
-        val xxlCopies =
-          sys.env.getOrElse("SPARK_GRAFT_PBF_COPIES_XXL", "9600").toInt
-        // free the round's scratch before sizing the guard: the diff/soak
-        // stores and the XL bucketed tables hold 10+ GB this section needs
-        for (d <- Seq(s"$workDir/bench-pbf-diff", s"$workDir/bench-diff-state",
-            s"$workDir/bench-pbf-soak", s"$workDir/bench-soak-state",
-            s"$workDir/bench-pbf-diff-xl", s"$workDir/bench-diff-xl-state")) {
-          val p = new org.apache.hadoop.fs.Path(d)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-        for (t <- Seq("graft_bench_wayrefs", "graft_bench_coords",
-            "graft_bench_xl_wayrefs", "graft_bench_xl_coords"))
-          try spark.sql(s"DROP TABLE IF EXISTS $t")
-          catch { case _: Throwable => () }
-        val needGb =
-          sys.env.getOrElse("SPARK_GRAFT_XXL_MIN_FREE_GB", "42").toDouble
-        val freeGb = new java.io.File(workDir).getUsableSpace / gb
-        if (freeGb < needGb) {
-          System.err.println(
-            f"[bench] osm_xxl skipped: free=$freeGb%.1fGB < $needGb%.1fGB " +
-              "needed (set SPARK_GRAFT_XXL_MIN_FREE_GB to override)")
-          Seq.empty
-        } else {
-          val xxlDir = s"$workDir/bench-pbf-xxl"
-          val nElems = graft.sources.OsmPbfSynth.synthesize(
-            spark, monaco, xxlDir, xxlCopies,
-            gridCols = math.ceil(math.sqrt(xxlCopies.toDouble)).toInt)
-          Session.sizeToInput(spark, Seq(xxlDir))
-          val mapping = new graft.mapping.CompiledMapping(
-            graft.mapping.MappingConf.fromFile(
-              "/root/reference/test/complete_db_mapping.json"))
-          resetCaches()
-          val acc = new TaskMetricsAccum
-          spark.sparkContext.addSparkListener(acc)
-          val (load, gateWait, gateTimedOut) = admitRep()
-          val meter = new RepMeter
-          val (parsed, tParse, tImport, tGen) = try {
-            val t0 = System.nanoTime()
-            // DISK_ONLY caches at this scale — the documented planet-scale
-            // configuration (OsmPbf.read/ImportPipeline docs): at ~190M
-            // elements the decoded corpus overwhelms a ≤16g heap's unified
-            // memory and MEMORY_AND_DISK eviction churn under 32 allocating
-            // tasks OOMs (first probe: GCLocker retry storms in the parse
-            // cache fill). Cache blocks are zstd-compressed (rdd.compress),
-            // so the disk bytes stay inside the scratch guard's arithmetic.
-            val diskOnly = org.apache.spark.storage.StorageLevel.DISK_ONLY
-            val bundle = graft.sources.OsmPbf.read(spark, xxlDir,
-              Some(graft.sources.TagFilters(mapping)), storage = diskOnly)
-            val parsed = bundle.coords.count() + bundle.ways.count() +
-              bundle.relations.count()
-            val tParse = (System.nanoTime() - t0) / 1e9
-            val t1 = System.nanoTime()
-            val pipeline = new ImportPipeline(spark, mapping,
-              storage = diskOnly)
-            val tables = pipeline.run(bundle)
-            sinkAll(pipeline, tables, eagerStages = true)
-            val tImport = (System.nanoTime() - t1) / 1e9
-            val genSources =
-              mapping.conf.generalizedTables.values.map(_.source).toSet
-            val stable = tables.filter { case (n, _) => genSources(n) }
-            stable.values.foreach(_.persist(genSourceStorage))
-            stable.values.foreach(_.count())
-            pipeline.unpersistAll()
-            val t2 = System.nanoTime()
-            graft.operators.Generalize(spark, mapping, tables).values
-              .foreach(_.write.format("noop").mode("overwrite").save())
-            val tGen = (System.nanoTime() - t2) / 1e9
-            stable.values.foreach(_.unpersist())
-            (parsed, tParse, tImport, tGen)
-          } finally {
-            spark.sparkContext.removeSparkListener(acc)
-            meter.discard()
-          }
-          val (foreignCpu, gcSec, ioSec) = meter.stop()
-          resetCaches()
-          val contended = isContended(gateTimedOut, foreignCpu)
-          System.err.println(
-            f"[bench] osm_scale_xxl copies=$xxlCopies elems=$parsed/$nElems " +
-              f"free_before=$freeGb%.1fGB io_wait=$ioSec%.1fs " +
-              f"load=$load%.2f foreign=$foreignCpu%.3f gc=$gcSec%.1fs" +
-              f"${if (contended) " CONTENDED" else ""} " +
-              f"parse=$tParse%.1fs import=$tImport%.1fs gen=$tGen%.1fs " +
-              f"(${parsed / (tParse + tImport + tGen)}%.0f elem/s end-to-end) " +
-              f"shuffleWrite=${acc.shuffleWrite.get / gb}%.2fGB " +
-              f"memSpill=${acc.memSpill.get / gb}%.2fGB " +
-              f"diskSpill=${acc.diskSpill.get / gb}%.2fGB " +
-              f"peakTaskMem=${acc.peakMem.get / gb}%.3fGB")
-          xxlMetrics = Some(
-            s"""{"copies":$xxlCopies,"elems":$parsed,""" +
-              s""""parse":${fmt(tParse)},"import":${fmt(tImport)},""" +
-              s""""gen":${fmt(tGen)},"load":${fmt(load)},""" +
-              s""""gate_wait":${fmt(gateWait)},""" +
-              s""""foreign_cpu":${fmt(foreignCpu)},"gc":${fmt(gcSec)},""" +
-              s""""io_wait":${fmt(ioSec)},"contended":$contended,""" +
-              s""""free_gb_before":${fmt(freeGb)},""" +
-              s""""shuffle_write_gb":${fmt(acc.shuffleWrite.get / gb)},""" +
-              s""""mem_spill_gb":${fmt(acc.memSpill.get / gb)},""" +
-              s""""disk_spill_gb":${fmt(acc.diskSpill.get / gb)},""" +
-              s""""peak_task_mem_gb":${fmt(acc.peakMem.get / gb)}}""")
-          Seq(s"osm_parse_xxl$xxlCopies" -> tParse,
-            s"osm_import_xxl$xxlCopies" -> tImport,
-            s"osm_generalize_xxl$xxlCopies" -> tGen)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] osm_import_xxl failed: ${e.getMessage}")
-        Seq.empty
-      }
-    resetCaches()
-    osmAcc ++= xxlResult
-    emitRecord(Seq.empty)
-
-    // ======================= query list =====================================
-    Session.sizeToInput(spark, Seq(sfDir)) // ≤ sf0.1 (~17 MB) → cores
+  /** SparkEntry.benchQueries, min of QueryReps per query. Plan shapes warm
+    * untimed on the sibling `sf0.001` dir and the sf dir's parquet is
+    * primed, so the first query does not pay the cold read of a table. */
+  val Queries: Section = Section("queries", Nil, needsSeed = false) { ctx =>
+    import ctx.{sfDir, spark}
+    Session.sizeToInput(spark, Seq(sfDir))
     val names = {
-      if (sys.env.get("SPARK_GRAFT_BENCH_QUERIES").contains("0")) Seq.empty
-      else {
-        val b = SparkEntry.benchQueries.filter(SparkEntry.queries.contains)
-        if (b.nonEmpty) b else SparkEntry.queries.keys.toSeq.sorted
+      val b = SparkEntry.benchQueries.filter(SparkEntry.queries.contains)
+      if (b.nonEmpty) b else SparkEntry.queries.keys.toSeq.sorted
+    }
+    val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+    if (warmDir.isDirectory && warmDir.getPath != sfDir)
+      names.foreach { n =>
+        try noop(SparkEntry.queries(n)(spark, warmDir.getPath)) catch { case _: Throwable => () }
       }
+    for (f <- Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
+         if f.getName.endsWith(".parquet"))
+      try noop(spark.read.parquet(f.getPath)) catch { case _: Throwable => () }
+    val runs = names.map(n =>
+      n -> reps(ctx, n, QueryReps, gated = false, gc = false)(_ =>
+        timed(noop(SparkEntry.queries(n)(spark, sfDir)))))
+    Record(queries = runs.collect { case (n, r) if r.done.nonEmpty => n -> r.values.min },
+      failedQueries = runs.collect { case (n, r) if r.done.isEmpty => n },
+      details = Seq("queries_meter" -> runs.map { case (n, r) => s""""$n":{${r.json}}""" }
+        .mkString("{", ",", "}")))
+  }
+
+  /** The two served paths over indexes built untimed from the sf dir:
+    * phrase search and probe-pruned IVF top-k. */
+  val Serve: Section = Section("serve", Seq("retrieval_serve_phrase", "ann_serve_topk"),
+    needsSeed = false) { ctx =>
+    import ctx.{sfDir, spark}
+    val idx = s"${ctx.workDir}/bench-term-idx/idx"
+    graft.operators.TermIndex.build(spark, spark.read.parquet(s"$sfDir/documents.parquet"), idx)
+    val phrase = reps(ctx, "serve_phrase", ServeReps, gated = false, gc = false) { _ =>
+      timed(graft.operators.TermIndex.phraseSearch(spark, idx, Seq("table hash")).collect())
+    }
+    val ivf = s"${ctx.workDir}/bench-ivf-idx/idx"
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    graft.operators.IvfIndex.build(spark, emb, ivf)
+    val qv = emb.filter(col("vec_id") < 10).localCheckpoint()
+    val ann = reps(ctx, "serve_ann", ServeReps, gated = false, gc = false) { _ =>
+      timed(noop(graft.operators.IvfIndex.search(spark, ivf, qv)))
+    }
+    Record(Seq("retrieval_serve_phrase" -> phrase.values.min, "ann_serve_topk" -> ann.values.min),
+      Seq("serve" -> s"""{"phrase":{${phrase.json}},"ann":{${ann.json}}}"""))
+  }
+
+  /** XL runs after the small diff and soak, so its page-cache aftermath
+    * lands on the XL diff, not the osm_diff_* trend line; XXL runs last. */
+  val Table: Seq[Section] = Seq(Monaco, importSection(Synth400), diffSection(Diff),
+    soakSection(Soak), importSection(Xl4000), diffSection(DiffXl), importSection(Xxl9600),
+    Queries, Serve)
+
+  /** Run `sections` in order, printing the record after each. */
+  def run(ctx: Ctx, sections: Seq[Section]): Record =
+    sections.foldLeft(Record()) { (rec, s) =>
+      val out =
+        if (s.needsSeed && !new java.io.File(ctx.seedPbf).exists()) {
+          System.err.println(s"[bench] ${s.name} skipped: no seed PBF at ${ctx.seedPbf}")
+          Record()
+        } else try s.run(ctx) catch { case e: Throwable =>
+          System.err.println(s"[bench] ${s.name} failed: ${e.getMessage}")
+          Record()
+        } finally ctx.reset()
+      val next = rec ++ out
+      next.lines(ctx.sfDir).foreach(println)
+      next
     }
 
-    // Warm whole-stage codegen + JIT per plan shape on the smallest SF —
-    // identical schemas compile identical generated code, so the timed
-    // region below measures steady-state throughput, not first-compile.
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      names.foreach { name =>
-        try SparkEntry.queries(name)(spark, warmDir)
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-    // Prime the timed sf dir's parquet (footers + OS page cache), untimed:
-    // otherwise the first query in the list pays the whole cold read of the
-    // biggest table (measured 11s on q1 in a cold environment vs 1.1s warm)
-    // and the per-query numbers stop being comparable across rounds.
-    if (names.nonEmpty)
-      for (f <- Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
-           if f.getName.endsWith(".parquet"))
-        try spark.read.parquet(f.getPath).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-
-    // min-of-reps per query, like the OSM phases: identical code measured
-    // 5× apart across back-to-back full runs on individual queries (GC /
-    // page-cache timing), and the recorded number should be what the PLAN
-    // can do, not where the heap happened to be. Two reps ≈ +40% wall on
-    // the query section; the min kills the one-off spikes.
-    val qReps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS", "2").toInt
-    val results = names.map { name =>
-      val times = (1 to qReps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // per-query isolation: several queries persist intermediates
-        // (minhash prep, semantic-dedup pairs) that the lazy result frame
-        // cannot release; left resident they shrink the execution pool for
-        // every later query (measured 10.9s → 2.5s on the tail query of a
-        // 47-query run). Clearing AFTER the timed write charges each query
-        // its own cache use but never a predecessor's.
-        spark.catalog.clearCache()
-        if (ok) Some(dt) else None
-      }
-      name -> (if (times.isEmpty) 0.0 else times.min)
-    }
-
-    // retrieval serving latency: the `search -idx` CLI path end-to-end —
-    // index open (meta read) → partition-pruned postings scan → matcher →
-    // collect — over an index built UNTIMED from the sf dir's documents.
-    // The correctness gates pin the pruning (TermIndexSpec numFiles); this
-    // entry gives the served path a wall-clock trend beside them.
-    val serveResult =
-      if (names.isEmpty) Seq.empty
-      else try {
-        // fixed location under ./target (mode-overwrite writers): reused
-        // across runs instead of leaking one temp dir per bench invocation.
-        // Derived from the working dir (overridable) rather than hardcoded
-        // to /root/repo, so a bench run from another checkout doesn't write
-        // into this tree or race a concurrent bench JVM on shared indexes.
-        val idx = s"$workDir/bench-term-idx/idx"
-        graft.operators.TermIndex.build(spark,
-          spark.read.parquet(s"$sfDir/documents.parquet"), idx)
-        val times = (1 to math.max(qReps, 3)).map { _ =>
-          val t0 = System.nanoTime()
-          graft.operators.TermIndex.phraseSearch(spark, idx,
-            Seq("table hash")).collect()
-          (System.nanoTime() - t0) / 1e9
-        }
-        // symmetric vector-serve entry: probe-pruned IVF top-k against a
-        // prebuilt index (partition-pruned scan + bounded-heap top-k)
-        val ivfDir = s"$workDir/bench-ivf-idx/idx"
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        graft.operators.IvfIndex.build(spark, emb, ivfDir)
-        val qv = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
-          .localCheckpoint()
-        val vTimes = (1 to math.max(qReps, 3)).map { _ =>
-          val t0 = System.nanoTime()
-          graft.operators.IvfIndex.search(spark, ivfDir, qv)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        Seq("retrieval_serve_phrase" -> times.min,
-          "ann_serve_topk" -> vTimes.min)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] retrieval_serve failed: ${e.getMessage}")
-        Seq.empty
-      }
-
-    // ======================= output =========================================
-    osmAcc ++= serveResult
-    val all = osmAcc ++ results
-    val qs = all.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = all.filterNot(_._1.endsWith("_net")).map(_._2).sum
-    // full per-query record (archive/humans) — NOT the contract line
-    println(s"""{"metric":"queries_detail","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
-    // the LAST stdout line is the machine-readable record: short enough to
-    // survive any tail buffer (the full line above was truncated mid-line
-    // by the driver every round, leaving "parsed": null)
-    emitRecord(results)
+  def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(a => Table.exists(_.name == a))
+    require(unknown.isEmpty, s"unknown section(s) ${unknown.mkString(" ")}; " +
+      s"sections: ${Table.map(_.name).mkString(" ")}")
+    val spark = Session.build("graft-bench")
+    spark.range(1000).selectExpr("sum(id)").collect() // JVM/Catalyst warmup
+    val ctx = new Ctx(spark,
+      "/root/reference/vendor/github.com/omniscale/go-osm/parser/pbf/monaco-20150428.osm.pbf",
+      new CompiledMapping(MappingConf.fromFile("/root/reference/test/complete_db_mapping.json")),
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_WORKDIR", new java.io.File("target").getAbsolutePath),
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    run(ctx, if (args.isEmpty) Table else Table.filter(s => args.contains(s.name)))
     spark.stop()
   }
 }

@@ -80,16 +80,11 @@ final class ImportPipeline(
     * in-flight ones). Frames within a wave are independent given earlier
     * waves, so each wave materializes in parallel: small stage jobs fill
     * the cores the wave's big shuffle leaves idle. */
-  def materializeStages(): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try persisted.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, dfs) =>
-      Await.result(Future.sequence(dfs.map { case (_, df) => Future(df.count()) }),
-        Duration.Inf)
-    } finally pool.shutdown()
-  }
+  def materializeStages(): Unit =
+    persisted.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, dfs) =>
+      graft.streaming.DiffPipeline.drainConcurrently(dfs.toSeq.map { case (_, df) =>
+        () => { df.count(); () } })
+    }
 
   /** Tracked stage frames in dependency order (profiling/audit hook). */
   private[graft] def stageFrames: Seq[DataFrame] = persisted.toSeq.map(_._2)
@@ -401,29 +396,24 @@ object ImportPipeline {
   def apply(spark: SparkSession, mappingFile: String, srid: Int = 3857): ImportPipeline =
     new ImportPipeline(spark, new CompiledMapping(MappingConf.fromFile(mappingFile)), srid)
 
-  /** Stage-cache storage level, chosen for the box the JVM actually runs
-    * on. MEMORY_AND_DISK is right when the heap is sized sanely (blocks
-    * that fit stay hot, the rest spill); but with the heap configured past
-    * half of physical RAM, Spark's storage pool happily inflates the
-    * resident set until the OS starts page-faulting every executor thread
-    * — the same failure mode Bench.sinkPoolSize degrades for, observed as
-    * 25s→190s on the import phase under a ~90g-on-125GiB heap. DISK_ONLY
-    * caps the storage pool's resident footprint there: cached blocks go
-    * straight to local disk (page-cache backed, still far cheaper than
-    * recompute) and the heap stays available for shuffle/execution.
-    * Override with SPARK_GRAFT_STAGE_STORAGE=MEMORY_AND_DISK|DISK_ONLY.
-    */
-  def defaultStorage: org.apache.spark.storage.StorageLevel = {
-    import org.apache.spark.storage.StorageLevel
-    sys.env.get("SPARK_GRAFT_STAGE_STORAGE")
-      .map(StorageLevel.fromString)
-      .getOrElse {
-        val phys = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-          case b: com.sun.management.OperatingSystemMXBean => b.getTotalMemorySize
-          case _ => Long.MaxValue
-        }
-        if (Runtime.getRuntime.maxMemory > phys / 2) StorageLevel.DISK_ONLY
-        else StorageLevel.MEMORY_AND_DISK
-      }
+  /** True when the JVM heap is configured past half of physical RAM (the
+    * driver's ~90g-on-125GiB case). Spark's storage pool and concurrent
+    * sink drains then inflate the resident set until the OS page-faults
+    * every executor thread — observed as 25s→190s on the import phase. */
+  def heapOversized: Boolean = {
+    val phys = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case b: com.sun.management.OperatingSystemMXBean => b.getTotalMemorySize
+      case _ => Long.MaxValue
+    }
+    Runtime.getRuntime.maxMemory > phys / 2
   }
+
+  /** Stage-cache storage level for the box the JVM runs on:
+    * MEMORY_AND_DISK when the heap is sized sanely (blocks that fit stay
+    * hot, the rest spill); DISK_ONLY when the heap is oversized, which
+    * caps the storage pool's resident footprint — cached blocks go to
+    * page-cache-backed local disk, still far cheaper than recompute. */
+  def defaultStorage: org.apache.spark.storage.StorageLevel =
+    if (heapOversized) org.apache.spark.storage.StorageLevel.DISK_ONLY
+    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 }

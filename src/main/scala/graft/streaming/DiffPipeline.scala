@@ -43,22 +43,30 @@ object DiffPipeline {
   private val ElementTables = Seq("coords", "nodes", "ways", "relations")
   private def tbl(name: String): String = s"tbl_$name"
 
-  /** Run independent store writes concurrently. A diff batch touches every
-    * output table, and each bucketed-delta write is a small Spark job —
-    * run sequentially, a minutely batch pays ~30 job latencies end to end
-    * (measured 82 s for a ~900-node batch against a 2M-element store;
-    * fixed scheduling overhead, not data). The writes land in disjoint
-    * `<table>/v<seq>` dirs, so they compose like any multi-sink drain; the
-    * shared rebuild caches are forced once before draining. */
-  private def drainConcurrently(tasks: Seq[() => Unit], par: Int = 8): Unit = {
-    if (tasks.isEmpty) return
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(par, math.max(1, tasks.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(tasks.map(t => Future(t()))), Duration.Inf)
-    finally pool.shutdown()
+  /** Run independent writes concurrently, at most `par` at a time. A diff
+    * batch touches every output table, and each bucketed-delta write is a
+    * small Spark job — run sequentially, a minutely batch pays ~30 job
+    * latencies end to end (measured 82 s for a ~900-node batch against a
+    * 2M-element store; fixed scheduling overhead, not data). The writes
+    * land in disjoint `<table>/v<seq>` dirs, so they compose like any
+    * multi-sink drain. Returns only when every worker thread has ended;
+    * after a task throws, no new task starts and the first error is
+    * rethrown. The one drain helper: the import's stage waves and the
+    * bench's table sinks use it too. */
+  private[graft] def drainConcurrently(tasks: Seq[() => Unit], par: Int = 8): Unit = {
+    val queue = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
+    tasks.foreach(queue.add)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val workers = Seq.fill(math.min(par, tasks.size))(new Thread(() => {
+      var task = queue.poll()
+      while (task != null && errors.isEmpty) {
+        try task() catch { case e: Throwable => errors.add(e) }
+        task = queue.poll()
+      }
+    }, "graft-drain"))
+    workers.foreach { w => w.setDaemon(true); w.start() }
+    workers.foreach(_.join())
+    Option(errors.peek()).foreach(e => throw e)
   }
 
   /** Initial import: write element state + all output tables as v0, all

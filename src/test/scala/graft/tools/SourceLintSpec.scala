@@ -62,6 +62,21 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("every SPARK_GRAFT_* name in src/main is documented in README.md") {
+    // the env surface is what a user can set; a name the README does not
+    // carry is an undocumented knob
+    val name = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8")
+    val documented = try name.findAllIn(readme.mkString).toSet finally readme.close()
+    val offenders = for {
+      f <- scalaFiles("src/main/scala")
+      (n, l) <- linesOf(f)
+      m <- name.findAllIn(l)
+      if !documented.contains(m)
+    } yield s"${f.getPath}:$n: $m"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("SQL DROP statements never backtick-quote a whole interpolated name") {
     // `\"DROP TABLE IF EXISTS `$tbl`\"` treats db.tbl as ONE identifier and
     // silently misses the real table — quote the parsed PARTS instead
