@@ -86,9 +86,6 @@ final class ImportPipeline(
         () => { df.count(); () } })
     }
 
-  /** Tracked stage frames in dependency order (profiling/audit hook). */
-  private[graft] def stageFrames: Seq[DataFrame] = persisted.toSeq.map(_._2)
-
   /** Run the import; returns table name -> rows (lazy frames).
     *
     * `resolve` carries resolution-only inputs for relation-member lookup:

@@ -98,6 +98,4 @@ object TextNormFunctions {
   def textNorm(s: Column, mode: String): Column =
     ColumnBridge.column(
       TextNormExpr(ColumnBridge.expression(s), TextNorm.modeOf(mode)))
-
-  def stripAccents(s: Column): Column = textNorm(s, "STRIP_ACCENTS")
 }

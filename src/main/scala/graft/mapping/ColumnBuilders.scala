@@ -85,17 +85,6 @@ object ColumnBuilders {
   private def isMemberType(t: String): Boolean =
     t == "member_id" || t == "member_role" || t == "member_type" || t == "member_index"
 
-  /** Spark type of a column (pgTypes analog, database/postgis/columns.go:69-79). */
-  def sparkType(colType: String): DataType = colType match {
-    case "bool" | "geojson_intersects" => BooleanType
-    case "boolint" | "direction" | "member_type" => ByteType
-    case "integer" | "wayzorder" | "zorder" | "enumerate" | "categorize_int" | "member_index" => IntegerType
-    case "id" | "member_id" => LongType
-    case "area" | "webmerc_area" | "pseudoarea" => FloatType
-    case "geometry" | "validated_geometry" => BinaryType
-    case _ => StringType
-  }
-
   // ---- parameterized types ---------------------------------------------------
 
   private def argList(conf: ColumnConf, key: String): Seq[String] =

@@ -152,10 +152,6 @@ final class CompiledMapping(val conf: MappingConf) extends Serializable {
   val wayTagFilter: TagPrefilter = TagPrefilter.forWays(conf)
   val relationTagFilter: TagPrefilter = TagPrefilter.forRelations(conf)
 
-  /** Tables whose rows a given element-kind pipeline can produce. */
-  def tablesOfType(tpes: String*): Seq[TableConf] =
-    conf.tables.values.filter(t => tpes.contains(t.tableType)).toSeq
-
   // ---- construction (mirrors mapping/matcher.go:8-91) -----------------------
 
   /** mapping.go:169-189: tables of `tableType` plus geometry tables feed the

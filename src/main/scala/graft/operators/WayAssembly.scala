@@ -103,55 +103,4 @@ object WayAssembly {
       }
       .toDF("id", "refs", "xs", "ys")
   }
-
-  /** Hash-placement variant of the regroup: instead of sorting the
-    * partition by (way, pos) and streaming runs, place each row directly
-    * at its `pos` slot in per-way arrays held in an open-addressing map.
-    * Saves the O(n log n) partition sort; costs spill-safety (the arrays
-    * live on-heap until the partition drains, where the sort path spills
-    * through UnsafeExternalSorter). Locally the resident set is the same
-    * data the sort would buffer anyway (~partition bytes); at planet
-    * scale prefer `resolve` unless shuffle partitions are sized so a
-    * partition's assembled arrays comfortably fit an executor's heap.
-    * A/B on the synth bench (tools/AssemblyProbe): sort-walk vs this.
-    */
-  private[graft] def resolveHash(ways: DataFrame, coords: DataFrame): DataFrame = {
-    val spark = ways.sparkSession
-    import spark.implicits._
-    val exploded = ways
-      .select(col("id").as("way_id"), size(col("refs")).as("nrefs"),
-        posexplode(col("refs")).as(Seq("pos", "ref")))
-    val joined = exploded.join(coords, exploded("ref") === coords("id"))
-      .select(col("way_id"), col("nrefs"), col("pos"), col("ref"), col("x"), col("y"))
-    joined
-      .repartition(col("way_id"))
-      .mapPartitions { rows =>
-        final class Acc(val refs: Array[Long], val xs: Array[Double],
-            val ys: Array[Double]) { var n = 0 }
-        val m = new java.util.HashMap[Long, Acc]()
-        rows.foreach { r =>
-          val id = r.getLong(0)
-          var acc = m.get(id)
-          if (acc == null) {
-            val nrefs = r.getInt(1)
-            acc = new Acc(new Array[Long](nrefs), new Array[Double](nrefs),
-              new Array[Double](nrefs))
-            m.put(id, acc)
-          }
-          val pos = r.getInt(2)
-          if (pos < acc.refs.length) {
-            acc.refs(pos) = r.getLong(3)
-            acc.xs(pos) = r.getDouble(4)
-            acc.ys(pos) = r.getDouble(5)
-          }
-          acc.n += 1 // dup coord ids inflate n past nrefs -> dropped below
-        }
-        import scala.jdk.CollectionConverters._
-        m.entrySet().iterator().asScala.collect {
-          case e if e.getValue.n == e.getValue.refs.length =>
-            (e.getKey.toLong, e.getValue.refs, e.getValue.xs, e.getValue.ys)
-        }
-      }
-      .toDF("id", "refs", "xs", "ys")
-  }
 }

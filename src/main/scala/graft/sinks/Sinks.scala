@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 
-import graft.mapping.{CompiledMapping, TableConf, TableType}
+import graft.mapping.{TableConf, TableType}
 import graft.operators.GeohashSort
 
 /** Output sinks (SURVEY.md §2 K1-K6).
@@ -116,10 +116,4 @@ object PostgisDdl {
     }
     geomIdx ++ idIdx
   }
-
-  def allDdl(mapping: CompiledMapping, schema: String, prefix: String,
-      srid: Int): Seq[String] =
-    mapping.conf.tables.values.toSeq.flatMap { t =>
-      createTableSql(schema, prefix, t) +: addGeometryColumnSql(schema, prefix, t, srid)
-    }
 }

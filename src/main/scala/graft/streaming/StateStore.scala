@@ -4,8 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod, shiftright, xxhash64}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Versioned parquet state for incremental maintenance (SURVEY.md §2 ST3/ST4).
   *
@@ -91,7 +91,6 @@ final class StateStore(spark: SparkSession, dir: String) {
 
   private def statePath = new Path(root, "state.txt")
   private def tmpPath = new Path(root, ".state.txt.tmp")
-  private def bitsPath = new Path(root, "bucketbits.txt")
   private def bucketsPath = new Path(root, "buckets.txt")
 
   // ---- small control files --------------------------------------------------
@@ -127,22 +126,19 @@ final class StateStore(spark: SparkSession, dir: String) {
     * still maps to ≤ min(|ids|, n) buckets. */
   def setHashBuckets(n: Int): Unit = writeSmall(bucketsPath, s"hash:$n")
 
-  /** Legacy id-range scheme (id >> bits); kept so existing stores read. */
-  def setBucketBits(bits: Int): Unit = writeSmall(bitsPath, bits.toString)
-
-  // Left(bits) = legacy range shift, Right(n) = hash buckets
-  private lazy val scheme: Either[Int, Int] =
+  // A pre-r13 store bucketed by id range (`bucketbits.txt`, id >> bits)
+  // is refused: read as hash buckets, it would silently prune the wrong
+  // buckets.
+  private lazy val nBuckets: Int = {
+    val rangeBits = new Path(root, "bucketbits.txt")
     if (fs.exists(bucketsPath))
-      Right(readSmall(bucketsPath).trim.stripPrefix("hash:").toInt)
-    else if (fs.exists(bitsPath)) Left(readSmall(bitsPath).trim.toInt)
-    else Right(1024)
-
-  def bucketOf(idCol: Column): Column = scheme match {
-    // arithmetic shift, not division: exact for the negative mangled
-    // way/relation ids (RelIDOffset ≈ -1e17 is far outside double precision)
-    case Left(bits) => shiftright(idCol, bits)
-    case Right(n) => pmod(xxhash64(idCol), lit(n.toLong))
+      readSmall(bucketsPath).trim.stripPrefix("hash:").toInt
+    else if (fs.exists(rangeBits))
+      StateStore.unreadable(rangeBits, "id-range bucketing")
+    else 1024
   }
+
+  def bucketOf(idCol: Column): Column = pmod(xxhash64(idCol), lit(nBuckets.toLong))
 
   /** Distinct buckets of an id frame (driver-side control plane: diff id
     * sets are ~10⁴ rows). */
@@ -273,13 +269,12 @@ final class StateStore(spark: SparkSession, dir: String) {
     *
     * Segment scans (r13, guide §2.4/§6): writeDelta stamps each segment's
     * fold ordinal into the files (`__ord`/`__tord` columns), so ALL
-    * stamped segments of a table read as ONE parquet scan instead of one
+    * segments of a table read as ONE parquet scan instead of one
     * scan + union per segment. A long-running diff stream accumulates up
     * to maxSegments segments per table, and every closure/rebuild read of
     * every table paid N file indexes + an N-way union per view — measured
     * as the per-batch wall growing 4.1 s → 12.4 s (closure) across one
-    * 8-batch compaction cycle of the soak. Legacy unstamped segments
-    * (pre-r13 stores) keep the per-segment path. */
+    * 8-batch compaction cycle of the soak. */
   private def mergedView(name: String, seq: Long, only: Option[Set[Long]]): DataFrame = {
     val m = readManifest(name, seq)
     val base = new Path(root, name)
@@ -296,38 +291,14 @@ final class StateStore(spark: SparkSession, dir: String) {
     if (m.segments.isEmpty) return baseDf
     val idCol = m.segments.head.idCol
     val tombCol = m.segments.head.tombCol
-    import org.apache.spark.sql.functions.broadcast
-    def pruned(df: DataFrame): DataFrame = only match {
-      case Some(bs) => df.filter(bucketOf(col(idCol)).isInCollection(bs))
-      case None => df
-    }
-    val ordered = m.segments.zipWithIndex
-    val (stamped, legacy) = ordered.partition(_._1.stamped)
-    // stamped segments: one scan carrying its own __ord column
-    val stampedScan =
-      if (stamped.isEmpty) Nil
-      else Seq(pruned(rd(
-        StructType(m.schema.fields :+
-          org.apache.spark.sql.types.StructField("__ord",
-            org.apache.spark.sql.types.LongType)),
-        stamped.map(_._1.ins))))
-    val legacyScans = legacy.map { case (s, i) =>
-      pruned(rd(m.schema, Seq(s.ins)).withColumn("__ord", lit(i + 1L)))
-    }
-    val withOrd = ((baseDf.withColumn("__ord", lit(0L)) +: legacyScans) ++
-      stampedScan).reduce(_ unionByName _)
-    val tombSchema = StructType(Seq(m.schema(tombCol)))
-    val tombStamped =
-      if (stamped.isEmpty) Nil
-      else Seq(rd(
-        StructType(tombSchema.fields :+
-          org.apache.spark.sql.types.StructField("__tord",
-            org.apache.spark.sql.types.LongType)),
-        stamped.map(_._1.del)))
-    val tombLegacy = legacy.map { case (s, i) =>
-      rd(tombSchema, Seq(s.del)).withColumn("__tord", lit(i + 1L))
-    }
-    val tombs = (tombLegacy ++ tombStamped).reduce(_ unionByName _)
+    def stamped(fields: Seq[StructField], ordCol: String): StructType =
+      StructType(fields :+ StructField(ordCol, LongType))
+    val inserts = rd(stamped(m.schema.fields, "__ord"), m.segments.map(_.ins))
+    val withOrd = baseDf.withColumn("__ord", lit(0L)).unionByName(only match {
+      case Some(bs) => inserts.filter(bucketOf(col(idCol)).isInCollection(bs))
+      case None => inserts
+    })
+    val tombs = rd(stamped(Seq(m.schema(tombCol)), "__tord"), m.segments.map(_.del))
       .withColumnRenamed(tombCol, "__tid")
     withOrd.join(broadcast(tombs),
         withOrd(tombCol) === tombs("__tid") && tombs("__tord") > withOrd("__ord"),
@@ -338,43 +309,44 @@ final class StateStore(spark: SparkSession, dir: String) {
   private def manifestPath(name: String, seq: Long): Path =
     new Path(new Path(tablePath(name, seq)), "_manifest")
 
-  // `stamped`: the segment's ins/del files physically carry their fold
-  // ordinal (`__ord`/`__tord` columns, written by writeDelta since r13) so
-  // ALL stamped segments of a table read as ONE parquet scan. Legacy
-  // segments (no columns) still read one-scan-per-segment.
+  // A segment's ins/del files physically carry their fold ordinal
+  // (`__ord`/`__tord` columns, written by writeDelta) so ALL segments of a
+  // table read as ONE parquet scan.
   private final case class Segment(idCol: String, tombCol: String,
-      ins: String, del: String, stamped: Boolean = false)
+      ins: String, del: String)
   private final case class Manifest(schema: StructType,
       buckets: Map[Long, String], segments: Seq[Segment])
 
   /** `_manifest`: line 1 = schema JSON; then `<bucket>\t<relative dir>`
     * base-map lines; then ordered
-    * `SEG\t<idCol>\t<tombCol>\t<insDir>\t<delDir>` (legacy) or
-    * `SEGO\t…` (ordinal-stamped files, r13) lines — merge-on-read delta
-    * segments, oldest first. */
+    * `SEGO\t<idCol>\t<tombCol>\t<insDir>\t<delDir>` lines — merge-on-read
+    * delta segments, oldest first. Pre-r13 stores wrote unstamped `SEG\t`
+    * lines, whose files lack the ordinal columns; they are refused. */
   private def writeManifest(name: String, seq: Long, schema: StructType,
       buckets: Map[Long, String], segments: Seq[Segment] = Nil): Unit = {
     val body = schema.json +:
       (buckets.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" } ++
-        segments.map(s => s"${if (s.stamped) "SEGO" else "SEG"}\t" +
-          s"${s.idCol}\t${s.tombCol}\t${s.ins}\t${s.del}"))
+        segments.map(s => s"SEGO\t${s.idCol}\t${s.tombCol}\t${s.ins}\t${s.del}"))
     val vdir = new Path(tablePath(name, seq))
     if (!fs.exists(vdir)) fs.mkdirs(vdir)
     writeSmall(manifestPath(name, seq), body.mkString("\n"))
   }
 
   private def readManifest(name: String, seq: Long): Manifest = {
-    val lines = readSmall(manifestPath(name, seq)).split("\n").toSeq
+    val path = manifestPath(name, seq)
+    val lines = readSmall(path).split("\n").toSeq
+    if (lines.exists(_.startsWith("SEG\t")))
+      StateStore.unreadable(path, "an unstamped SEG segment")
     val schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
     val (segLines, bucketLines) = lines.tail.filter(_.nonEmpty)
-      .partition(l => l.startsWith("SEG\t") || l.startsWith("SEGO\t"))
+      .partition(_.startsWith("SEGO\t"))
     val buckets = bucketLines.map { l =>
       val Array(b, p) = l.split("\t", 2)
       b.toLong -> p
     }.toMap
     val segments = segLines.map { l =>
-      val Array(tag, idCol, tombCol, ins, del) = l.split("\t", 5)
-      Segment(idCol, tombCol, ins, del, stamped = tag == "SEGO")
+      val Array(_, idCol, tombCol, ins, del) = l.split("\t", 5)
+      Segment(idCol, tombCol, ins, del)
     }
     Manifest(schema, buckets, segments)
   }
@@ -436,7 +408,6 @@ final class StateStore(spark: SparkSession, dir: String) {
   def writeDelta(name: String, seq: Long, prevSeq: Long, inserts: DataFrame,
       deleteIds: DataFrame, idCol: String, sortWithin: Seq[String] = Nil,
       maxSegments: Int = 8, tombstoneCol: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.broadcast
     // tombstoneCol: hide-by column when it differs from the bucketing id
     // (reverse indexes bucket by the REFERENCED id but delete by the
     // REFERRER — e.g. wayrefs buckets by ref node id, tombstones by way_id)
@@ -451,7 +422,7 @@ final class StateStore(spark: SparkSession, dir: String) {
       val vdir = tablePath(name, seq)
       // stamp the fold ordinal into the files (position in the manifest's
       // segment list, 1-based — stable: segments only append until a
-      // compaction clears the list) so every later read folds ALL stamped
+      // compaction clears the list) so every later read folds ALL
       // segments in one scan (see mergedView). lit() columns cost nothing
       // in the write and make the read O(1) scans instead of O(segments).
       val ord = m.segments.size + 1L
@@ -462,8 +433,7 @@ final class StateStore(spark: SparkSession, dir: String) {
       deleteIds.select(col(tc)).withColumn("__tord", lit(ord))
         .write.mode("overwrite").parquet(s"$vdir/del")
       writeManifest(name, seq, m.schema, m.buckets,
-        m.segments :+ Segment(idCol, tc, s"v$seq/ins", s"v$seq/del",
-          stamped = true))
+        m.segments :+ Segment(idCol, tc, s"v$seq/ins", s"v$seq/del"))
     }
   }
 
@@ -509,4 +479,9 @@ private[streaming] object StateStore {
   private[streaming] val scopeLock = new Object
   private[streaming] val scopes =
     new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]
+
+  /** Refuse a store in a format written before r13 (`what` names it). */
+  private def unreadable(file: Path, what: String): Nothing =
+    throw new IllegalStateException(s"$file: $what is a pre-r13 store " +
+      "format this version no longer reads; re-run the import to rebuild the store")
 }

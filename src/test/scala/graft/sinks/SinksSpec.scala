@@ -81,20 +81,6 @@ class SinksSpec extends SparkSpecBase {
     assert(est2 == 930)
   }
 
-  test("geometry union aggregate merges disjoint squares") {
-    import spark.implicits._
-    import graft.geometry.Geom
-    import graft.geometry.Geom.Pt
-    def square(x0: Double): Array[Byte] =
-      Geom.toWkb(Geom.polygon(IndexedSeq(
-        Pt(x0, 0), Pt(x0 + 1, 0), Pt(x0 + 1, 1), Pt(x0, 1), Pt(x0, 0))).get, 3857)
-    val ds = Seq(square(0), square(2), square(4)).toDS()
-    val agg = new graft.functions.GeomUnionAggregator(3857)
-    val union = ds.select(agg.toColumn).collect().head
-    assert(math.abs(Geom.fromWkb(union).getArea - 3.0) < 1e-9)
-    assert(Geom.fromWkb(union).getNumGeometries == 3)
-  }
-
   test("cache query: lookups and reverse deps") {
     import graft.operators.CacheQuery
     val b = graft.sources.OsmXml.read(spark, "/root/reference/test/complete_db.osm")

@@ -6,12 +6,12 @@ import graft.SparkSpecBase
 import graft.mapping.{CompiledMapping, MappingConf}
 import graft.sources.OsmXml
 
-/** Diff maintenance must be bucket-pruned: a small diff rewrites only the
-  * id-range buckets its closure touches, carrying every other bucket
-  * forward by manifest pointer (StateStore bucketed layout). The goldens in
-  * DiffPipelineSpec prove content correctness through the same code path;
-  * this spec proves the PRUNING — v1 holds strictly fewer bucket dirs than
-  * the table has, and untouched buckets still point at v0 files.
+/** Diff maintenance must be bucket-pruned: a small diff appends a delta
+  * segment and carries every base bucket forward by manifest pointer
+  * (StateStore bucketed layout). The goldens in DiffPipelineSpec prove
+  * content correctness through the same code path; this spec proves the
+  * PRUNING — v1 rewrites no base bucket, and untouched buckets still point
+  * at v0 files — plus the store's own fold, compaction and format checks.
   */
 class BucketPruneSpec extends SparkSpecBase {
 
@@ -31,7 +31,8 @@ class BucketPruneSpec extends SparkSpecBase {
     }
   }
 
-  private def testStoreFold(): Unit = {
+  test("segments fold newest-wins, compact into a fresh base, and read as " +
+      "one scan") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-store-fold").toString
     val store = new StateStore(spark, dir)
@@ -51,7 +52,7 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(rows(3) == Seq((1L, "A"), (2L, "B"), (3L, "c"), (4L, "d")))
     val m3 = new String(Files.readAllBytes(
       Paths.get(dir, "t", "v3", "_manifest")), "UTF-8")
-    assert(!m3.contains("SEG\t"), "compaction must fold segments into a base")
+    assert(!m3.contains("SEGO\t"), "compaction must fold segments into a base")
     assert(m3.contains("v3/__b="), "compaction must write a fresh base")
     // delete-only batch (no inserts)
     ins(4, Seq.empty, Seq(3L))
@@ -91,6 +92,43 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(m5.contains("v4/ins"), "v5 manifest must carry v4's segment")
   }
 
+  test("a pre-r13 store (id-range buckets or an unstamped SEG segment) " +
+      "fails with an error that names the file") {
+    import spark.implicits._
+    def store(tag: String): (String, StateStore) = {
+      val dir = Files.createTempDirectory(s"graft-store-$tag").toString
+      val s = new StateStore(spark, dir)
+      s.setHashBuckets(4)
+      s.writeBucketed("t", 0, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "id")
+      s.writeDelta("t", 1, 0, Seq((2L, "B")).toDF("id", "v"),
+        Seq(Tuple1(2L)).toDF("id"), "id")
+      (dir, s)
+    }
+    def refused(file: java.nio.file.Path)(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains(file.toString) &&
+        e.getMessage.contains("re-run the import"), e.getMessage)
+    }
+    // id-range scheme: the pre-r13 control file in place of buckets.txt
+    val (ranged, _) = store("bits")
+    val bits = Paths.get(ranged, "bucketbits.txt")
+    Files.delete(Paths.get(ranged, "buckets.txt"))
+    Files.write(bits, "20".getBytes("UTF-8"))
+    val old = new StateStore(spark, ranged)
+    refused(bits)(old.bucketsOf(Seq(Tuple1(2L)).toDF("id"), "id"))
+    refused(bits)(old.readBuckets("t", 1, Set(0L)))
+    // unstamped segment: the pre-r13 manifest tag
+    val (unstamped, s) = store("seg")
+    val manifest = Paths.get(unstamped, "t", "v1", "_manifest")
+    val text = new String(Files.readAllBytes(manifest), "UTF-8")
+    assert(text.contains("SEGO\t"))
+    Files.write(manifest, text.replace("SEGO\t", "SEG\t").getBytes("UTF-8"))
+    // the local Hadoop filesystem would reject the edit by its stale checksum
+    Files.delete(manifest.resolveSibling("._manifest.crc"))
+    refused(manifest)(s.read("t", 1))
+    refused(manifest)(s.writeUnchanged("t", 2, 1))
+  }
+
   test("a small diff appends a delta segment, never rewrites base buckets") {
     val stateDir = Files.createTempDirectory("graft-bucket-prune").toString
     // 64 hash buckets: the fixture's ids spread over (almost) all of them,
@@ -127,10 +165,6 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(coords.count() > 0)
     assert(coords.select("id").distinct().count() == coords.count(),
       "bucket merge must not duplicate ids")
-
-    // segment fold correctness, the newest-wins contract, and compaction
-    // — directly against the store
-    testStoreFold()
 
     // the maintained reverse indexes must stay consistent with the
     // element tables they index after a diff (the closure's correctness

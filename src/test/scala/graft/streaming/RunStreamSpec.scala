@@ -73,7 +73,7 @@ class RunStreamSpec extends SparkSpecBase {
     // committed manifest cannot carry all 10 batches as segments
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(stateDir, "coords", "v10", "_manifest")), "UTF-8")
-    val nSegs = manifest.linesIterator.count(_.startsWith("SEG\t"))
+    val nSegs = manifest.linesIterator.count(_.startsWith("SEGO\t"))
     assert(nSegs <= 8, s"$nSegs segments in v10 — compaction never ran")
     assert(!manifest.contains("v0/__b="),
       "v10 base must come from a compaction, not v0")
@@ -255,7 +255,7 @@ class RunStreamSpec extends SparkSpecBase {
     }
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(stateDir, "coords", "v50", "_manifest")), "UTF-8")
-    val nSegs = manifest.linesIterator.count(_.startsWith("SEG\t"))
+    val nSegs = manifest.linesIterator.count(_.startsWith("SEGO\t"))
     assert(nSegs <= 8, s"$nSegs segments in v50 — compaction never ran")
     def countFiles(f: java.io.File): Long =
       if (f.isDirectory)

@@ -46,10 +46,6 @@ object AssemblyProbe {
       WayAssembly.resolve(ways, coords).write.format("noop").mode("overwrite").save())
     timed("full resolve again")(
       WayAssembly.resolve(ways, coords).write.format("noop").mode("overwrite").save())
-    timed("resolveHash (pos placement)")(
-      WayAssembly.resolveHash(ways, coords).write.format("noop").mode("overwrite").save())
-    timed("resolveHash again")(
-      WayAssembly.resolveHash(ways, coords).write.format("noop").mode("overwrite").save())
 
     val cached = WayAssembly.resolve(ways, coords).persist()
     timed("resolve + cache write + count")(cached.count())

@@ -77,6 +77,57 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("every src/main module is named by code outside its own file") {
+    // a module that only its own spec reaches is dead weight the system
+    // never calls (EventsStream, StreamingPacker, ZOrder and
+    // GeomUnionAggregator were). A module is one file: the helper types it
+    // defines beside its main object count as part of it. Comments are no
+    // caller, so they are stripped before searching.
+    val allowed = Map(
+      "graft/Main.scala" -> "entry point: the imposm-style CLI",
+      "graft/Verify.scala" -> "entry point: runMain graft.Verify",
+      "graft/Bench.scala" -> "entry point: runMain graft.Bench",
+      "graft/PlanDump.scala" -> "entry point: runMain graft.PlanDump",
+      "graft/QueryProfile.scala" -> "entry point: runMain graft.QueryProfile",
+      "graft/queries/package.scala" -> "package object, in scope without a name",
+      "graft/sinks/PostgisImport.scala" ->
+        "PostGIS output path, driven by PostgisImportSpec and LivePostgisSpec",
+      "graft/sinks/CopySink.scala" ->
+        "PostGIS output path, driven by PostgisImportSpec and LivePostgisSpec",
+      "graft/streaming/StreamingIndexer.scala" ->
+        "known orphan: named only in comments, reached only by its spec",
+      "graft/operators/SkewJoin.scala" ->
+        "known orphan: named only in comments, reached only by its spec")
+    val main = "src/main/scala/"
+    val stale = allowed.keys.filterNot(k => new java.io.File(main + k).isFile)
+    assert(stale.isEmpty, s"allowlisted files that no longer exist: $stale")
+    def read(f: java.io.File): String = {
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString finally src.close()
+    }
+    def code(f: java.io.File): String =
+      read(f).replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val topLevel = ("(?m)^(?:(?:final|sealed|abstract|case|implicit|" +
+      "private(?:\\[\\w+\\])?)\\s+)*(?:object|class|trait)\\s+(\\w+)").r
+    val modules = scalaFiles(main)
+    val texts = (modules ++ scalaFiles("perfbench/src")).map(f => f -> code(f))
+    val services = Option(new java.io.File("src/main/resources/META-INF/services")
+      .listFiles()).getOrElse(Array.empty).map(read).mkString("\n")
+    val offenders = for {
+      f <- modules
+      if !allowed.contains(f.getPath.stripPrefix(main))
+      names = topLevel.findAllMatchIn(read(f)).map(_.group(1)).toSeq
+      named = (n: String) => s"\\b$n\\b".r
+      if !names.exists { n =>
+        named(n).findFirstIn(services).isDefined ||
+          texts.exists { case (g, t) => g != f && named(n).findFirstIn(t).isDefined }
+      }
+    } yield s"${f.getPath}: ${names.mkString(", ")}"
+    assert(offenders.isEmpty,
+      "modules nothing outside their own file names (delete them, or " +
+        "allowlist them with a reason):\n" + offenders.mkString("\n"))
+  }
+
   test("SQL DROP statements never backtick-quote a whole interpolated name") {
     // `\"DROP TABLE IF EXISTS `$tbl`\"` treats db.tbl as ONE identifier and
     // silently misses the real table — quote the parsed PARTS instead
