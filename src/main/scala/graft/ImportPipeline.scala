@@ -29,11 +29,7 @@ final class ImportPipeline(
     // frame. Default is the in-pipeline AQE shuffle join; the bench's
     // bucketed A/B injects WayAssembly.resolveStored over a pre-bucketed
     // element store (the reference's ID-sorted cache layout analog).
-    assembler: (DataFrame, DataFrame) => DataFrame = WayAssembly.resolve,
-    // diff mode: localCheckpoint stages instead of caching them — see
-    // tracked(). Off for batch imports: the checkpoint write is pure
-    // overhead when each stage has a handful of consumers in one JVM pass.
-    truncateLineage: Boolean = false)
+    assembler: (DataFrame, DataFrame) => DataFrame = WayAssembly.resolve)
     extends Serializable {
 
   import spark.implicits._
@@ -51,19 +47,11 @@ final class ImportPipeline(
   @transient private val persisted = scala.collection.mutable.Buffer.empty[(Int, DataFrame)]
 
   /** `wave` encodes cache dependencies: a frame only reads caches from
-    * strictly earlier waves, so materializeStages() can run each wave's
-    * counts concurrently without two in-flight jobs recomputing a shared
+    * strictly earlier waves, so materializeStages() can force each wave's
+    * frames concurrently without two in-flight jobs recomputing a shared
     * uncached parent. */
   private def tracked(df: DataFrame, wave: Int = 0): DataFrame = {
-    // truncateLineage (diff mode): checkpoint the stage instead of caching
-    // it, so every downstream frame plans against a leaf. A diff batch
-    // writes ~30 output tables whose frames otherwise each carry the WHOLE
-    // import DAG as their logical plan, and Catalyst re-analyzes that DAG
-    // once per store write — measured as the dominant cost of a small
-    // diff apply (driver-bound, ~39 s of a 57 s batch). Lazy: the wave
-    // counts in materializeStages still do the materialization in
-    // dependency order.
-    val out = if (truncateLineage) df.localCheckpoint(false) else df.persist(storage)
+    val out = df.persist(storage)
     persisted += wave -> out
     out
   }
@@ -79,11 +67,14 @@ final class ImportPipeline(
     * computation (Spark's cache dedups only registered blocks, not
     * in-flight ones). Frames within a wave are independent given earlier
     * waves, so each wave materializes in parallel: small stage jobs fill
-    * the cores the wave's big shuffle leaves idle. */
+    * the cores the wave's big shuffle leaves idle. A frame is forced by a
+    * `noop` write of none of its columns, not by a `count`: the count's
+    * aggregate exchange costs one more job per frame, and a frame whose
+    * plan has no exchange of its own then fills its cache in one job. */
   def materializeStages(): Unit =
     persisted.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (_, dfs) =>
       graft.streaming.DiffPipeline.drainConcurrently(dfs.toSeq.map { case (_, df) =>
-        () => { df.count(); () } })
+        () => df.select().write.format("noop").mode("overwrite").save() })
     }
 
   /** Run the import; returns table name -> rows (lazy frames).

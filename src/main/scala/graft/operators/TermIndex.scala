@@ -117,23 +117,6 @@ object TermIndex {
     } finally postings.unpersist()
   }
 
-  /** Idempotent per-batch write for the STREAMING index (see
-    * streaming/StreamingIndexer): each micro-batch lands in its own
-    * `batch=<id>` directory (nested under it, the same bucket partitions —
-    * parquet partition discovery exposes both levels, so bucket pruning
-    * still works through [[phraseSearch]] on the root). Overwrite of the
-    * deterministic batch directory makes foreachBatch re-delivery a no-op
-    * rewrite instead of a double-append — exactly-once without a manifest.
-    */
-  def writeBatch(docs: DataFrame, indexDir: String, batchId: Long,
-      nBuckets: Int = DefaultBuckets): Unit = {
-    val meta = bucketsOf(docs.sparkSession, indexDir)
-    postingsOf(docs, meta.getOrElse(nBuckets))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$indexDir/batch=$batchId")
-    if (meta.isEmpty) writeMeta(docs.sparkSession, indexDir, nBuckets)
-  }
-
   /** Small-file compaction — the consumer of append's growth report: long
     * append streams leave each bucket holding one file per delta, and scan
     * cost becomes file-count-bound instead of byte-bound. Rewrite the index
@@ -156,18 +139,12 @@ object TermIndex {
     val oldF = new java.io.File(indexDir + ".old")
     val before = parquetFiles(dir).size.toLong
     val tmp = indexDir + ".compacting"
-    val df = spark.read.parquet(indexDir)
-    // a streamed index (StreamingIndexer) carries a batch partition level;
-    // fold every batch into the reserved batch=-1 directory so the layout
-    // depth is preserved and future micro-batches (ids are never negative)
-    // can keep landing beside it without a conflicting-structure error
-    val streamed = df.columns.contains("batch")
-    val compacted = df.drop("batch")
+    spark.read.parquet(indexDir)
       .repartition(col("bucket"))
       .sortWithinPartitions("bucket", "tok", "doc_id", "pos")
-    compacted.write.mode("overwrite")
+      .write.mode("overwrite")
       .partitionBy("bucket")
-      .parquet(if (streamed) s"$tmp/batch=-1" else tmp)
+      .parquet(tmp)
     deleteRecursively(oldF) // a leftover .old would make the rename fail
     require(dir.renameTo(oldF), s"cannot swap out $indexDir")
     require(new java.io.File(tmp).renameTo(dir), s"cannot swap in $tmp")

@@ -1136,9 +1136,9 @@ object Relational {
   // The pre-flight check before a big join: exact per-key counts (one
   // hash aggregate — the same shuffle the join itself would pay), the
   // hottest keys through the bounded-heap top-k, and the derived salt
-  // recommendation for operators/SkewJoin — ⌈max_key_rows / avg_rows_per_
-  // partition⌉, i.e. how many reducers the hottest key needs to not be a
-  // straggler. All integer arithmetic; shares are single IEEE divisions.
+  // recommendation — ⌈max_key_rows / avg_rows_per_partition⌉, i.e. how
+  // many reducers the hottest key needs to not be a straggler. All
+  // integer arithmetic; shares are single IEEE divisions.
   private val SkewPartitions = 32L
   private def qSkewAdvisor(s: SparkSession, dir: String): DataFrame = {
     val counts = t(s, dir, "orders")

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{BooleanType, StructType}
 
 import graft.ImportPipeline
 import graft.mapping.{CompiledMapping, TableConf, TableType}
@@ -22,8 +23,8 @@ import graft.sources.OsmXml.Bundle
   *     even for Create (the reference's idempotency trick, ST2);
   *  2. dependency closure (J4): changed node → ways whose refs contain it,
   *     changed node/way → relations whose members reference them — the
-  *     reverse indexes of the reference's DiffCache are expressed as
-  *     explode+semi-join against the maintained ways/relations tables;
+  *     reference's DiffCache reverse indexes are the store's bucketed
+  *     `wayrefs`/`relrefs` tables;
   *  3. rebuild: the same ImportPipeline runs over the closure subset
   *     (plus member ways needed for relation assembly) — batch and diff
   *     share one code path, like the reference shares its writer package;
@@ -33,10 +34,22 @@ import graft.sources.OsmXml.Bundle
   *  5. commit the new version (ST4) — crash-before-commit replays onto the
   *     previous committed version, which delete-then-insert makes safe.
   *
-  * At 100 TB the closure semi-joins shuffle only the changed-id sets
-  * (minutely diffs are ~10⁴ elements against ~10¹⁰) and the anti-joins
-  * broadcast them; the full-table rewrite per version becomes a
-  * Delta/Iceberg MERGE on real deployments — the dataflow is identical.
+  * Everything O(changed) lives on the driver, like the reference's keyed
+  * cache reads (cache/delta.go:162-198): the change file is collected
+  * once, the changed-id sets, the closure and the delete sets are Scala
+  * sets, their buckets come from [[StateStore.bucketOfId]], and each
+  * closure step is one bucket-pruned collect of the rows it needs. The
+  * rebuild then runs over local relations (the closure's ways, relations,
+  * coords and nodes), so a batch pays jobs for its store reads, the
+  * rebuild stages and the segment writes, not for id sets.
+  *
+  * What this asks of a batch: its change file and its closure rows fit in
+  * driver memory (O(changes + closure), never O(store)). The closure's
+  * rows are collected and rebuilt into frames on the driver, and each
+  * segment side is written by one task, so driver time grows with the
+  * closure: on a 4-core VM against a 1.2M-element store a 10⁴-change file
+  * applies in ~20 s and a 7.5×10⁴-change file in ~60 s (CHANGES.md).
+  * Hourly and daily diffs are larger and unmeasured.
   */
 object DiffPipeline {
 
@@ -200,271 +213,195 @@ object DiffPipeline {
     // apply is a fixed pipeline of small jobs, and which phase dominates is
     // invisible from outside (the bench only sees the total)
     val timing = sys.env.get("SPARK_GRAFT_DIFF_TIMING").contains("1")
-    var tPrev = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[diff] $phase ${(now - tPrev) / 1e9}%.1fs")
-      tPrev = now
+    def timed[T](label: String)(task: => T): T = {
+      val t0 = System.nanoTime()
+      val out = task
+      if (timing) System.err.println(
+        f"[diff] $label ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      out
     }
 
-    val d = diff.cache()
-    // the changed-id sets are localCheckpoint'd, not cached: every store
-    // write below embeds them (broadcast anti-joins), and a checkpointed
-    // leaf keeps those 30+ per-write plans shallow — with .cache() each
-    // write re-pays Catalyst analysis of the id sets' full lineage
-    val chN = d.filter(col("kind") === Kind.Node).select("id").distinct()
-      .localCheckpoint()
-    val chW = d.filter(col("kind") === Kind.Way).select("id").distinct()
-      .localCheckpoint()
-    val chR = d.filter(col("kind") === Kind.Relation).select("id").distinct()
-      .localCheckpoint()
-    // per-kind change counts (near-free: the sets are checkpointed): a
-    // kind with ZERO changes steps its element/reverse-index tables with
-    // writeUnchanged — no empty segments, no write jobs, no fold growth,
-    // no compaction drag for tables a batch never touched (r13, §2.4; a
-    // node-move-only minutely batch previously appended empty segments to
-    // ways/relations/wayrefs/relrefs EVERY batch)
-    val nN = chN.count(); val nW = chW.count(); val nR = chR.count()
+    import spark.implicits._
+    // the change file, gathered to the driver once; every frame built from
+    // it or from an id set is a local relation (see the header)
+    def local(schema: StructType, rows: Array[Row]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def idOf(r: Row): Long = r.getAs[Long]("id")
+    val changes = diff.collect()
+    val d = local(diff.schema, changes)
+    def changed(kind: Byte): Set[Long] = changes.iterator
+      .filter(_.getAs[Byte]("kind") == kind).map(idOf).toSet
+    val chN = changed(Kind.Node)
+    val chW = changed(Kind.Way)
+    val chR = changed(Kind.Relation)
+    def ids(s: Set[Long], name: String = "id"): DataFrame = s.toSeq.toDF(name)
+
+    // the batch's insert rows per element table (always delete, even for
+    // Create — the reference's idempotency trick, ST2)
+    val ins = OsmXml.bundleOf(d.filter(col("op") =!= Op.Delete))
 
     // -- 1. element tables: delete-then-insert as a merge-on-read SEGMENT ----
-    // write ONLY the batch's insert rows + delete-id tombstones (always
-    // delete, even for Create — the reference's idempotency trick, ST2);
-    // the store folds segments newest-wins at read time, so the version
-    // step's write volume is the batch itself, never a bucket rewrite
-    val insN = d.filter(col("kind") === Kind.Node && col("op") =!= Op.Delete)
-    def timed(label: String)(task: => Unit): () => Unit = () => {
-      val tw = System.nanoTime()
-      task
-      if (timing) System.err.println(
-        f"[diff]   write $label ${(System.nanoTime() - tw) / 1e9}%.1fs")
-    }
-    def stepOrWrite(changed: Long, name: String)(write: => Unit): Unit =
-      if (changed == 0) store.writeUnchanged(name, next, seq) else write
-    drainConcurrently(Seq(
-      timed("coords")(stepOrWrite(nN, "coords")(store.writeDelta("coords",
-        next, seq, insN.select("id", "lon", "lat"), chN, "id"))),
-      timed("nodes")(stepOrWrite(nN, "nodes")(store.writeDelta("nodes",
-        next, seq,
-        insN.filter(size(col("tags")) > 0).select("id", "lon", "lat", "tags"),
-        chN, "id"))),
-      timed("ways")(stepOrWrite(nW, "ways")(store.writeDelta("ways", next, seq,
-        d.filter(col("kind") === Kind.Way && col("op") =!= Op.Delete)
-          .select("id", "refs", "tags"),
-        chW, "id"))),
-      timed("relations")(stepOrWrite(nR, "relations")(store.writeDelta(
-        "relations", next, seq,
-        d.filter(col("kind") === Kind.Relation && col("op") =!= Op.Delete)
-          .select(col("id"),
-            expr("transform(members, m -> struct(m.id as id, m.mtype as type, m.role as role))")
-              .as("members"),
-            col("tags")),
-        chR, "id"))),
+    // write ONLY the batch's insert rows + delete-id tombstones; the store
+    // folds segments newest-wins at read time, so the version step's write
+    // volume is the batch itself, never a bucket rewrite. A kind with ZERO
+    // changes steps its element/reverse-index tables with writeUnchanged —
+    // no empty segments, no write jobs, no fold growth, no compaction drag
+    // for tables a batch never touched (r13, §2.4).
+    def stepOrWrite(changed: Set[Long], name: String)(write: => Unit): () => Unit =
+      () => timed(s"  write $name")(
+        if (changed.isEmpty) store.writeUnchanged(name, next, seq) else write)
+    val elementWrites = Seq(("coords", ins.coords, chN), ("nodes", ins.nodes, chN),
+        ("ways", ins.ways, chW), ("relations", ins.relations, chR)).map {
+      case (name, rows, changed) =>
+        stepOrWrite(changed, name)(store.writeDelta(name, next, seq, rows, ids(changed), "id"))
+    } ++ Seq(
       // reverse indexes (DiffCache): bucketed by the REFERENCED id,
       // tombstoned by the REFERRER — a changed way's old entries must
       // vanish whichever nodes they pointed at
-      timed("wayrefs")(stepOrWrite(nW, "wayrefs")(store.writeDelta("wayrefs",
-        next, seq,
-        d.filter(col("kind") === Kind.Way && col("op") =!= Op.Delete)
-          .select(col("id").as("way_id"), explode(col("refs")).as("id")),
-        chW.withColumnRenamed("id", "way_id"), "id",
-        tombstoneCol = Some("way_id")))),
-      timed("relrefs")(stepOrWrite(nR, "relrefs")(store.writeDelta("relrefs",
-        next, seq,
-        d.filter(col("kind") === Kind.Relation && col("op") =!= Op.Delete)
+      stepOrWrite(chW, "wayrefs")(store.writeDelta("wayrefs", next, seq,
+        ins.ways.select(col("id").as("way_id"), explode(col("refs")).as("id")),
+        ids(chW, "way_id"), "id", tombstoneCol = Some("way_id"))),
+      stepOrWrite(chR, "relrefs")(store.writeDelta("relrefs", next, seq,
+        ins.relations
           .select(col("id").as("rel_id"), explode(col("members")).as("m"))
-          .select(col("m.id").as("id"), col("m.mtype").as("ref_type"),
+          .select(col("m.id").as("id"), col("m.type").as("ref_type"),
             col("rel_id")),
-        chR.withColumnRenamed("id", "rel_id"), "id",
-        tombstoneCol = Some("rel_id"))))))
-    mark("element-writes")
+        ids(chR, "rel_id"), "id", tombstoneCol = Some("rel_id"))))
 
     // -- 2. dependency closure (J4) via the reverse indexes --------------------
-    // changed node → ways whose refs contain it, changed node/way →
-    // relations whose members reference them. The lookups read ONLY the
-    // changed ids' buckets of the maintained reverse indexes — O(changed)
-    // per batch, the reference's LevelDB reverse entries (cache/diff.go);
-    // before r9 this scanned every way and relation per minutely batch.
-    val bChN = store.bucketsOf(chN, "id")
-    val depW = store.readBuckets("wayrefs", next, bChN)
-      .join(broadcast(chN), Seq("id"), "left_semi")
-      .select(col("way_id").as("id"))
-      .union(chW).distinct().localCheckpoint()
-    val relsViaNodes = store.readBuckets("relrefs", next, bChN)
-      .filter(col("ref_type") === 0)
-      .join(broadcast(chN), Seq("id"), "left_semi")
-    val relsViaWays = store.readBuckets("relrefs", next,
-        store.bucketsOf(depW, "id"))
-      .filter(col("ref_type") === 1)
-      .join(broadcast(depW), Seq("id"), "left_semi")
-    val depR = relsViaNodes.select(col("rel_id").as("id"))
-      .union(relsViaWays.select(col("rel_id").as("id")))
-      .union(chR).distinct().localCheckpoint()
+    // Every step reads ONLY the buckets of its ids and collects the
+    // matching rows: O(changed) per batch, the reference's LevelDB reverse
+    // entries (cache/diff.go) and keyed element reads (cache/delta.go). An
+    // empty id set reads nothing. The steps read the PREVIOUS version and
+    // take this batch's own rows for the ids it changed — exactly the new
+    // version, so the closure needs none of the element writes and runs
+    // beside them.
+    def read(table: String, want: Set[Long], keep: Column): (Array[Row], StructType) = {
+      val df = store.readBuckets(table, seq, want.map(store.bucketOfId))
+      (if (want.isEmpty) Array.empty[Row] else df.filter(keep).collect(), df.schema)
+    }
+    def byId(want: Set[Long]): Column = isIn(col("id"), want)
+    // rows of an element table with an id in `want`, as of the new version
+    // (the batch's insert frames are local relations: collected without a job)
+    def fetch(table: String, inserted: DataFrame, want: Set[Long],
+        changedIds: Set[Long]): (Array[Row], DataFrame) = {
+      val (prev, schema) = read(table, want -- changedIds, byId(want -- changedIds))
+      val rows = if (want.isEmpty) prev
+        else prev ++ inserted.collect().filter(r => want(idOf(r)))
+      (rows, local(schema, rows))
+    }
+    def memberIds(rels: Array[Row], mtype: Int): Set[Long] = rels.iterator
+      .flatMap(_.getAs[collection.Seq[Row]]("members"))
+      .filter(_.getAs[Number]("type").intValue == mtype).map(idOf).toSet
+    def closure(): (Set[Long], Set[Long], Bundle, Bundle) = {
+      // a changed way's or relation's own reverse entries can only name
+      // itself, so the previous version's entries, joined with the changed
+      // sets, are the new version's
+      val depW = chW ++ read("wayrefs", chN, byId(chN))._1.map(_.getAs[Long]("way_id"))
+      val depR = chR ++ read("relrefs", chN ++ depW,
+        (col("ref_type") === 0 && byId(chN)) || (col("ref_type") === 1 && byId(depW))
+      )._1.map(_.getAs[Long]("rel_id"))
+      // the rebuild's rows: driver relations, their member ways plus the
+      // dependent ways, then the coords and nodes those reference
+      val (relRows, driverRels) = fetch("relations", ins.relations, depR, chR)
+      val rebuildW = depW ++ memberIds(relRows, 1)
+      val (wayRows, waysR) = fetch("ways", ins.ways, rebuildW, chW)
+      val coordIds = wayRows.iterator.flatMap(_.getAs[collection.Seq[Long]]("refs")).toSet ++
+        memberIds(relRows, 0)
+      val (coordRows, coords) = fetch("coords", ins.coords, coordIds, chN)
+      val (nodeRows, nodes) = fetch("nodes", ins.nodes, coordIds ++ chN, chN)
+      // coords touched by THIS batch resolve at full precision (reference
+      // LRU-bunch artifact — see ImportPipeline.projectXY)
+      val freshCoords = local(coords.schema.add("fresh", BooleanType, nullable = false),
+        coordRows.map(r => Row.fromSeq(r.toSeq :+ chN(idOf(r)))))
+      def nodesIn(want: Set[Long]): DataFrame =
+        local(nodes.schema, nodeRows.filter(r => want(idOf(r))))
+      // member-tag resolution sees every node and relation a rebuilt
+      // relation's members name, changed in this batch or not (reference
+      // writer/relations.go:216-251 resolves from the whole cache)
+      val resolve = Bundle(coords = freshCoords, nodes = nodesIn(coordIds), ways = waysR,
+        relations = fetch("relations", ins.relations, memberIds(relRows, 2), chR)._2)
+      (rebuildW, depR, Bundle(coords = freshCoords, nodes = nodesIn(chN),
+        ways = waysR, relations = driverRels), resolve)
+    }
 
     // -- 3. rebuild the closure through the shared import pipeline ------------
-    // element rows fetched by id through the bucketed store (random-read
-    // analog of cache/delta.go) — never a full element-table scan
-    val driverRels = store.readBuckets("relations", next,
-        store.bucketsOf(depR, "id"))
-      .join(broadcast(depR), Seq("id"), "left_semi")
-    val memberWayIds = driverRels
-      .select(explode(col("members")).as("m"))
-      .filter(col("m.type") === 1)
-      .select(col("m.id").as("id")).distinct()
-    val rebuildW = depW.union(memberWayIds).distinct().localCheckpoint()
-    val waysR = store.readBuckets("ways", next,
-        store.bucketsOf(rebuildW, "id"))
-      .join(broadcast(rebuildW), Seq("id"), "left_semi")
-    // bucket-pruned coord resolution (the store-side J1, reference analog:
-    // random reads against the ID-sorted LevelDB coords cache,
-    // cache/delta.go:162-198): the rebuild closure needs only (a) the refs
-    // of its ways and (b) the node members of its driver relations — read
-    // ONLY those ids' buckets of the coords state instead of scanning all
-    // of it. At planet scale a minutely batch touches ~10² of ~3k buckets,
-    // so this is the difference between a full multi-billion-row coords
-    // scan per diff and an O(changed) one; the pruned read also keeps the
-    // assembly join's probe side small enough that AQE broadcasts the
-    // exploded refs.
-    val neededCoordIds = waysR.select(explode(col("refs")).as("id"))
-      .union(driverRels.select(explode(col("members")).as("m"))
-        .filter(col("m.type") === 0).select(col("m.id").as("id")))
-    val bCoord = store.bucketsOf(neededCoordIds, "id")
-    mark("closure")
-    // coords touched by THIS batch resolve at full precision (reference
-    // LRU-bunch artifact — see ImportPipeline.projectXY)
-    val freshCoords = store.readBuckets("coords", next, bCoord).join(
-      broadcast(chN.withColumn("fresh", lit(true))), Seq("id"), "left")
-      .withColumn("fresh", coalesce(col("fresh"), lit(false)))
-    val bundleR = Bundle(
-      coords = freshCoords,
-      nodes = store.readBuckets("nodes", next, bChN)
-        .join(broadcast(chN), Seq("id"), "left_semi"),
-      ways = waysR,
-      relations = driverRels)
-    // member-tag / sub-relation resolution sees the FULL maintained state
-    // (reference writer/relations.go:216-251 resolves from the whole
-    // cache). The node side joins against the already-pruned coords, so
-    // its read is pruned to the same buckets; relations (the smallest
-    // element table) stay a full read — sub-relation members can point
-    // anywhere.
-    val resolveBundle = Bundle(
-      coords = freshCoords,
-      nodes = store.readBuckets("nodes", next, bCoord),
-      ways = waysR,
-      relations = store.read("relations", next))
-    val pipeline = new ImportPipeline(spark, mapping, srid,
-      truncateLineage = true)
-    val delta = pipeline.run(bundleR, resolve = Some(resolveBundle))
-    val genDelta = Generalize(spark, mapping, delta)
-
     // -- 4. output tables: delete mangled closure ids, append delta -----------
-    val single = mapping.conf.singleIdSpace
-    val wDel = rebuildW.select(
-      (if (single) -col("id") else col("id")).cast("long").as("osm_id"))
-    val rDel = depR.select(
-      (if (single) lit(Ids.RelIDOffset) - col("id") else -col("id"))
-        .cast("long").as("osm_id"))
-    val nDel = chN.select(col("id").cast("long").as("osm_id"))
-    // closure sizes (checkpointed, near-free): an output table whose whole
-    // delete set is empty can have no delta rows either (rebuilt rows are
-    // driven by the closure), so it steps with writeUnchanged like the
-    // element tables above
-    val nWDel = rebuildW.count()
-    val nRDel = depR.count()
-    def changedFor(tableType: String): Long = tableType match {
-      case TableType.Point => nN
-      case TableType.LineString | TableType.Polygon => nWDel + nRDel
-      case TableType.Geometry => nN + nWDel + nRDel
-      case TableType.Relation | TableType.RelationMember => nRDel
-      case other => throw new IllegalArgumentException(other)
-    }
-    def deleteIdsFor(tableType: String): DataFrame = tableType match {
-      case TableType.Point => nDel
-      case TableType.LineString => wDel.union(rDel)
-      case TableType.Polygon => wDel.union(rDel)
-      case TableType.Geometry => nDel.union(wDel).union(rDel)
-      case TableType.Relation | TableType.RelationMember => rDel
-      case other => throw new IllegalArgumentException(other)
-    }
-    // each output-table version is likewise a SEGMENT: tombstones = the
+    // Each output-table version is likewise a SEGMENT: tombstones = the
     // mangled closure ids, inserts = the rebuilt delta (a subset of the
-    // tombstoned ids by construction — rows are driven by the closure)
-    // delete-id buckets, needed only for the ST5 old-geometry read below
-    lazy val bNDel = store.bucketsOf(nDel, "osm_id")
-    lazy val bWDel = store.bucketsOf(wDel, "osm_id")
-    lazy val bRDel = store.bucketsOf(rDel, "osm_id")
-    def bucketsFor(tableType: String): Set[Long] = tableType match {
-      case TableType.Point => bNDel
-      case TableType.LineString | TableType.Polygon => bWDel ++ bRDel
-      case TableType.Geometry => bNDel ++ bWDel ++ bRDel
-      case TableType.Relation | TableType.RelationMember => bRDel
-      case other => throw new IllegalArgumentException(other)
-    }
-    val expireGeoms = Seq.newBuilder[DataFrame]
-    val outWrites = Seq.newBuilder[() => Unit]
-    for ((name, t) <- mapping.conf.tables) {
-      val idc = idColName(t)
-      val del = deleteIdsFor(t.tableType).withColumnRenamed("osm_id", idc)
-      outWrites += (() => {
-        val tw = System.nanoTime()
-        if (changedFor(t.tableType) == 0) store.writeUnchanged(tbl(name), next, seq)
-        else store.writeDelta(tbl(name), next, seq, delta(name), del, idc)
-        if (timing) System.err.println(
-          f"[diff]   write $name ${(System.nanoTime() - tw) / 1e9}%.1fs")
-      })
-      // ST5 inputs: OLD geometries of replaced/deleted rows (the reference
+    // tombstoned ids by construction — rows are driven by the closure), so
+    // a table whose delete set is empty steps with writeUnchanged. Output
+    // tables are disjoint from the element tables, so this runs beside the
+    // element writes too; the version commits once both are done.
+    def rebuild(): Unit = {
+      val (rebuildW, depR, bundle, resolve) = timed("closure")(closure())
+      val single = mapping.conf.singleIdSpace
+      val wDel = rebuildW.map(Ids.wayId(_, single))
+      val rDel = depR.map(Ids.relId(_, single))
+      def deleteIdsFor(tableType: String): Set[Long] = tableType match {
+        case TableType.Point => chN
+        case TableType.LineString | TableType.Polygon => wDel ++ rDel
+        case TableType.Geometry => chN ++ wDel ++ rDel
+        case TableType.Relation | TableType.RelationMember => rDel
+        case other => throw new IllegalArgumentException(other)
+      }
+      val pipeline = new ImportPipeline(spark, mapping, srid)
+      val delta = timed("rebuild-stages") {
+        val delta = pipeline.run(bundle, resolve = Some(resolve))
+        // force the shared rebuild caches ONCE, so the concurrent table
+        // writes below only consume them and never duplicate the work
+        pipeline.materializeStages()
+        delta
+      }
+      timed("output-writes")(drainConcurrently(
+        (delta ++ Generalize(spark, mapping, delta)).toSeq.map { case (name, rows) =>
+          val idc = idColFor(mapping, name)
+          val del = deleteIdsFor(confOf(mapping, name).tableType)
+          () => timed(s"  write $name")(
+            if (del.isEmpty) store.writeUnchanged(tbl(name), next, seq)
+            else store.writeDelta(tbl(name), next, seq, rows, ids(del, idc), idc))
+        }))
+
+      // ST5: expire-tiles side output — every geometry touched by this
+      // batch: the OLD geometries of replaced/deleted rows (the reference
       // expires via its deleter, update/deleter.go) plus the rebuilt ones
-      if (expireDir.nonEmpty && t.tableType != TableType.Relation &&
-        t.tableType != TableType.RelationMember) {
-        geomColName(t).foreach { gc =>
-          expireGeoms += store.readBuckets(tbl(name), seq, bucketsFor(t.tableType))
-            .join(broadcast(del), Seq(idc), "left_semi")
-            .select(col(gc).as("geometry"))
-          expireGeoms += delta(name).select(col(gc).as("geometry"))
+      expireDir.foreach { dir =>
+        val geoms = for {
+          (name, t) <- mapping.conf.tables.toSeq
+          if t.tableType != TableType.Relation && t.tableType != TableType.RelationMember
+          gc <- geomColName(t).toSeq
+          del = deleteIdsFor(t.tableType)
+          if del.nonEmpty
+          g <- Seq(
+            store.readBuckets(tbl(name), seq, del.map(store.bucketOfId))
+              .filter(isIn(col(idColName(t)), del)),
+            delta(name))
+        } yield g.select(col(gc).as("geometry"))
+        if (geoms.nonEmpty) {
+          val tiles = graft.operators.ExpireTiles.expire(
+            geoms.reduce(_ unionByName _).filter(col("geometry").isNotNull),
+            maxZoom = expireZoom)
+          graft.operators.ExpireTiles.writeTiles(tiles, s"$dir/$next")
         }
       }
-    }
-    // generalized tables: keyed refresh from the delta (ST6); columns are
-    // inherited from the root source table's conf
-    for ((name, g) <- mapping.conf.generalizedTables) {
-      val rc = rootConf(mapping, g.source)
-      val idc = idColName(rc)
-      val del = deleteIdsFor(rc.tableType).withColumnRenamed("osm_id", idc)
-      outWrites += (() => {
-        val tw = System.nanoTime()
-        if (changedFor(rc.tableType) == 0) store.writeUnchanged(tbl(name), next, seq)
-        else store.writeDelta(tbl(name), next, seq, genDelta(name), del, idc)
-        if (timing) System.err.println(
-          f"[diff]   write gen:$name ${(System.nanoTime() - tw) / 1e9}%.1fs")
-      })
-    }
-    // force the shared rebuild caches ONCE, then drain every output-table
-    // write concurrently: the writes only consume the cached stages, so
-    // concurrency can't duplicate the closure computation, and the batch
-    // stops paying one job latency per output table
-    pipeline.materializeStages()
-    mark("rebuild-stages")
-    drainConcurrently(outWrites.result())
-    mark("output-writes")
-
-    // ST5: expire-tiles side output — every geometry touched by this batch
-    expireDir.foreach { dir =>
-      val geoms = expireGeoms.result()
-      if (geoms.nonEmpty) {
-        val tiles = graft.operators.ExpireTiles.expire(
-          geoms.reduce(_ unionByName _).filter(col("geometry").isNotNull),
-          maxZoom = expireZoom)
-        graft.operators.ExpireTiles.writeTiles(tiles, s"$dir/$next")
-      }
+      pipeline.unpersistAll()
     }
 
-    pipeline.unpersistAll()
+    drainConcurrently(Seq(
+      () => timed("element-writes")(drainConcurrently(elementWrites)),
+      () => rebuild()))
     if (commit) store.commit(next)
-    Seq(d, chN, chW, chR, depW, depR, rebuildW).foreach(_.unpersist())
     if (!buildViews) return Map.empty
-    val views = viewsOf(store, mapping, next)
-    mark("result-views")
-    views
+    timed("result-views")(viewsOf(store, mapping, next))
   }
+
+  /** `c` is in the driver-side id set `want`. A UDF, not a literal IN
+    * list: Spark pushes an IN list into every Parquet file's reader,
+    * serializing the whole set per file (seconds per read at 10⁴ ids over
+    * 256 buckets), while the UDF's set ships once, in the stage's task
+    * binary. Bucket pruning already narrows the files. */
+  private def isIn(c: Column, want: Set[Long]): Column =
+    udf((id: Long) => want(id)).apply(c)
 
   // id/geometry columns are whatever the mapping names them (colType is
   // the authority, not the default "osm_id"/"geometry" spellings)
@@ -475,10 +412,13 @@ object DiffPipeline {
     t.columns.find(c =>
       c.colType == "geometry" || c.colType == "validated_geometry").map(_.name)
 
-  /** The id column of a base or generalized table (generalized tables
-    * inherit the root source table's columns). */
+  /** The conf of a base table, or of a generalized table's root source
+    * table (generalized tables inherit its columns). */
+  private def confOf(mapping: CompiledMapping, name: String): TableConf =
+    mapping.conf.tables.getOrElse(name, rootConf(mapping, name))
+
   private def idColFor(mapping: CompiledMapping, name: String): String =
-    idColName(mapping.conf.tables.getOrElse(name, rootConf(mapping, name)))
+    idColName(confOf(mapping, name))
 
   private def rootConf(mapping: CompiledMapping, source: String): TableConf = {
     var src = source

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Versioned parquet state for incremental maintenance (SURVEY.md §2 ST3/ST4).
@@ -140,11 +141,13 @@ final class StateStore(spark: SparkSession, dir: String) {
 
   def bucketOf(idCol: Column): Column = pmod(xxhash64(idCol), lit(nBuckets.toLong))
 
-  /** Distinct buckets of an id frame (driver-side control plane: diff id
-    * sets are ~10⁴ rows). */
-  def bucketsOf(ids: DataFrame, idCol: String): Set[Long] =
-    ids.select(bucketOf(col(idCol)).as("b")).distinct()
-      .collect().map(_.getLong(0)).toSet
+  /** [[bucketOf]] of one LONG id, computed on the driver: the same
+    * `xxhash64` (seed 42) and `pmod` the writer partitions by, so a diff's
+    * changed-id sets map to the buckets to prune to without a Spark job. */
+  def bucketOfId(id: Long): Long = {
+    val r = XXH64.hashLong(id, 42L) % nBuckets
+    if (r < 0) r + nBuckets else r
+  }
 
   // ---- sequencing -----------------------------------------------------------
 
@@ -262,19 +265,20 @@ final class StateStore(spark: SparkSession, dir: String) {
     mergedView(name, seq, Some(buckets))
 
   /** The merge-on-read fold: base buckets (file-pruned to `only` when
-    * given) unioned with every delta segment's inserts, with a row hidden
-    * when ANY LATER segment tombstones its id — one broadcast anti-join
-    * with an (id-equi + ordinal) condition; tombstones are batch-sized, so
-    * the broadcast is bounded by MaxSegments × batch size.
+    * given) and every delta segment's inserts, with a row hidden when ANY
+    * LATER segment tombstones its id — one broadcast anti-join with an
+    * (id-equi + ordinal) condition; tombstones are batch-sized, so the
+    * broadcast is bounded by MaxSegments × batch size.
     *
-    * Segment scans (r13, guide §2.4/§6): writeDelta stamps each segment's
-    * fold ordinal into the files (`__ord`/`__tord` columns), so ALL
-    * segments of a table read as ONE parquet scan instead of one
-    * scan + union per segment. A long-running diff stream accumulates up
-    * to maxSegments segments per table, and every closure/rebuild read of
-    * every table paid N file indexes + an N-way union per view — measured
-    * as the per-batch wall growing 4.1 s → 12.4 s (closure) across one
-    * 8-batch compaction cycle of the soak. */
+    * One scan (r13, guide §2.4/§6): writeDelta stamps each segment's fold
+    * ordinal into the files (`__ord`/`__tord` columns), and base files,
+    * which have no `__ord`, read it as null, i.e. ordinal 0. So the base
+    * and ALL segments of a table read as ONE parquet scan under one
+    * broadcast of the tombstones: two jobs per view, whatever the segment
+    * count. Per-segment scans grew the soak's per-batch wall 4.1 s →
+    * 12.4 s (closure) across one 8-batch compaction cycle, and a separate
+    * base scan made the optimizer split the anti-join over the union,
+    * broadcasting the same tombstones twice. */
   private def mergedView(name: String, seq: Long, only: Option[Set[Long]]): DataFrame = {
     val m = readManifest(name, seq)
     val base = new Path(root, name)
@@ -287,17 +291,18 @@ final class StateStore(spark: SparkSession, dir: String) {
       case Some(bs) => m.buckets.filter { case (b, _) => bs(b) }
       case None => m.buckets
     }).values.toSeq.distinct
-    val baseDf = rd(m.schema, bucketPaths)
-    if (m.segments.isEmpty) return baseDf
+    if (m.segments.isEmpty) return rd(m.schema, bucketPaths)
     val idCol = m.segments.head.idCol
     val tombCol = m.segments.head.tombCol
     def stamped(fields: Seq[StructField], ordCol: String): StructType =
       StructType(fields :+ StructField(ordCol, LongType))
-    val inserts = rd(stamped(m.schema.fields, "__ord"), m.segments.map(_.ins))
-    val withOrd = baseDf.withColumn("__ord", lit(0L)).unionByName(only match {
-      case Some(bs) => inserts.filter(bucketOf(col(idCol)).isInCollection(bs))
-      case None => inserts
-    })
+    val rows = rd(stamped(m.schema.fields, "__ord"), bucketPaths ++ m.segments.map(_.ins))
+      .withColumn("__ord", coalesce(col("__ord"), lit(0L)))
+    // segment inserts are not bucketed: prune them to `only` by id
+    val withOrd = only match {
+      case Some(bs) => rows.filter(col("__ord") === 0L || bucketOf(col(idCol)).isInCollection(bs))
+      case None => rows
+    }
     val tombs = rd(stamped(Seq(m.schema(tombCol)), "__tord"), m.segments.map(_.del))
       .withColumnRenamed(tombCol, "__tid")
     withOrd.join(broadcast(tombs),
@@ -425,12 +430,15 @@ final class StateStore(spark: SparkSession, dir: String) {
       // compaction clears the list) so every later read folds ALL
       // segments in one scan (see mergedView). lit() columns cost nothing
       // in the write and make the read O(1) scans instead of O(segments).
+      // A segment is batch-sized, so each side is ONE file however the
+      // caller's frame is split (a driver-local frame spans every core).
       val ord = m.segments.size + 1L
-      val ins = if (sortWithin.isEmpty) inserts
-        else inserts.sortWithinPartitions(sortWithin.map(col): _*)
+      val one = inserts.coalesce(1)
+      val ins = if (sortWithin.isEmpty) one
+        else one.sortWithinPartitions(sortWithin.map(col): _*)
       ins.withColumn("__ord", lit(ord))
         .write.mode("overwrite").parquet(s"$vdir/ins")
-      deleteIds.select(col(tc)).withColumn("__tord", lit(ord))
+      deleteIds.select(col(tc)).withColumn("__tord", lit(ord)).coalesce(1)
         .write.mode("overwrite").parquet(s"$vdir/del")
       writeManifest(name, seq, m.schema, m.buckets,
         m.segments :+ Segment(idCol, tc, s"v$seq/ins", s"v$seq/del"))

@@ -147,26 +147,4 @@ class OperatorPropertiesSpec extends SparkSpecBase {
       assert(got == want)
     }
   }
-
-  test("salted join equals plain join on random skew profiles") {
-    val gen = for {
-      hotShare <- Gen.chooseNum(0, 90)
-      nBig <- Gen.chooseNum(50, 300)
-      salts <- Gen.oneOf(2, 8, 17)
-    } yield (hotShare, nBig, salts)
-
-    forAllSeeded(gen, n = 8) { case (hotShare, nBig, salts) =>
-      val bigRows = (0 until nBig).map { i =>
-        val k = if (i * 100 / nBig < hotShare) 3L else (i % 11).toLong
-        (k, i.toLong)
-      }
-      val big = bigRows.toDF("k", "payload")
-      val dim = (0L until 11L).map(k => (k, s"d$k")).toDF("k", "tag")
-      val plain = big.join(dim, Seq("k"))
-        .select("k", "payload", "tag").collect().map(_.toSeq).toSet
-      val salted = SkewJoin.salted(big, dim, Seq("k"), salts)
-        .select("k", "payload", "tag").collect().map(_.toSeq).toSet
-      assert(salted == plain && plain.size == nBig)
-    }
-  }
 }

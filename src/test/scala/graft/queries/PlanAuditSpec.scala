@@ -225,11 +225,11 @@ class PlanAuditSpec extends SparkSpecBase {
     // the fourth AQE gate beside bloom/DPP/coalescing: when one reducer
     // partition of a shuffle join dwarfs the median, OptimizeSkewedJoin
     // splits it into advisory-sized chunks and replicates the other side —
-    // the engine-native cure for hot keys that SkewJoin.salted only
-    // hand-rolls for the cases AQE can't see. Thresholds are lowered to
-    // fire on a test-sized build; the gate pins that a 90%-hot key is
-    // detected and split, so a conf regression (or an accidental
-    // skewJoin.enabled=false) fails here instead of in a fleet profile.
+    // the engine-native cure for hot keys, with no hand-rolled salting.
+    // Thresholds are lowered to fire on a test-sized build; the gate pins
+    // that a 90%-hot key is detected and split, so a conf regression (or
+    // an accidental skewJoin.enabled=false) fails here instead of in a
+    // fleet profile.
     import org.apache.spark.sql.functions._
     // NOTE: isolated session — graft.Main's builder applies its own
     // shuffle.partitions to the shared session via getOrCreate when

@@ -58,7 +58,7 @@ class BucketPruneSpec extends SparkSpecBase {
     ins(4, Seq.empty, Seq(3L))
     assert(rows(4) == Seq((1L, "A"), (2L, "B"), (4L, "d")))
     // bucket-pruned read folds segments for the requested ids too
-    val bs = store.bucketsOf(Seq(Tuple1(2L)).toDF("id"), "id")
+    val bs = Set(store.bucketOfId(2L))
     assert(store.readBuckets("t", 4, bs).filter("id = 2")
       .head().getString(1) == "B")
     // the fold's tombstone anti-join must plan as a broadcast HASH join
@@ -69,17 +69,16 @@ class BucketPruneSpec extends SparkSpecBase {
       !plan.contains("BroadcastNestedLoopJoin"),
       s"segment fold must be a broadcast hash anti-join:\n$plan")
     // r13 single-scan fold: however many stamped segments accumulate, the
-    // insert side of the fold is ONE parquet scan (the files carry their
-    // own __ord), not one scan per segment — the per-batch read cost of a
-    // long diff stream must not grow with the segment count. v2 holds TWO
-    // segments; the plan has base + all-ins + the del scan (duplicated
-    // once by the optimizer splitting the anti-join over the union) = 4
-    // scans, a CONSTANT in the segment count (legacy folds planned
-    // 2 + 2·segments).
+    // base and every segment's inserts are ONE parquet scan (segment files
+    // carry their own __ord, base files read it as null = 0), not one scan
+    // per segment — the per-batch read cost of a long diff stream must not
+    // grow with the segment count. v2 holds TWO segments; the plan has the
+    // rows scan + the del scan = 2 scans, a CONSTANT in the segment count
+    // (legacy folds planned 2 + 2·segments; a base ∪ inserts union, 4).
     val plan2 = store.read("t", 2).queryExecution.executedPlan.toString
     val scans = "Scan parquet".r.findAllIn(plan2).size
-    assert(scans <= 4,
-      s"stamped segments must fold as one scan (got $scans, expected ≤4 " +
+    assert(scans <= 2,
+      s"stamped segments must fold as one scan (got $scans, expected ≤2 " +
         s"independent of segment count):\n$plan2")
     // a no-op version step carries the table forward without a new
     // segment: same rows, no v5 segment dirs, no extra fold level
@@ -115,7 +114,7 @@ class BucketPruneSpec extends SparkSpecBase {
     Files.delete(Paths.get(ranged, "buckets.txt"))
     Files.write(bits, "20".getBytes("UTF-8"))
     val old = new StateStore(spark, ranged)
-    refused(bits)(old.bucketsOf(Seq(Tuple1(2L)).toDF("id"), "id"))
+    refused(bits)(old.bucketOfId(2L))
     refused(bits)(old.readBuckets("t", 1, Set(0L)))
     // unstamped segment: the pre-r13 manifest tag
     val (unstamped, s) = store("seg")
@@ -127,6 +126,34 @@ class BucketPruneSpec extends SparkSpecBase {
     Files.delete(manifest.resolveSibling("._manifest.crc"))
     refused(manifest)(s.read("t", 1))
     refused(manifest)(s.writeUnchanged("t", 2, 1))
+  }
+
+  test("bucketOfId on the driver equals the writer's bucketOf column for " +
+      "any id and bucket count") {
+    // the diff prunes every read to the buckets bucketOfId names, so a
+    // driver/writer disagreement would silently read the wrong buckets.
+    // ScalaCheck ids under fixed seeds (the build has no scalatestplus),
+    // evaluated through an RDD-backed frame so the column runs the
+    // executors' generated code, as in the bucketed write
+    import org.apache.spark.sql.functions.col
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    val anyId = Gen.oneOf(Gen.long, Gen.chooseNum(-4096L, 4096L))
+    val ids = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue) ++
+      (1 to 8).flatMap(i => Gen.listOfN(64, anyId)
+        .pureApply(Gen.Parameters.default, Seed(i.toLong)))
+    val frame = spark.sparkContext.parallelize(ids, 4).toDF("id")
+    for (n <- Seq(1, 4, 64, 1024)) {
+      val store = new StateStore(spark,
+        Files.createTempDirectory(s"graft-bucket-parity-$n").toString)
+      store.setHashBuckets(n)
+      val written = frame.select(col("id"), store.bucketOf(col("id")))
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      val wrong = written.filter { case (id, b) => store.bucketOfId(id) != b }
+      assert(written.length == ids.size && wrong.isEmpty,
+        s"$n buckets: driver and writer disagree on ${wrong.take(5).toSeq}")
+    }
   }
 
   test("a small diff appends a delta segment, never rewrites base buckets") {
