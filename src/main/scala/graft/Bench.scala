@@ -428,6 +428,11 @@ object Bench {
         expr("transform(members, m -> struct(m.id as id, m.type as mtype, m.role as role))")))
   }
 
+  /** The basis of the diff and soak sections' apply times: the apply
+    * alone. Records made before this basis also timed building the ~30
+    * result-table views per apply (1–2 s), which these sections discard. */
+  private val ApplyBasis = "apply only, no result-table views built"
+
   /** Diff-apply at one store size: a diff-ready init (min of `initReps`,
     * each from a deleted store), then `applyDiff` of a ~1% node-move batch
     * and of a mixed batch, re-applied onto the same committed version
@@ -462,7 +467,8 @@ object Bench {
       Record(Seq(s"osm_diff_init$s" -> init.values.min, s"osm_diff_apply$s" -> applies.values.min,
         s"osm_diff_apply_mixed$s" -> mixes.values.min),
         // meter arrays: init reps, then apply reps, then mixed reps
-        Seq(s"osm_diff$s" -> (s"""{"copies":${r.copies},"changed":${nodes.count()},""" +
+        Seq(s"osm_diff$s" -> (s"""{"basis":"$ApplyBasis","copies":${r.copies},""" +
+          s""""changed":${nodes.count()},""" +
           s""""changed_mixed":${mixed.count()},"init_reps":${arr(init.values)},""" +
           s""""apply_reps":${arr(applies.values)},"mixed_reps":${arr(mixes.values)},""" +
           s"""${(init ++ applies ++ mixes).json}}""")))
@@ -505,7 +511,8 @@ object Bench {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(files).sum else 1L
     Record(Seq("osm_diff_soak_total" -> times.sum, "osm_diff_soak_first10_med" -> first10,
       "osm_diff_soak_last10_med" -> last10),
-      Seq("osm_soak" -> (s"""{"batches":${r.batches},"first10_med":${fmt(first10)},""" +
+      Seq("osm_soak" -> (s"""{"basis":"$ApplyBasis","batches":${r.batches},""" +
+        s""""first10_med":${fmt(first10)},""" +
         s""""last10_med":${fmt(last10)},"ratio":${fmt(last10 / first10)},""" +
         s""""store_files":${files(new java.io.File(state))},${run.json}}""")))
   }

@@ -517,14 +517,10 @@ object Main {
   }
 
   private def runQueryCache(spark: SparkSession, a: Args): Unit = {
-    val store = new StateStore(spark, a.required("cachedir"))
-    val seq = store.currentSeq
-    require(seq >= 0, s"no committed state under ${a.required("cachedir")}")
-    val b = OsmXml.Bundle(
-      coords = store.read("coords", seq),
-      nodes = store.read("nodes", seq),
-      ways = store.read("ways", seq),
-      relations = store.read("relations", seq))
+    val cachedir = a.required("cachedir")
+    val seq = new StateStore(spark, cachedir).currentSeq
+    require(seq >= 0, s"no committed state under $cachedir")
+    val b = DiffPipeline.storedBundleAt(spark, cachedir, seq)
     def ids(flag: String): Seq[Long] =
       a.str(flag).toSeq.flatMap(_.split(",")).map(_.trim.toLong)
     val frames = Seq(

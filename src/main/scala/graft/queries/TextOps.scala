@@ -3266,13 +3266,11 @@ object TextOps {
   }
 
   // -- incremental (cross-snapshot) MinHash dedup -----------------------------
-  // The BATCH spelling of streaming.StreamingDedup.applyBatch, value-gated
-  // where the streaming path can only be suite-gated: an incoming batch
-  // (doc_id % 10 == 9 — an sf-independent split) is deduped against the
-  // accepted corpus AND itself. Same family, same candidate rule (shared
-  // LSH band vs state, id-ordered within the batch), same exact-Jaccard
-  // ≥ 0.7 verify, same keep-best decision (jaccard desc, earliest old id).
-  // Scale shape mirrors stateCandidates: the small batch side BROADCASTS,
+  // An incoming batch (doc_id % 10 == 9 — an sf-independent split) is
+  // deduped against the accepted corpus AND itself: a candidate shares an
+  // LSH band with the state or with an earlier-id batch doc, passes the
+  // exact-Jaccard ≥ 0.7 verify, and keeps the best match (jaccard desc,
+  // earliest old id). Scale shape: the small batch side BROADCASTS,
   // so the accepted-corpus band index is scanned in place and never
   // shuffled — per-batch cost O(batch + matches), not O(|state|).
   private def dedupIncremental(s: SparkSession, dir: String): DataFrame = {

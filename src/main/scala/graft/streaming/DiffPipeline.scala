@@ -82,6 +82,18 @@ object DiffPipeline {
     Option(errors.peek()).foreach(e => throw e)
   }
 
+  /** Run `task`; with SPARK_GRAFT_DIFF_TIMING=1, print its wall time on
+    * stderr as `[scope] label`. Init and apply are fixed pipelines of small
+    * jobs, and which phase dominates is invisible from outside (the bench
+    * only sees the total). */
+  private def timed[T](scope: String, label: String)(task: => T): T = {
+    val t0 = System.nanoTime()
+    val out = task
+    if (sys.env.get("SPARK_GRAFT_DIFF_TIMING").contains("1")) System.err.println(
+      f"[$scope] $label ${(System.nanoTime() - t0) / 1e9}%.1fs")
+    out
+  }
+
   /** Initial import: write element state + all output tables as v0, all
     * hash-bucketed by id so later diffs rewrite only touched buckets.
     * `nBuckets` is fixed for the store's life; size it so a bucket is
@@ -96,19 +108,12 @@ object DiffPipeline {
         graft.operators.WayAssembly.resolve): Map[String, DataFrame] = {
     val store = new StateStore(spark, stateDir)
     store.setHashBuckets(nBuckets)
-    val timing = sys.env.get("SPARK_GRAFT_DIFF_TIMING").contains("1")
-    var tPrev = System.nanoTime()
-    def mark(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[init] $phase ${(now - tPrev) / 1e9}%.1fs")
-      tPrev = now
-    }
     // startSeq > 0 re-inits on top of an existing store (`-appendcache`):
     // writing a NEW version while the merged bundle lazily reads the old
     // one keeps the read and write paths disjoint.
     // All four element writes read the one cached raw-element frame, so
     // they drain concurrently without duplicating the parse
-    drainConcurrently(Seq(
+    timed("init", "element-writes")(drainConcurrently(Seq(
       () => store.writeBucketed("coords", startSeq, bundle.coords, "id"),
       () => store.writeBucketed("nodes", startSeq, bundle.nodes, "id"),
       () => store.writeBucketed("ways", startSeq, bundle.ways, "id"),
@@ -125,40 +130,35 @@ object DiffPipeline {
         bundle.relations
           .select(col("id").as("rel_id"), explode(col("members")).as("m"))
           .select(col("m.id").as("id"), col("m.type").as("ref_type"),
-            col("rel_id")), "id")))
-    mark("element-writes")
-    val stored = storedBundle(store, startSeq)
+            col("rel_id")), "id"))))
     val pipeline = new ImportPipeline(spark, mapping, srid, limit,
       assembler = assembler)
-    val tables = pipeline.run(stored)
-    val gens = Generalize(spark, mapping, tables)
-    // force the shared stage caches once, then drain the ~30 output-table
-    // writes concurrently (same reasoning as applyDiff's drain: each write
-    // is a small job and sequential writes pay one job latency per table)
-    pipeline.materializeStages()
-    mark("stages")
-    drainConcurrently((tables ++ gens).toSeq.map { case (n, df) =>
+    val outputs = timed("init", "stages") {
+      val tables = pipeline.run(storedBundle(store, startSeq))
+      val gens = Generalize(spark, mapping, tables)
+      // force the shared stage caches once, then drain the ~30 output-table
+      // writes concurrently (same reasoning as applyDiff's drain: each write
+      // is a small job and sequential writes pay one job latency per table)
+      pipeline.materializeStages()
+      tables ++ gens
+    }
+    timed("init", "table-writes")(drainConcurrently(outputs.toSeq.map { case (n, df) =>
       () => store.writeBucketed(tbl(n), startSeq, df, idColFor(mapping, n))
-    })
-    mark("table-writes")
+    }))
     pipeline.unpersistAll()
     store.commit(startSeq)
     readTables(spark, mapping, stateDir)
   }
 
-  /** Current committed output tables (base + generalized). */
+  /** Current committed output tables (base + generalized). The ~33
+    * per-table merged views are built CONCURRENTLY: view construction is
+    * driver/file-system bound (manifest read + eager file-index listing
+    * over every bucket dir), and serially it measured ~7 s per read of
+    * the tables. */
   def readTables(spark: SparkSession, mapping: CompiledMapping,
       stateDir: String): Map[String, DataFrame] = {
     val store = new StateStore(spark, stateDir)
-    viewsOf(store, mapping, store.currentSeq)
-  }
-
-  /** Build the ~33 per-table merged views CONCURRENTLY: view construction
-    * is driver/file-system bound (manifest read + eager file-index listing
-    * over every bucket dir), and doing it serially cost ~7 s of every
-    * apply — a third of the batch wall — after the actual work was done. */
-  private def viewsOf(store: StateStore, mapping: CompiledMapping,
-      seq: Long): Map[String, DataFrame] = {
+    val seq = store.currentSeq
     val names = allTableNames(mapping)
     val out = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
     drainConcurrently(names.map(n =>
@@ -183,7 +183,10 @@ object DiffPipeline {
 
   /** Apply one change file (one transaction, ST1). `diff` carries
     * RawElement rows with `op`; the last op per element wins is assumed
-    * upstream (minutely OSC files are deduplicated by osmosis).
+    * upstream (minutely OSC files are deduplicated by osmosis). Returns
+    * nothing: a caller that wants the maintained tables reads them with
+    * [[readTables]] (building the ~30 views costs 1–2 s, which a caller
+    * applying file after file would throw away).
     *
     * `from` applies on top of a specific (possibly uncommitted) state
     * version instead of the committed pointer; paired with
@@ -197,29 +200,11 @@ object DiffPipeline {
       expireDir: Option[String] = None,
       expireZoom: Int = graft.operators.ExpireTiles.DefaultZoom,
       from: Option[Long] = None,
-      commit: Boolean = true,
-      // buildViews = false skips constructing the ~30 result-table views
-      // (manifest read + eager file-index + Catalyst analysis each,
-      // measured 1–2 s/batch) for callers that discard the return — the
-      // streaming loop applies thousands of batches and reads tables via
-      // readTables when it actually needs them (r13, §1.2 don't compute
-      // what you throw away)
-      buildViews: Boolean = true): Map[String, DataFrame] = {
+      commit: Boolean = true): Unit = {
     val store = new StateStore(spark, stateDir)
     val seq = from.getOrElse(store.currentSeq)
     require(seq >= 0, s"no committed state in $stateDir — run init first")
     val next = seq + 1
-    // per-phase wall-clock on stderr when SPARK_GRAFT_DIFF_TIMING=1 — the
-    // apply is a fixed pipeline of small jobs, and which phase dominates is
-    // invisible from outside (the bench only sees the total)
-    val timing = sys.env.get("SPARK_GRAFT_DIFF_TIMING").contains("1")
-    def timed[T](label: String)(task: => T): T = {
-      val t0 = System.nanoTime()
-      val out = task
-      if (timing) System.err.println(
-        f"[diff] $label ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      out
-    }
 
     import spark.implicits._
     // the change file, gathered to the driver once; every frame built from
@@ -248,7 +233,7 @@ object DiffPipeline {
     // no empty segments, no write jobs, no fold growth, no compaction drag
     // for tables a batch never touched (r13, §2.4).
     def stepOrWrite(changed: Set[Long], name: String)(write: => Unit): () => Unit =
-      () => timed(s"  write $name")(
+      () => timed("diff", s"  write $name")(
         if (changed.isEmpty) store.writeUnchanged(name, next, seq) else write)
     val elementWrites = Seq(("coords", ins.coords, chN), ("nodes", ins.nodes, chN),
         ("ways", ins.ways, chW), ("relations", ins.relations, chR)).map {
@@ -334,7 +319,7 @@ object DiffPipeline {
     // tables are disjoint from the element tables, so this runs beside the
     // element writes too; the version commits once both are done.
     def rebuild(): Unit = {
-      val (rebuildW, depR, bundle, resolve) = timed("closure")(closure())
+      val (rebuildW, depR, bundle, resolve) = timed("diff", "closure")(closure())
       val single = mapping.conf.singleIdSpace
       val wDel = rebuildW.map(Ids.wayId(_, single))
       val rDel = depR.map(Ids.relId(_, single))
@@ -346,18 +331,18 @@ object DiffPipeline {
         case other => throw new IllegalArgumentException(other)
       }
       val pipeline = new ImportPipeline(spark, mapping, srid)
-      val delta = timed("rebuild-stages") {
+      val delta = timed("diff", "rebuild-stages") {
         val delta = pipeline.run(bundle, resolve = Some(resolve))
         // force the shared rebuild caches ONCE, so the concurrent table
         // writes below only consume them and never duplicate the work
         pipeline.materializeStages()
         delta
       }
-      timed("output-writes")(drainConcurrently(
+      timed("diff", "output-writes")(drainConcurrently(
         (delta ++ Generalize(spark, mapping, delta)).toSeq.map { case (name, rows) =>
           val idc = idColFor(mapping, name)
           val del = deleteIdsFor(confOf(mapping, name).tableType)
-          () => timed(s"  write $name")(
+          () => timed("diff", s"  write $name")(
             if (del.isEmpty) store.writeUnchanged(tbl(name), next, seq)
             else store.writeDelta(tbl(name), next, seq, rows, ids(del, idc), idc))
         }))
@@ -388,11 +373,9 @@ object DiffPipeline {
     }
 
     drainConcurrently(Seq(
-      () => timed("element-writes")(drainConcurrently(elementWrites)),
+      () => timed("diff", "element-writes")(drainConcurrently(elementWrites)),
       () => rebuild()))
     if (commit) store.commit(next)
-    if (!buildViews) return Map.empty
-    timed("result-views")(viewsOf(store, mapping, next))
   }
 
   /** `c` is in the driver-side id set `want`. A UDF, not a literal IN
@@ -535,7 +518,7 @@ object DiffPipeline {
             "batch), or delete replseq.txt in the state dir to force.")
       }
       applyDiff(spark, mapping, stateDir, OsmXml.readDiff(spark, p).toDF(), srid,
-        expireDir = expireDir, expireZoom = expireZoom, buildViews = false)
+        expireDir = expireDir, expireZoom = expireZoom)
       s.foreach { sq =>
         baseline = sq
         last = math.max(last, sq)

@@ -11,22 +11,19 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 /** Versioned parquet state for incremental maintenance (SURVEY.md §2 ST3/ST4).
   *
   * Every maintained table (the four element frames, output tables, and
-  * generalized tables) lives under `dir/<name>/`. Two layouts:
-  *
-  *  - plain: `dir/<name>/v<seq>` holds the whole table (full rewrite per
-  *    version — fine for small stores and tests);
-  *  - bucketed + merge-on-read: the BASE is hash-bucketed by id under
-  *    `v<seq>/__b=<bucket>/`; each later version appends a delta SEGMENT
-  *    (this batch's insert rows + delete-id tombstones, `v<seq>/ins|del`)
-  *    and a `_manifest` listing the base bucket map plus the ordered
-  *    segments. Reads fold newest-wins via one broadcast anti-join;
-  *    `readBuckets` file-prunes the base to the requested buckets. After
-  *    `maxSegments` a write compacts the merged view into a fresh base.
-  *    This is the LSM / lakehouse-MERGE shape: per-batch write volume is
-  *    O(changed) — the reference mutates rows in place via SQL
-  *    DELETE+COPY (update/deleter.go, writer package), which a columnar
-  *    store can't; copy-on-write bucket rewrites were measured to amplify
-  *    a spread-out 10³-element batch into a near-full store rewrite.
+  * generalized tables) lives under `dir/<name>/`, in one layout, bucketed
+  * and merge-on-read: the BASE is hash-bucketed by id under
+  * `v<seq>/__b=<bucket>/`; each later version appends a delta SEGMENT
+  * (this batch's insert rows + delete-id tombstones, `v<seq>/ins|del`)
+  * and a `_manifest` listing the base bucket map plus the ordered
+  * segments. Reads fold newest-wins via one broadcast anti-join;
+  * `readBuckets` file-prunes the base to the requested buckets. After
+  * `maxSegments` a write compacts the merged view into a fresh base.
+  * This is the LSM / lakehouse-MERGE shape: per-batch write volume is
+  * O(changed) — the reference mutates rows in place via SQL
+  * DELETE+COPY (update/deleter.go, writer package), which a columnar
+  * store can't; copy-on-write bucket rewrites were measured to amplify
+  * a spread-out 10³-element batch into a near-full store rewrite.
   *
   * A batch writes all tables at `seq+1`, then atomically commits by
   * rewriting `state.txt` — the analog of the reference's `last.state.txt`
@@ -241,23 +238,14 @@ final class StateStore(spark: SparkSession, dir: String) {
     fs.rename(tmpPath, statePath)
   }
 
-  // ---- plain layout ---------------------------------------------------------
+  // ---- tables ---------------------------------------------------------------
 
   def tablePath(name: String, seq: Long): String =
     new Path(new Path(root, name), s"v$seq").toString
 
-  def write(name: String, seq: Long, df: DataFrame): Unit =
-    df.write.mode("overwrite").parquet(tablePath(name, seq))
-
-  /** Read either layout: a `_manifest` under v<seq> selects the bucketed
-    * path; otherwise the version dir is the whole table. */
-  def read(name: String, seq: Long): DataFrame = {
-    val mp = manifestPath(name, seq)
-    if (fs.exists(mp)) mergedView(name, seq, None)
-    else withListScope(spark.read.parquet(tablePath(name, seq)))
-  }
-
-  // ---- bucketed layout ------------------------------------------------------
+  /** The whole table as of version `seq`: the merged view of its base and
+    * segments. */
+  def read(name: String, seq: Long): DataFrame = mergedView(name, seq, None)
 
   /** Read ONLY the given buckets of a bucketed table — the diff path's
     * pruning: a small diff reads a handful of bucket dirs, not the table. */
@@ -339,7 +327,13 @@ final class StateStore(spark: SparkSession, dir: String) {
 
   private def readManifest(name: String, seq: Long): Manifest = {
     val path = manifestPath(name, seq)
-    val lines = readSmall(path).split("\n").toSeq
+    // every version this store writes has a manifest; a dir without one is
+    // a version never written (or a plain whole-table dir, a layout this
+    // store no longer reads), so name the path instead of guessing
+    val lines = (try readSmall(path) catch {
+      case _: java.io.FileNotFoundException => throw new IllegalStateException(
+        s"$path: no such table version in this store; re-run the import to rebuild the store")
+    }).split("\n").toSeq
     if (lines.exists(_.startsWith("SEG\t")))
       StateStore.unreadable(path, "an unstamped SEG segment")
     val schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
@@ -364,28 +358,19 @@ final class StateStore(spark: SparkSession, dir: String) {
       .filter(_.startsWith("__b=")).map(_.stripPrefix("__b=").toLong)
   }
 
-  /** Full bucketed write (init path): every row, partitioned by bucket.
-    *
-    * `sortWithin`: extra columns to sort by INSIDE each bucket's files.
-    * Sorting ahead of the partitioned write (bucket first, then the extra
-    * columns) means the writer sees its partition column already ordered
-    * and keeps the row order — so parquet row groups carry tight min/max
-    * stats on the sort columns, and a later pushed-down predicate on them
-    * skips whole row groups instead of scanning the bucket.
-    */
-  def writeBucketed(name: String, seq: Long, df: DataFrame, idCol: String,
-      sortWithin: Seq[String] = Nil): Unit = {
+  /** Full bucketed write (init path): every row, partitioned by bucket. */
+  def writeBucketed(name: String, seq: Long, df: DataFrame, idCol: String): Unit = {
     val out = tablePath(name, seq)
     // shuffle rows to their bucket BEFORE the partitioned write: without
     // it every write task holds up to nBuckets open parquet writers at
     // once (writer memory + one small file per task×bucket — a 30-table
     // init measured 12 min mostly here); after it each task streams a few
-    // whole buckets sequentially and a bucket is one file
-    val bucketed = df.withColumn("__b", bucketOf(col(idCol)))
+    // whole buckets sequentially and a bucket is one file; sorted by the
+    // bucket, the partitioned writer sees its partition column in order
+    df.withColumn("__b", bucketOf(col(idCol)))
       .repartition(col("__b"))
-    val ordered =
-      bucketed.sortWithinPartitions(("__b" +: sortWithin).map(col): _*)
-    ordered.write.mode("overwrite").partitionBy("__b").parquet(out)
+      .sortWithinPartitions(col("__b"))
+      .write.mode("overwrite").partitionBy("__b").parquet(out)
     writeManifest(name, seq, df.schema,
       listBuckets(out).map(b => b -> s"v$seq/__b=$b").toMap)
   }
@@ -411,7 +396,7 @@ final class StateStore(spark: SparkSession, dir: String) {
     * full rewrite over maxSegments batches.
     */
   def writeDelta(name: String, seq: Long, prevSeq: Long, inserts: DataFrame,
-      deleteIds: DataFrame, idCol: String, sortWithin: Seq[String] = Nil,
+      deleteIds: DataFrame, idCol: String,
       maxSegments: Int = 8, tombstoneCol: Option[String] = None): Unit = {
     // tombstoneCol: hide-by column when it differs from the bucketing id
     // (reverse indexes bucket by the REFERENCED id but delete by the
@@ -422,7 +407,7 @@ final class StateStore(spark: SparkSession, dir: String) {
       val merged = mergedView(name, prevSeq, None)
         .join(broadcast(deleteIds.select(col(tc))), Seq(tc), "left_anti")
         .unionByName(inserts)
-      writeBucketed(name, seq, merged, idCol, sortWithin)
+      writeBucketed(name, seq, merged, idCol)
     } else {
       val vdir = tablePath(name, seq)
       // stamp the fold ordinal into the files (position in the manifest's
@@ -433,10 +418,7 @@ final class StateStore(spark: SparkSession, dir: String) {
       // A segment is batch-sized, so each side is ONE file however the
       // caller's frame is split (a driver-local frame spans every core).
       val ord = m.segments.size + 1L
-      val one = inserts.coalesce(1)
-      val ins = if (sortWithin.isEmpty) one
-        else one.sortWithinPartitions(sortWithin.map(col): _*)
-      ins.withColumn("__ord", lit(ord))
+      inserts.coalesce(1).withColumn("__ord", lit(ord))
         .write.mode("overwrite").parquet(s"$vdir/ins")
       deleteIds.select(col(tc)).withColumn("__tord", lit(ord)).coalesce(1)
         .write.mode("overwrite").parquet(s"$vdir/del")

@@ -31,8 +31,8 @@ class RouteRelationSpec extends SparkSpecBase {
   private lazy val updatedMembers: DataFrame = {
     tables("route_members").count() // force import-phase state first
     DiffPipeline.applyDiff(spark, mapping, stateDir,
-      OsmXml.readDiff(spark, "/root/reference/test/route_relation.osc").toDF())("route_members")
-      .cache()
+      OsmXml.readDiff(spark, "/root/reference/test/route_relation.osc").toDF())
+    DiffPipeline.readTables(spark, mapping, stateDir)("route_members").cache()
   }
 
   private def member(df: DataFrame, osmId: Long, member: Long) =

@@ -36,7 +36,8 @@ class SingleTableSpec extends SparkSpecBase {
   private lazy val updated: DataFrame = {
     all.count() // force import-phase assertions' input before updating
     DiffPipeline.applyDiff(spark, mapping, stateDir,
-      OsmXml.readDiff(spark, "/root/reference/test/single_table.osc").toDF())("all").cache()
+      OsmXml.readDiff(spark, "/root/reference/test/single_table.osc").toDF())
+    DiffPipeline.readTables(spark, mapping, stateDir)("all").cache()
   }
 
   private def hstoreMap(s: String): Map[String, String] =

@@ -89,6 +89,16 @@ class BucketPruneSpec extends SparkSpecBase {
     val m5 = new String(Files.readAllBytes(
       Paths.get(dir, "t", "v5", "_manifest")), "UTF-8")
     assert(m5.contains("v4/ins"), "v5 manifest must carry v4's segment")
+    // vacuum reclaims the versions the committed manifest no longer names
+    // (v0–v2, folded away by the v3 compaction) and keeps the base and
+    // segment it still reads (v3, v4); the table reads the same after
+    store.commit(5)
+    store.vacuum(Seq("t"), keep = 0)
+    val kept = Files.list(Paths.get(dir, "t"))
+    try assert(kept.iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("v3", "v4", "v5"))
+    finally kept.close()
+    assert(rows(5) == Seq((1L, "A"), (2L, "B"), (4L, "d")))
   }
 
   test("a pre-r13 store (id-range buckets or an unstamped SEG segment) " +
@@ -126,6 +136,13 @@ class BucketPruneSpec extends SparkSpecBase {
     Files.delete(manifest.resolveSibling("._manifest.crc"))
     refused(manifest)(s.read("t", 1))
     refused(manifest)(s.writeUnchanged("t", 2, 1))
+    // a version dir without a _manifest (a plain whole-table dir, the
+    // layout this store no longer writes) is refused, not read as a table
+    val (plain, p) = store("plain")
+    Seq((1L, "a")).toDF("id", "v").write.parquet(Paths.get(plain, "t", "v2").toString)
+    val missing = Paths.get(plain, "t", "v2", "_manifest")
+    refused(missing)(p.read("t", 2))
+    refused(missing)(p.readBuckets("t", 2, Set(0L)))
   }
 
   test("bucketOfId on the driver equals the writer's bucketOf column for " +

@@ -41,6 +41,7 @@ class DiffMemberResolutionSpec extends SparkSpecBase {
   private def applied(osc: String): Map[String, DataFrame] = {
     val dir = freshState()
     DiffPipeline.applyDiff(spark, mapping, dir, OsmXml.readDiff(spark, osc).toDF())
+    DiffPipeline.readTables(spark, mapping, dir)
   }
 
   test("rebuilt route_master keeps rows for unchanged sub-relation members") {

@@ -21,13 +21,13 @@ class StateRobustnessSpec extends SparkSpecBase {
     val dir = Files.createTempDirectory("graft-state").toString
     val store = new StateStore(spark, dir)
     import spark.implicits._
-    store.write("t", 0, Seq(1L).toDF("id"))
+    store.writeBucketed("t", 0, Seq(1L).toDF("id"), "id")
     store.commit(0)
     assert(store.currentSeq == 0)
 
     // simulate the crash: v1 fully written, tmp written, state.txt deleted,
     // rename never happened
-    store.write("t", 1, Seq(2L).toDF("id"))
+    store.writeBucketed("t", 1, Seq(2L).toDF("id"), "id")
     Files.write(Paths.get(dir, ".state.txt.tmp"), "1\n".getBytes("UTF-8"))
     Files.delete(Paths.get(dir, "state.txt"))
     assert(store.currentSeq == 1, "temp pointer must recover the commit")
@@ -118,9 +118,10 @@ class StateRobustnessSpec extends SparkSpecBase {
 
     val stateDir = Files.createTempDirectory("graft-custom-cols").toString
     DiffPipeline.init(spark, mapping, stateDir, OsmXml.read(spark, osm.toString))
-    val tables = DiffPipeline.applyDiff(spark, mapping, stateDir,
+    DiffPipeline.applyDiff(spark, mapping, stateDir,
       OsmXml.readDiff(spark, osc.toString).toDF())
-    val rows = tables("poi").filter("feature_id = 1").collect()
+    val rows = DiffPipeline.readTables(spark, mapping, stateDir)("poi")
+      .filter("feature_id = 1").collect()
     assert(rows.length == 1, "the updated point must survive the diff")
     assert(rows.head.getAs[String]("name") == "B")
     assert(rows.head.getAs[Array[Byte]]("geom") != null)

@@ -93,10 +93,7 @@ class SourceLintSpec extends AnyFunSuite {
       "graft/sinks/PostgisImport.scala" ->
         "PostGIS output path, driven by PostgisImportSpec and LivePostgisSpec",
       "graft/sinks/CopySink.scala" ->
-        "PostGIS output path, driven by PostgisImportSpec and LivePostgisSpec",
-      "graft/streaming/StreamingDedup.scala" ->
-        ("known orphan: its one caller was the deleted StreamingIndexer; " +
-          "reached only by StreamingDedupSpec and StreamingIngestSpec"))
+        "PostGIS output path, driven by PostgisImportSpec and LivePostgisSpec")
     val main = "src/main/scala/"
     val stale = allowed.keys.filterNot(k => new java.io.File(main + k).isFile)
     assert(stale.isEmpty, s"allowlisted files that no longer exist: $stale")
