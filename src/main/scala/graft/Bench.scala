@@ -430,8 +430,14 @@ object Bench {
 
   /** The basis of the diff and soak sections' apply times: the apply
     * alone. Records made before this basis also timed building the ~30
-    * result-table views per apply (1–2 s), which these sections discard. */
-  private val ApplyBasis = "apply only, no result-table views built"
+    * result-table views per apply (1–2 s), which these sections discard.
+    * Since the apply runs on `Session.applySession`, its plans evaluate
+    * interpreted (no whole-stage codegen, no generated projections), while
+    * the init these sections time keeps codegen. Interpreted applies were
+    * measured at 150, ~10⁴ and ~7×10⁴ changes per file (CHANGES.md);
+    * `DiffXl`'s ~1.8×10⁵ has not been. */
+  private val ApplyBasis = "apply only, no result-table views built; " +
+    "apply evaluated interpreted (no codegen), init compiled"
 
   /** Diff-apply at one store size: a diff-ready init (min of `initReps`,
     * each from a deleted store), then `applyDiff` of a ~1% node-move batch

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -341,7 +342,11 @@ final class ImportPipeline(
       .join(ways.select(col("id"), col("tags").as("w_tags")), Seq("id"))
       .select(col("id").as("w_id"), col("xs").as("w_xs"), col("ys").as("w_ys"), col("w_tags"))
 
-    val resolved = m
+    // all-or-nothing per relation across ALL members, in one pass: a
+    // window over the relation's member rows, so the three member joins
+    // plan once (an aggregate joined back to the rows plans them twice).
+    // Tags and geometries are built for the surviving rows only.
+    val rows = m
       .join(nodeSide, col("__member_type") === 0 && col("__member_id") === col("n_id"), "left")
       .join(waySide, col("__member_type") === 1 && col("__member_id") === col("w_id"), "left")
       .join(relSide, col("__member_type") === 2 && col("__member_id") === col("r_id"), "left")
@@ -349,6 +354,8 @@ final class ImportPipeline(
         when(col("__member_type") === 0, col("n_id").isNotNull)
           .when(col("__member_type") === 1, col("w_id").isNotNull)
           .otherwise(col("r_id").isNotNull))
+      .withColumn("__all_ok", min(col("__resolved")).over(Window.partitionBy(col("rel_id"))))
+      .filter(col("__all_ok"))
       .withColumn("__member_tags",
         when(col("__member_type") === 0, coalesce(col("n_tags"), map()))
           .when(col("__member_type") === 1, coalesce(col("w_tags"), map()))
@@ -356,14 +363,6 @@ final class ImportPipeline(
       .withColumn("__geom",
         when(col("__member_type") === 0, pointWkb(srid)(col("n_x"), col("n_y")))
           .when(col("__member_type") === 1, lineWkb(srid)(col("w_xs"), col("w_ys"))))
-
-    // all-or-nothing per relation across ALL members
-    val okRels = resolved.groupBy(col("rel_id").as("ok_rel"))
-      .agg((count(lit(1)) === sum(when(col("__resolved"), 1).otherwise(0))).as("__all_ok"))
-      .filter(col("__all_ok")).select(col("ok_rel"))
-
-    val rows = resolved
-      .join(okRels, resolved("rel_id") === okRels("ok_rel"))
       .withColumn("__id", relIdCol)
       .withColumn("tags", col("rel_tags"))
       .select(col("__id"), col("tags"), col("__geom"),

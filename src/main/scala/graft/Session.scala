@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one SparkSession factory. Main, Verify, Bench, PlanDump,
   * QueryProfile and the test base all build through `build`, so the plans
   * the oracle certifies, the plans the bench times and the plans the CLI
-  * runs come from one conf. No other file builds a session.
+  * runs come from one conf. No other file builds a session; the diff
+  * apply's interpreted session (`applySession`) is derived here too.
   *
   * The AQE initial shuffle-partition count is the one setting that varies
   * per phase: `sizeToInput` sizes it to the input of the phase about to
@@ -82,6 +83,39 @@ object Session {
         s.sparkContext.setLogLevel("WARN")
         s
       }
+
+  /** The session a diff apply runs on: a `newSession()` of the caller's
+    * (same SparkContext, cache manager and catalog; its own SQL conf,
+    * temporary views and UDF registrations), carrying the caller's runtime
+    * SQL conf plus [[Interpreted]]. The caller's own conf is never
+    * written, so its later queries plan exactly as before. */
+  def applySession(caller: SparkSession): SparkSession = {
+    val s = caller.newSession()
+    // only the keys that differ: static SQL and Spark core keys hold the
+    // same values in both sessions and may not be set
+    val own = s.conf.getAll
+    (caller.conf.getAll ++ Interpreted).foreach { case (k, v) =>
+      if (!own.get(k).contains(v)) s.conf.set(k, v)
+    }
+    s
+  }
+
+  /** Expressions and plans evaluated interpreted, none compiled. A diff
+    * apply runs O(changed) rows through ~200 distinct plans once each, so
+    * Janino compiles and the JIT warming the generated classes cost more
+    * than the rows (4-core VM, a 150-change file: ~217 compiles and
+    * 17–25 s of JIT CPU in an 8–11 s apply, against ~2.8 s of task time).
+    * Both keys are needed: without whole-stage codegen each operator still
+    * compiles its projections and predicates unless the factory mode is
+    * NO_CODEGEN (219 compiles with `wholeStage=false` alone).
+    * `factoryMode` is an internal Spark conf, documented as not for end
+    * users and free to change between releases, so `ApplySessionSpec`
+    * checks the effect itself: a new expression compiles nothing on this
+    * session. The bulk import, init, reads and queries keep codegen: over
+    * millions of rows the compiled code pays for itself. */
+  val Interpreted: Map[String, String] = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
   val InitialPartitionsKey =
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"

@@ -43,6 +43,15 @@ import graft.sources.OsmXml.Bundle
   * coords and nodes), so a batch pays jobs for its store reads, the
   * rebuild stages and the segment writes, not for id sets.
   *
+  * The apply runs on its own session, `graft.Session.applySession` of the
+  * caller's, which evaluates every expression and plan interpreted. Its
+  * O(changed) rows pass through ~200 distinct plans once each, so code
+  * generation was most of its cost: on a 4-core VM a 150-change apply
+  * compiled ~217 classes and spent 17–25 s of JIT CPU in 8–11 s of wall
+  * time, against ~2.8 s of task time. Interpreted, it compiles ~24. Only
+  * the apply does this; init, the bulk import and every read keep codegen
+  * on the caller's session, whose conf the apply never writes.
+  *
   * What this asks of a batch: its change file and its closure rows fit in
   * driver memory (O(changes + closure), never O(store)). The closure's
   * rows are collected and rebuilt into frames on the driver, and each
@@ -201,16 +210,19 @@ object DiffPipeline {
       expireZoom: Int = graft.operators.ExpireTiles.DefaultZoom,
       from: Option[Long] = None,
       commit: Boolean = true): Unit = {
-    val store = new StateStore(spark, stateDir)
+    // every frame below is built on the interpreted apply session; the
+    // caller's session only gathers its own change frame (see the header)
+    val session = graft.Session.applySession(spark)
+    val store = new StateStore(session, stateDir)
     val seq = from.getOrElse(store.currentSeq)
     require(seq >= 0, s"no committed state in $stateDir — run init first")
     val next = seq + 1
 
-    import spark.implicits._
+    import session.implicits._
     // the change file, gathered to the driver once; every frame built from
     // it or from an id set is a local relation (see the header)
     def local(schema: StructType, rows: Array[Row]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      session.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     def idOf(r: Row): Long = r.getAs[Long]("id")
     val changes = diff.collect()
     val d = local(diff.schema, changes)
@@ -317,7 +329,8 @@ object DiffPipeline {
     // tombstoned ids by construction — rows are driven by the closure), so
     // a table whose delete set is empty steps with writeUnchanged. Output
     // tables are disjoint from the element tables, so this runs beside the
-    // element writes too; the version commits once both are done.
+    // element writes too; the version commits once both are done. The
+    // expire side output is one more task of the output-write drain.
     def rebuild(): Unit = {
       val (rebuildW, depR, bundle, resolve) = timed("diff", "closure")(closure())
       val single = mapping.conf.singleIdSpace
@@ -330,7 +343,7 @@ object DiffPipeline {
         case TableType.Relation | TableType.RelationMember => rDel
         case other => throw new IllegalArgumentException(other)
       }
-      val pipeline = new ImportPipeline(spark, mapping, srid)
+      val pipeline = new ImportPipeline(session, mapping, srid)
       val delta = timed("diff", "rebuild-stages") {
         val delta = pipeline.run(bundle, resolve = Some(resolve))
         // force the shared rebuild caches ONCE, so the concurrent table
@@ -338,19 +351,21 @@ object DiffPipeline {
         pipeline.materializeStages()
         delta
       }
-      timed("diff", "output-writes")(drainConcurrently(
-        (delta ++ Generalize(spark, mapping, delta)).toSeq.map { case (name, rows) =>
+      val writes = (delta ++ Generalize(session, mapping, delta)).toSeq.map {
+        case (name, rows) =>
           val idc = idColFor(mapping, name)
           val del = deleteIdsFor(confOf(mapping, name).tableType)
           () => timed("diff", s"  write $name")(
             if (del.isEmpty) store.writeUnchanged(tbl(name), next, seq)
             else store.writeDelta(tbl(name), next, seq, rows, ids(del, idc), idc))
-        }))
+      }
 
       // ST5: expire-tiles side output — every geometry touched by this
       // batch: the OLD geometries of replaced/deleted rows (the reference
-      // expires via its deleter, update/deleter.go) plus the rebuilt ones
-      expireDir.foreach { dir =>
+      // expires via its deleter, update/deleter.go) plus the rebuilt ones.
+      // It reads only the previous version and the filled stage caches, so
+      // it drains beside the writes; queued first, as its longest task.
+      val expire = expireDir.map(dir => () => timed("diff", "expire") {
         val geoms = for {
           (name, t) <- mapping.conf.tables.toSeq
           if t.tableType != TableType.Relation && t.tableType != TableType.RelationMember
@@ -368,7 +383,8 @@ object DiffPipeline {
             maxZoom = expireZoom)
           graft.operators.ExpireTiles.writeTiles(tiles, s"$dir/$next")
         }
-      }
+      })
+      timed("diff", "output-writes")(drainConcurrently(expire.toSeq ++ writes))
       pipeline.unpersistAll()
     }
 
