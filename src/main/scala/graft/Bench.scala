@@ -8,6 +8,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.mapping.{CompiledMapping, MappingConf}
 import graft.model.{Kind, Op}
+import graft.obs.Obs
 import graft.sources.{OsmPbf, OsmPbfSynth, TagFilters}
 import graft.sources.OsmXml.Bundle
 import graft.streaming.DiffPipeline
@@ -136,8 +137,9 @@ object Bench {
     } catch { case _: Throwable => -1L }
 
   /** One rep's meter record: admission, foreign-CPU share, GC and io_wait
-    * seconds, and executor task totals. foreign_cpu high → the box was
-    * owned; gc → heap aftermath; io_wait → the device; all low → the plan. */
+    * seconds, and the task totals of the rep's span. foreign_cpu high → the
+    * box was owned; gc → heap aftermath; io_wait → the device; all low →
+    * the plan. */
   final case class Meter(load: Double, gateWait: Double, foreignCpu: Double,
       gc: Double, ioWait: Double, contended: Boolean, shuffleWriteGb: Double,
       memSpillGb: Double, diskSpillGb: Double, peakTaskMemGb: Double)
@@ -145,15 +147,14 @@ object Bench {
   private val MeterNames = Seq("load", "gate_wait", "foreign_cpu", "gc", "io_wait",
     "contended", "shuffle_write_gb", "mem_spill_gb", "disk_spill_gb", "peak_task_mem_gb")
 
-  /** Samples foreign CPU every 2 s and sums task metrics until `stop`. */
-  private final class RepMeter(spark: SparkSession)
-      extends org.apache.spark.scheduler.SparkListener {
+  /** The box around a rep: samples foreign CPU every 2 s, and reads JVM GC
+    * and io_wait, until `stop`. */
+  private final class RepMeter {
     import java.util.concurrent.atomic.{AtomicLong, DoubleAdder}
     private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     private def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    private val shuffle, memSpill, diskSpill, peak = new AtomicLong
     private val gc0 = gcMs
     private val io0 = diskWeightedIoMs()
     private val foreignSum = new DoubleAdder
@@ -168,28 +169,19 @@ object Bench {
     })
     sampler.setDaemon(true)
     sampler.start()
-    spark.sparkContext.addSparkListener(this)
 
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      Option(t.taskMetrics).foreach { m =>
-        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peak.getAndAccumulate(m.peakExecutionMemory, Math.max(_, _))
-      }
-
-    def stop(gate: Gate): Meter = {
+    def stop(gate: Gate, span: Obs.Span): Meter = {
       stopped = true
       sampler.interrupt()
       sampler.join(3000)
-      spark.sparkContext.removeSparkListener(this)
       val io1 = diskWeightedIoMs()
       val gb = 1024.0 * 1024 * 1024
       val foreign = if (samples.get == 0) -1.0 else foreignSum.sum / samples.get
       Meter(gate.load, gate.waited, foreign, (gcMs - gc0) / 1e3,
         if (io0 < 0 || io1 < 0) -1.0 else (io1 - io0) / 1e3,
         gate.timedOut || foreign > MaxForeign,
-        shuffle.get / gb, memSpill.get / gb, diskSpill.get / gb, peak.get / gb)
+        span.shuffleWriteBytes / gb, span.memSpillBytes / gb, span.diskSpillBytes / gb,
+        span.peakTaskMemBytes / gb)
     }
   }
 
@@ -204,22 +196,23 @@ object Bench {
     }.mkString(",") + s""","failed_reps":$failed"""
   }
 
-  /** The one rep harness: for each rep, gate (if `gated`) → meter → body →
-    * reset, untimed (System.gc too unless `gc` is off, as for the short
-    * query and serve reps). A throwing rep is logged and counted. */
+  /** The one rep harness: for each rep, gate (if `gated`) → meter → body,
+    * as one span → reset, untimed (System.gc too unless `gc` is off, as for
+    * the short query and serve reps). A throwing rep is logged and counted. */
   def reps[T](ctx: Ctx, label: String, n: Int, gated: Boolean, gc: Boolean = true)(
       body: Int => T): Reps[T] = {
     val runs = (1 to n).map { i =>
       val gate = if (gated) ctx.gate() else Gate(loadavg(), 0.0, timedOut = false)
-      val meter = new RepMeter(ctx.spark)
-      val out = try Right(body(i)) catch { case e: Throwable => Left(e) }
-      val m = meter.stop(gate)
+      val meter = new RepMeter
+      val out = try Right(Obs.measure(s"$label rep $i")(body(i))) catch { case e: Throwable => Left(e) }
+      // a rep that threw has no span: its task totals read 0
+      val m = meter.stop(gate, out.fold(_ => Obs.Span(label, 0.0, Nil, Nil), _._2))
       ctx.reset(gc)
       System.err.println(f"[bench] $label rep $i/$n load=${m.load}%.2f " +
         f"foreign=${m.foreignCpu}%.3f gc=${m.gc}%.1fs io_wait=${m.ioWait}%.1fs " +
         f"shuffle=${m.shuffleWriteGb}%.2fGB spill=${m.memSpillGb + m.diskSpillGb}%.2fGB" +
         (if (m.contended) " CONTENDED" else "") + out.fold(e => s" FAILED: ${e.getMessage}", _ => ""))
-      out.map(_ -> m)
+      out.map(_._1 -> m)
     }
     Reps(runs.collect { case Right(r) => r }, runs.count(_.isLeft))
   }
@@ -264,7 +257,7 @@ object Bench {
     * when they fit (DISK_ONLY here was a 3× gen regression, r12 #2). */
   private val GenSourceStorage = StorageLevel.MEMORY_AND_DISK_SER
 
-  private final case class ImportTimes(elems: Long, parse: Double, imp: Double, gen: Double)
+  private final case class ImportTimes(counts: Seq[(String, Long)], parse: Double, imp: Double, gen: Double)
 
   /** One import: parse (decode into the cached element frames) → import
     * (match, assembly, geometry, noop sink) → generalize, which reads
@@ -273,7 +266,8 @@ object Bench {
     import ctx.{mapping, spark}
     val t0 = System.nanoTime()
     val bundle = read()
-    val parsed = bundle.coords.count() + bundle.ways.count() + bundle.relations.count()
+    val parsed = Seq("coords" -> bundle.coords.count(), "ways" -> bundle.ways.count(),
+      "relations" -> bundle.relations.count())
     val tParse = secs(t0)
     val t1 = System.nanoTime()
     val pipeline = new ImportPipeline(spark, mapping, storage = storage)
@@ -294,7 +288,8 @@ object Bench {
     * element caches and box-chosen stage storage; DISK_ONLY from XL up (at
     * 79M elements: import 67.1 s vs 89.8 s). `settle`: one untimed import
     * first (the box at bench start inflated the first timed reps 2-3×),
-    * which also takes the import statistics: no timed rep pays `observe`.
+    * which also records the per-kind element counts: no timed rep counts
+    * the nodes.
     * `bucketedReps`: the bucketed-element-store A/B; rep 1 writes the store
     * inside its timed import (`bucketize`), later reps reuse it (`stored`).
     * `minFreeGb`: delete the diff/soak scratch, then skip if still short. */
@@ -332,12 +327,9 @@ object Bench {
         // the reference's reader applies the tag prefilter during parse
         def read() = OsmPbf.read(spark, dir, Some(TagFilters(mapping)), storage = readStorage)
         val settle = reps(ctx, s"$l settle", if (r.settle) 1 else 0, gated = false) { _ =>
-          val stats = graft.operators.ImportStats.attach(spark)
-          try {
-            importOnce(ctx, () => graft.operators.ImportStats.instrument(read()), stageStorage)
-            System.err.println(s"[bench] $l stats ${stats.report()}")
-            stats.current
-          } finally graft.operators.ImportStats.detach(spark, stats)
+          var nodes = 0L
+          importOnce(ctx, () => { val b = read(); nodes = b.nodes.count(); b },
+            stageStorage).counts :+ ("nodes" -> nodes)
         }
         val plain = reps(ctx, l, r.reps, gated = true)(_ => importOnce(ctx, () => read(), stageStorage))
         val bucketed = reps(ctx, s"${l}_bucketed", r.bucketedReps, gated = false) { i =>
@@ -366,7 +358,7 @@ object Bench {
         def medians(rs: Seq[ImportTimes]) = s"""{"parse":${fmt(med(rs.map(_.parse)))},""" +
           s""""import":${fmt(med(rs.map(_.imp)))},"gen":${fmt(med(rs.map(_.gen)))}}"""
         val clean = plain.done.filterNot(_._2.contended).map(_._1)
-        val detail = s"""{"copies":${r.copies},"elems":${ps.head.elems},""" +
+        val detail = s"""{"copies":${r.copies},"elems":${ps.head.counts.map(_._2).sum},""" +
           s""""parse":${arr(ps.map(_.parse))},"import":${arr(ps.map(_.imp))},""" +
           s""""gen":${arr(ps.map(_.gen))},${plain.json},"median":${medians(ps)}""" +
           (if (clean.nonEmpty && clean.size < ps.size) s""","median_clean":${medians(clean)}""" else "") +

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
 import graft.ImportPipeline
 import graft.mapping.{CompiledMapping, TableConf, TableType}
 import graft.model.{Ids, Kind, Op}
+import graft.obs.Obs
 import graft.operators.Generalize
 import graft.sources.OsmXml
 import graft.sources.OsmXml.Bundle
@@ -62,7 +63,32 @@ import graft.sources.OsmXml.Bundle
   */
 object DiffPipeline {
 
-  private val ElementTables = Seq("coords", "nodes", "ways", "relations")
+  /** A table of element state: its rows in a bundle, the id column it is
+    * bucketed by, the column its tombstones delete by, and the element
+    * kind whose changes step it. */
+  private final case class ElementTable(name: String, rows: Bundle => DataFrame,
+      idCol: String, tombCol: String, kind: Byte)
+
+  /** The four element tables and the reverse-reference indexes (the
+    * reference's DiffCache, cache/diff.go). The indexes are BUCKETED BY THE
+    * REFERENCED ID, so the dependency closure of a diff reads only the
+    * changed ids' buckets instead of scanning every way/relation per batch
+    * (O(changed), like the reference's LevelDB reverse entries), and
+    * TOMBSTONED BY THE REFERRER: a changed way's old entries must vanish
+    * whichever nodes they pointed at. */
+  private val ElementTables = Seq(
+    ElementTable("coords", _.coords, "id", "id", Kind.Node),
+    ElementTable("nodes", _.nodes, "id", "id", Kind.Node),
+    ElementTable("ways", _.ways, "id", "id", Kind.Way),
+    ElementTable("relations", _.relations, "id", "id", Kind.Relation),
+    ElementTable("wayrefs",
+      _.ways.select(col("id").as("way_id"), explode(col("refs")).as("id")),
+      "id", "way_id", Kind.Way),
+    ElementTable("relrefs",
+      _.relations.select(col("id").as("rel_id"), explode(col("members")).as("m"))
+        .select(col("m.id").as("id"), col("m.type").as("ref_type"), col("rel_id")),
+      "id", "rel_id", Kind.Relation))
+
   private def tbl(name: String): String = s"tbl_$name"
 
   /** Run independent writes concurrently, at most `par` at a time. A diff
@@ -91,16 +117,13 @@ object DiffPipeline {
     Option(errors.peek()).foreach(e => throw e)
   }
 
-  /** Run `task`; with SPARK_GRAFT_DIFF_TIMING=1, print its wall time on
-    * stderr as `[scope] label`. Init and apply are fixed pipelines of small
-    * jobs, and which phase dominates is invisible from outside (the bench
-    * only sees the total). */
-  private def timed[T](scope: String, label: String)(task: => T): T = {
-    val t0 = System.nanoTime()
-    val out = task
-    if (sys.env.get("SPARK_GRAFT_DIFF_TIMING").contains("1")) System.err.println(
-      f"[$scope] $label ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    out
+  /** Run `body` as span `op` and print one JSON line on stderr: the store
+    * version and the changed-element count `body` returns, and the span
+    * with its phases, which are invisible from outside. */
+  private def reported(op: String)(body: => (Long, Long)): Unit = {
+    val ((version, changed), span) = Obs.measure(op)(body)
+    System.err.println(s"""{"record":"diff.$op","version":$version,"changed":$changed,""" +
+      s""""span":${span.json}}""")
   }
 
   /** Initial import: write element state + all output tables as v0, all
@@ -115,47 +138,35 @@ object DiffPipeline {
       startSeq: Long = 0,
       assembler: (DataFrame, DataFrame) => DataFrame =
         graft.operators.WayAssembly.resolve): Map[String, DataFrame] = {
-    val store = new StateStore(spark, stateDir)
-    store.setHashBuckets(nBuckets)
-    // startSeq > 0 re-inits on top of an existing store (`-appendcache`):
-    // writing a NEW version while the merged bundle lazily reads the old
-    // one keeps the read and write paths disjoint.
-    // All four element writes read the one cached raw-element frame, so
-    // they drain concurrently without duplicating the parse
-    timed("init", "element-writes")(drainConcurrently(Seq(
-      () => store.writeBucketed("coords", startSeq, bundle.coords, "id"),
-      () => store.writeBucketed("nodes", startSeq, bundle.nodes, "id"),
-      () => store.writeBucketed("ways", startSeq, bundle.ways, "id"),
-      () => store.writeBucketed("relations", startSeq, bundle.relations, "id"),
-      // reverse-reference indexes (the reference's DiffCache,
-      // cache/diff.go): BUCKETED BY THE REFERENCED ID, so the dependency
-      // closure of a diff reads only the changed ids' buckets instead of
-      // scanning every way/relation per batch — the lookups become
-      // O(changed), like the reference's LevelDB reverse entries
-      () => store.writeBucketed("wayrefs", startSeq,
-        bundle.ways.select(col("id").as("way_id"),
-          explode(col("refs")).as("id")), "id"),
-      () => store.writeBucketed("relrefs", startSeq,
-        bundle.relations
-          .select(col("id").as("rel_id"), explode(col("members")).as("m"))
-          .select(col("m.id").as("id"), col("m.type").as("ref_type"),
-            col("rel_id")), "id"))))
-    val pipeline = new ImportPipeline(spark, mapping, srid, limit,
-      assembler = assembler)
-    val outputs = timed("init", "stages") {
-      val tables = pipeline.run(storedBundle(store, startSeq))
-      val gens = Generalize(spark, mapping, tables)
-      // force the shared stage caches once, then drain the ~30 output-table
-      // writes concurrently (same reasoning as applyDiff's drain: each write
-      // is a small job and sequential writes pay one job latency per table)
-      pipeline.materializeStages()
-      tables ++ gens
+    reported("init") {
+      val store = new StateStore(spark, stateDir)
+      store.setHashBuckets(nBuckets)
+      // startSeq > 0 re-inits on top of an existing store (`-appendcache`):
+      // writing a NEW version while the merged bundle lazily reads the old
+      // one keeps the read and write paths disjoint.
+      // All four element writes read the one cached raw-element frame, so
+      // they drain concurrently without duplicating the parse
+      val (_, writes) = Obs.measure("element-writes")(drainConcurrently(ElementTables.map(t =>
+        () => Obs.span(t.name)(store.writeBucketed(t.name, startSeq, t.rows(bundle), t.idCol)))))
+      val pipeline = new ImportPipeline(spark, mapping, srid, limit,
+        assembler = assembler)
+      val outputs = Obs.span("stages") {
+        val tables = pipeline.run(storedBundle(store, startSeq))
+        val gens = Generalize(spark, mapping, tables)
+        // force the shared stage caches once, then drain the ~30 output-table
+        // writes concurrently (same reasoning as applyDiff's drain: each write
+        // is a small job and sequential writes pay one job latency per table)
+        pipeline.materializeStages()
+        tables ++ gens
+      }
+      Obs.span("table-writes")(drainConcurrently(outputs.toSeq.map { case (n, df) =>
+        () => store.writeBucketed(tbl(n), startSeq, df, idColFor(mapping, n))
+      }))
+      pipeline.unpersistAll()
+      store.commit(startSeq)
+      // the elements: every coord (tagged nodes among them), way and relation
+      (startSeq, Seq("coords", "ways", "relations").flatMap(writes.find).map(_.outputRows).sum)
     }
-    timed("init", "table-writes")(drainConcurrently(outputs.toSeq.map { case (n, df) =>
-      () => store.writeBucketed(tbl(n), startSeq, df, idColFor(mapping, n))
-    }))
-    pipeline.unpersistAll()
-    store.commit(startSeq)
     readTables(spark, mapping, stateDir)
   }
 
@@ -209,7 +220,7 @@ object DiffPipeline {
       expireDir: Option[String] = None,
       expireZoom: Int = graft.operators.ExpireTiles.DefaultZoom,
       from: Option[Long] = None,
-      commit: Boolean = true): Unit = {
+      commit: Boolean = true): Unit = reported("apply") {
     // every frame below is built on the interpreted apply session; the
     // caller's session only gathers its own change frame (see the header)
     val session = graft.Session.applySession(spark)
@@ -231,6 +242,7 @@ object DiffPipeline {
     val chN = changed(Kind.Node)
     val chW = changed(Kind.Way)
     val chR = changed(Kind.Relation)
+    val changedOf = Map(Kind.Node -> chN, Kind.Way -> chW, Kind.Relation -> chR)
     def ids(s: Set[Long], name: String = "id"): DataFrame = s.toSeq.toDF(name)
 
     // the batch's insert rows per element table (always delete, even for
@@ -244,26 +256,13 @@ object DiffPipeline {
     // changes steps its element/reverse-index tables with writeUnchanged —
     // no empty segments, no write jobs, no fold growth, no compaction drag
     // for tables a batch never touched (r13, §2.4).
-    def stepOrWrite(changed: Set[Long], name: String)(write: => Unit): () => Unit =
-      () => timed("diff", s"  write $name")(
-        if (changed.isEmpty) store.writeUnchanged(name, next, seq) else write)
-    val elementWrites = Seq(("coords", ins.coords, chN), ("nodes", ins.nodes, chN),
-        ("ways", ins.ways, chW), ("relations", ins.relations, chR)).map {
-      case (name, rows, changed) =>
-        stepOrWrite(changed, name)(store.writeDelta(name, next, seq, rows, ids(changed), "id"))
-    } ++ Seq(
-      // reverse indexes (DiffCache): bucketed by the REFERENCED id,
-      // tombstoned by the REFERRER — a changed way's old entries must
-      // vanish whichever nodes they pointed at
-      stepOrWrite(chW, "wayrefs")(store.writeDelta("wayrefs", next, seq,
-        ins.ways.select(col("id").as("way_id"), explode(col("refs")).as("id")),
-        ids(chW, "way_id"), "id", tombstoneCol = Some("way_id"))),
-      stepOrWrite(chR, "relrefs")(store.writeDelta("relrefs", next, seq,
-        ins.relations
-          .select(col("id").as("rel_id"), explode(col("members")).as("m"))
-          .select(col("m.id").as("id"), col("m.type").as("ref_type"),
-            col("rel_id")),
-        ids(chR, "rel_id"), "id", tombstoneCol = Some("rel_id"))))
+    val elementWrites = ElementTables.map { t =>
+      val changed = changedOf(t.kind)
+      () => Obs.span(t.name)(
+        if (changed.isEmpty) store.writeUnchanged(t.name, next, seq)
+        else store.writeDelta(t.name, next, seq, t.rows(ins), ids(changed, t.tombCol), t.idCol,
+          tombstoneCol = Some(t.tombCol)))
+    }
 
     // -- 2. dependency closure (J4) via the reverse indexes --------------------
     // Every step reads ONLY the buckets of its ids and collects the
@@ -332,7 +331,7 @@ object DiffPipeline {
     // element writes too; the version commits once both are done. The
     // expire side output is one more task of the output-write drain.
     def rebuild(): Unit = {
-      val (rebuildW, depR, bundle, resolve) = timed("diff", "closure")(closure())
+      val (rebuildW, depR, bundle, resolve) = Obs.span("closure")(closure())
       val single = mapping.conf.singleIdSpace
       val wDel = rebuildW.map(Ids.wayId(_, single))
       val rDel = depR.map(Ids.relId(_, single))
@@ -344,7 +343,7 @@ object DiffPipeline {
         case other => throw new IllegalArgumentException(other)
       }
       val pipeline = new ImportPipeline(session, mapping, srid)
-      val delta = timed("diff", "rebuild-stages") {
+      val delta = Obs.span("rebuild-stages") {
         val delta = pipeline.run(bundle, resolve = Some(resolve))
         // force the shared rebuild caches ONCE, so the concurrent table
         // writes below only consume them and never duplicate the work
@@ -355,9 +354,9 @@ object DiffPipeline {
         case (name, rows) =>
           val idc = idColFor(mapping, name)
           val del = deleteIdsFor(confOf(mapping, name).tableType)
-          () => timed("diff", s"  write $name")(
+          () =>
             if (del.isEmpty) store.writeUnchanged(tbl(name), next, seq)
-            else store.writeDelta(tbl(name), next, seq, rows, ids(del, idc), idc))
+            else store.writeDelta(tbl(name), next, seq, rows, ids(del, idc), idc)
       }
 
       // ST5: expire-tiles side output — every geometry touched by this
@@ -365,7 +364,7 @@ object DiffPipeline {
       // expires via its deleter, update/deleter.go) plus the rebuilt ones.
       // It reads only the previous version and the filled stage caches, so
       // it drains beside the writes; queued first, as its longest task.
-      val expire = expireDir.map(dir => () => timed("diff", "expire") {
+      val expire = expireDir.map(dir => () => Obs.span("expire") {
         val geoms = for {
           (name, t) <- mapping.conf.tables.toSeq
           if t.tableType != TableType.Relation && t.tableType != TableType.RelationMember
@@ -384,14 +383,15 @@ object DiffPipeline {
           graft.operators.ExpireTiles.writeTiles(tiles, s"$dir/$next")
         }
       })
-      timed("diff", "output-writes")(drainConcurrently(expire.toSeq ++ writes))
+      Obs.span("output-writes")(drainConcurrently(expire.toSeq ++ writes))
       pipeline.unpersistAll()
     }
 
     drainConcurrently(Seq(
-      () => timed("diff", "element-writes")(drainConcurrently(elementWrites)),
+      () => Obs.span("element-writes")(drainConcurrently(elementWrites)),
       () => rebuild()))
     if (commit) store.commit(next)
+    (next, changes.length.toLong)
   }
 
   /** `c` is in the driver-side id set `want`. A UDF, not a literal IN
@@ -555,7 +555,6 @@ object DiffPipeline {
   def maintain(spark: SparkSession, mapping: CompiledMapping,
       stateDir: String, keep: Int = 2): Unit = {
     val store = new StateStore(spark, stateDir)
-    store.vacuum(ElementTables ++ Seq("wayrefs", "relrefs") ++
-      allTableNames(mapping).map(tbl), keep = keep)
+    store.vacuum(ElementTables.map(_.name) ++ allTableNames(mapping).map(tbl), keep = keep)
   }
 }

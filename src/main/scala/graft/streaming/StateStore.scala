@@ -33,57 +33,6 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   */
 final class StateStore(spark: SparkSession, dir: String) {
 
-  // A merged view passes every bucket dir as its own path (the manifest
-  // may point different buckets at different version dirs), so a full
-  // read hands Spark 100s–1000s of paths. Above the default
-  // parallelPartitionDiscovery threshold (32) Spark launches a LISTING
-  // JOB per view — ~170 ms of job overhead × ~33 tables dominated the
-  // diff apply's tail (measured 5.7 s/batch), while driver-side listing
-  // of the same dirs is sub-millisecond each. Keep discovery on the
-  // driver for the store's views; a real cluster against object storage
-  // wants the opposite, so the knob stays overridable (session conf
-  // `graft.store.listThreshold`). The setting is
-  // SCOPED to the store's own reads — set before each file-index build
-  // and restored after (r9 advice: the old constructor-global set leaked
-  // driver-side listing into every later read in the session).
-  private val listThreshold: String =
-    spark.conf.getOption("graft.store.listThreshold").getOrElse("65536")
-
-  /** Run `f` (a `spark.read.parquet` call — parquet resolves its file
-    * index eagerly at DataFrame creation) with the store's discovery
-    * threshold, restoring the session's previous value after. Store reads
-    * run concurrently (the diff apply fans table rebuilds across threads),
-    * so the save/restore is DEPTH-COUNTED: the first scope in saves the
-    * session value, the last one out restores it — plain save/restore
-    * would race two scopes into "restoring" each other's override back
-    * into the session. The counter is keyed PER SESSION (r10 advice): the
-    * conf is per-SparkSession, so a process-global counter would let
-    * interleaved scopes on two sessions (spark.newSession()) restore
-    * session A's saved threshold into session B and leak the override
-    * into A permanently. All stores of a session resolve the same
-    * threshold (env/conf), so nesting different values is not a case. */
-  private def withListScope[T](f: => T): T = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    StateStore.scopeLock.synchronized {
-      val (depth, saved) = Option(StateStore.scopes.get(spark))
-        .getOrElse((0, None))
-      val keep = if (depth == 0) spark.conf.getOption(key) else saved
-      StateStore.scopes.put(spark, (depth + 1, keep))
-      spark.conf.set(key, listThreshold)
-    }
-    try f
-    finally StateStore.scopeLock.synchronized {
-      val (depth, saved) = StateStore.scopes.get(spark)
-      if (depth == 1) {
-        StateStore.scopes.remove(spark)
-        saved match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      } else StateStore.scopes.put(spark, (depth - 1, saved))
-    }
-  }
-
   private val root = new Path(dir)
   private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -273,8 +222,7 @@ final class StateStore(spark: SparkSession, dir: String) {
     def rd(schema: StructType, rel: Seq[String]): DataFrame =
       if (rel.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else withListScope(spark.read.schema(schema)
-        .parquet(rel.map(r => new Path(base, r).toString): _*))
+      else spark.read.schema(schema).parquet(rel.map(r => new Path(base, r).toString): _*)
     val bucketPaths = (only match {
       case Some(bs) => m.buckets.filter { case (b, _) => bs(b) }
       case None => m.buckets
@@ -463,13 +411,6 @@ final class StateStore(spark: SparkSession, dir: String) {
 }
 
 private[streaming] object StateStore {
-  // withListScope's depth-counted session-conf save/restore (see there).
-  // Keyed by session IDENTITY: the threshold conf lives per SparkSession,
-  // so each session gets its own (depth, saved) pair.
-  private[streaming] val scopeLock = new Object
-  private[streaming] val scopes =
-    new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]
-
   /** Refuse a store in a format written before r13 (`what` names it). */
   private def unreadable(file: Path, what: String): Nothing =
     throw new IllegalStateException(s"$file: $what is a pre-r13 store " +

@@ -17,7 +17,7 @@ class SessionSpec extends AnyFunSuite {
       "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
       "spark.sql.autoBroadcastJoinThreshold", "spark.io.compression.codec",
       "spark.rdd.compress", "spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.session.timeZone")
+      "spark.sql.session.timeZone", "spark.sql.sources.parallelPartitionDiscovery.threshold")
     val want = Session.conf(SparkSpecBase.Cores)
     for (k <- planKeys)
       assert(spark.conf.get(k) == want(k), k)

@@ -243,15 +243,17 @@ class BucketPruneSpec extends SparkSpecBase {
   }
 
   test("diff init+apply is identical under distributed file discovery") {
-    // the store keeps partition discovery on the driver by default
-    // (StateStore.withListScope); against object storage a deployment
-    // flips graft.store.listThreshold low so Spark's PARALLEL listing
-    // jobs walk the merged-view paths instead. That execution mode must
-    // produce byte-identical output tables — run the same init+apply both
-    // ways and compare per-table row counts + an order-free row checksum.
+    // the session conf keeps partition discovery on the driver
+    // (graft.Session.conf); against object storage a deployment sets the
+    // threshold low so Spark's PARALLEL listing jobs walk the merged-view
+    // paths instead. That execution mode must produce byte-identical
+    // output tables — run the same init+apply both ways and compare
+    // per-table row counts + an order-free row checksum.
     import org.apache.spark.sql.functions._
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     def runMode(threshold: Option[String]): Map[String, (Long, Long)] = {
-      threshold.foreach(spark.conf.set("graft.store.listThreshold", _))
+      val before = spark.conf.get(key)
+      threshold.foreach(spark.conf.set(key, _))
       try {
         val stateDir = Files.createTempDirectory("graft-dist-list").toString
         DiffPipeline.init(spark, mapping, stateDir,
@@ -266,10 +268,8 @@ class BucketPruneSpec extends SparkSpecBase {
             sum(crc32(to_json(struct(df.columns.map(col): _*))))).head()
           n -> (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
         }
-      } finally spark.conf.unset("graft.store.listThreshold")
+      } finally spark.conf.set(key, before)
     }
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val before = spark.conf.get(key)
     val driverSide = runMode(None)
     // threshold=1: every multi-path store view exceeds it, so Spark runs
     // its distributed listing job — the untested-by-default branch
@@ -278,45 +278,5 @@ class BucketPruneSpec extends SparkSpecBase {
     for ((n, d) <- driverSide)
       assert(distributed(n) == d,
         s"$n diverged under distributed listing: $d vs ${distributed(n)}")
-    // and the store scoped the conf: the session value is untouched after
-    assert(spark.conf.get(key) == before,
-      "store reads leaked the discovery-threshold override into the session")
-  }
-
-  test("the discovery-threshold scope is per-session: interleaved scopes on " +
-      "two sessions never cross-restore") {
-    // r10 advice: the scope counter was process-global while the conf is
-    // per-SparkSession — interleaved store reads on two sessions could
-    // restore session A's saved threshold into session B and leak the
-    // override into A permanently. Hammer two sessions from two threads
-    // (store reads open/close the scope on every call) and assert both
-    // sessions come back to their own pre-set values.
-    import spark.implicits._
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val s2 = spark.newSession()
-    val dir = Files.createTempDirectory("graft-scope").toString
-    val store1 = new StateStore(spark, dir)
-    store1.setHashBuckets(4)
-    store1.writeBucketed("t", 0, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "id")
-    val store2 = new StateStore(s2, dir)
-    val before1 = "11111"
-    val before2 = "22222"
-    spark.conf.set(key, before1)
-    s2.conf.set(key, before2)
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val fs = Seq(store1 -> spark, store2 -> s2).map { case (st, _) =>
-        Future { (1 to 100).foreach(_ => st.read("t", 0)) }
-      }
-      Await.result(Future.sequence(fs), Duration.Inf)
-      pool.shutdown()
-      assert(spark.conf.get(key) == before1,
-        s"session 1 threshold clobbered: ${spark.conf.get(key)}")
-      assert(s2.conf.get(key) == before2,
-        s"session 2 threshold clobbered: ${s2.conf.get(key)}")
-    } finally { spark.conf.unset(key); s2.conf.unset(key) }
   }
 }

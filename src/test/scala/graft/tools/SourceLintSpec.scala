@@ -71,6 +71,21 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("only graft/obs registers a Spark listener in src/main") {
+    // one meter: a listener of its own is one more ad-hoc meter beside
+    // graft.obs.Obs (Bench, QueryProfile, the diff timing and the import
+    // statistics each had one). The needles are split so this file does
+    // not match itself.
+    val needles = Seq("addSpark" + "Listener", "listenerManager" + ".register")
+    val offenders = for {
+      f <- scalaFiles("src/main/scala")
+      if !f.getPath.startsWith("src/main/scala/graft/obs/")
+      (n, l) <- linesOf(f)
+      if needles.exists(l.contains)
+    } yield s"${f.getPath}:$n: $l"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("every SPARK_GRAFT_* name in src/main is documented in README.md") {
     // the env surface is what a user can set; a name the README does not
     // carry is an undocumented knob
