@@ -9,6 +9,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.mapping.{CompiledMapping, MappingConf}
 import graft.model.{Kind, Op}
 import graft.obs.Obs
+import graft.operators.WayAssembly
 import graft.sources.{OsmPbf, OsmPbfSynth, TagFilters}
 import graft.sources.OsmXml.Bundle
 import graft.streaming.DiffPipeline
@@ -335,16 +336,11 @@ object Bench {
         val bucketed = reps(ctx, s"${l}_bucketed", r.bucketedReps, gated = false) { i =>
           val bundle = read()
           bundle.coords.count(); bundle.ways.count(); bundle.relations.count() // untimed parse
-          val (wayrefs, coords) = (s"graft_bench_${l}_wayrefs", s"graft_bench_${l}_coords")
+          val prefix = s"graft_bench_$l"
           var tBucketize = 0.0
           val stored: (DataFrame, DataFrame) => DataFrame = (w, c) => {
-            if (i == 1) tBucketize = timed {
-              graft.operators.Bucketing.writeBucketed(w.select(col("id").as("way_id"),
-                size(col("refs")).as("nrefs"), posexplode(col("refs")).as(Seq("pos", "id"))),
-                wayrefs, "id", nBuckets = Session.cores)
-              graft.operators.Bucketing.writeBucketed(c, coords, "id", nBuckets = Session.cores)
-            }
-            graft.operators.WayAssembly.resolveStored(spark.table(wayrefs), spark.table(coords))
+            if (i == 1) tBucketize = timed(WayAssembly.writeStore(w, c, prefix, Session.cores))
+            WayAssembly.resolveStore(spark, prefix)
           }
           // box-chosen stage storage at every scale: the r13 basis of this A/B
           val t1 = System.nanoTime()
@@ -474,8 +470,9 @@ object Bench {
   }
 
   /** Long-stream drift, as one rep: `batches` COMMITTED node-move batches
-    * (each a different node set) through applyDiff + maintain. Flat first
-    * vs last 10 medians and a bounded file count: the store keeps up. */
+    * (each a different node set) through applyDiff, whose commits run the
+    * store's retention. Flat first vs last 10 medians and a bounded file
+    * count: the store keeps up. */
   final case class SoakRow(copies: Int, batches: Int, buckets: Int)
   val Soak = SoakRow(20, 50, 64)
 
@@ -494,10 +491,7 @@ object Bench {
     val run = reps(ctx, "soak", 1, gated = false) { _ =>
       (1 to r.batches).map { i =>
         val batch = nodeMoves(base, (col("id") + lit(i)) % 997 === 0, i * 1e-6).localCheckpoint()
-        val dt = timed {
-          DiffPipeline.applyDiff(spark, mapping, state, batch)
-          DiffPipeline.maintain(spark, mapping, state)
-        }
+        val dt = timed(DiffPipeline.applyDiff(spark, mapping, state, batch))
         if (i % 10 == 0 || i == 1)
           System.err.println(f"[bench] soak batch $i/${r.batches} apply=$dt%.1fs")
         dt

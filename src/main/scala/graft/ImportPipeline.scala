@@ -28,7 +28,7 @@ final class ImportPipeline(
       ImportPipeline.defaultStorage,
     // J1 strategy hook: (filtered ways, projected coords) => assembled
     // frame. Default is the in-pipeline AQE shuffle join; the bench's
-    // bucketed A/B injects WayAssembly.resolveStored over a pre-bucketed
+    // bucketed A/B injects WayAssembly.resolveStore over a pre-bucketed
     // element store (the reference's ID-sorted cache layout analog).
     assembler: (DataFrame, DataFrame) => DataFrame = WayAssembly.resolve)
     extends Serializable {

@@ -266,23 +266,12 @@ object Main {
       val assembler = a.str("store") match {
         case None => graft.operators.WayAssembly.resolve _
         case Some(prefix) =>
-          import org.apache.spark.sql.functions.{col, posexplode, size}
           val reuse = a.bool("store-reuse")
           val nBuckets = a.int("store-buckets", 32)
           (ways: org.apache.spark.sql.DataFrame,
            coords: org.apache.spark.sql.DataFrame) => {
-            if (!reuse) {
-              val exploded = ways.select(col("id").as("way_id"),
-                size(col("refs")).as("nrefs"),
-                posexplode(col("refs")).as(Seq("pos", "id")))
-              graft.operators.Bucketing.writeBucketed(
-                exploded, s"${prefix}_wayrefs", "id", nBuckets)
-              graft.operators.Bucketing.writeBucketed(
-                coords, s"${prefix}_coords", "id", nBuckets)
-            }
-            graft.operators.WayAssembly.resolveStored(
-              spark.table(s"${prefix}_wayrefs"),
-              spark.table(s"${prefix}_coords"))
+            if (!reuse) graft.operators.WayAssembly.writeStore(ways, coords, prefix, nBuckets)
+            graft.operators.WayAssembly.resolveStore(spark, prefix)
           }
       }
       val tables = DiffPipeline.init(spark, mapping, cachedir, bundle,

@@ -33,7 +33,9 @@ import graft.sources.OsmXml.Bundle
   *     the rebuilt delta; generalized tables refresh the same way from the
   *     delta (ST6);
   *  5. commit the new version (ST4) — crash-before-commit replays onto the
-  *     previous committed version, which delete-then-insert makes safe.
+  *     previous committed version, which delete-then-insert makes safe;
+  *     the commit also reclaims the versions nothing committed reads
+  *     ([[StateStore.commit]]).
   *
   * Everything O(changed) lives on the driver, like the reference's keyed
   * cache reads (cache/delta.go:162-198): the change file is collected
@@ -163,7 +165,7 @@ object DiffPipeline {
         () => store.writeBucketed(tbl(n), startSeq, df, idColFor(mapping, n))
       }))
       pipeline.unpersistAll()
-      store.commit(startSeq)
+      Obs.span("commit")(store.commit(startSeq))
       // the elements: every coord (tagged nodes among them), way and relation
       (startSeq, Seq("coords", "ways", "relations").flatMap(writes.find).map(_.outputRows).sum)
     }
@@ -179,15 +181,12 @@ object DiffPipeline {
       stateDir: String): Map[String, DataFrame] = {
     val store = new StateStore(spark, stateDir)
     val seq = store.currentSeq
-    val names = allTableNames(mapping)
+    val names = mapping.conf.tables.keys.toSeq ++ mapping.conf.generalizedTables.keys.toSeq
     val out = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
     drainConcurrently(names.map(n =>
       () => { out.put(n, store.read(tbl(n), seq)); () }))
     names.map(n => n -> out.get(n)).toMap
   }
-
-  private def allTableNames(mapping: CompiledMapping): Seq[String] =
-    mapping.conf.tables.keys.toSeq ++ mapping.conf.generalizedTables.keys.toSeq
 
   /** The element tables of a committed state version — the `-appendcache`
     * read side (import_/import.go:84-101 appends onto the open cache). */
@@ -213,7 +212,9 @@ object DiffPipeline {
     * `commit = false` it gives the reference's `-commit-latest` batch
     * mode (update/cmd.go:96-134): apply N diffs version-by-version, then
     * advance the pointer once at the end — a crash mid-batch replays the
-    * whole batch because the pointer never moved.
+    * whole batch because the pointer never moved. A commit also runs the
+    * store's retention ([[StateStore.commit]]), as the span's `commit`
+    * phase.
     */
   def applyDiff(spark: SparkSession, mapping: CompiledMapping, stateDir: String,
       diff: DataFrame, srid: Int = 3857,
@@ -390,7 +391,7 @@ object DiffPipeline {
     drainConcurrently(Seq(
       () => Obs.span("element-writes")(drainConcurrently(elementWrites)),
       () => rebuild()))
-    if (commit) store.commit(next)
+    if (commit) Obs.span("commit")(store.commit(next))
     (next, changes.length.toLong)
   }
 
@@ -437,9 +438,7 @@ object DiffPipeline {
       srid: Int = 3857, expireDir: Option[String] = None,
       expireZoom: Int = graft.operators.ExpireTiles.DefaultZoom,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    // maxFilesPerTrigger caps each micro-batch (AvailableNow honors it):
-    // a backlog replay then runs retention every N files — the live
-    // minutely cadence — instead of once at the end of one giant batch.
+    // maxFilesPerTrigger caps each micro-batch (AvailableNow honors it).
     // ORDERING: within a micro-batch files apply in sequence order (parsed
     // from the filename), but ACROSS micro-batches Spark's file source
     // orders by modification time. Live replication satisfies that (files
@@ -482,16 +481,17 @@ object DiffPipeline {
   }
 
   /** The body of one [[runStream]] micro-batch: apply each change file as
-    * its own committed transaction (sequence order), then run retention.
-    * Split out so the long-stream soak (Bench / RunStreamSpec) can drive
-    * the exact production maintenance path — apply + compaction + vacuum —
-    * without a streaming source in the loop.
+    * its own committed transaction (sequence order); each commit runs the
+    * store's retention. Split out so the long-stream soak (Bench /
+    * RunStreamSpec) drives the exact production path — apply, compaction
+    * and retention — without a streaming source in the loop.
     *
     * Sequence-order gate (r10 verdict #3): with `maxFilesPerTrigger` set,
     * cross-batch delivery order is file MTIME — replaying a backlog with
     * non-monotonic mtimes would silently apply diffs out of order. The
-    * store tracks the last applied sequence (parsed from the filename);
-    * a file whose sequence regresses below it ABORTS the batch with a
+    * store tracks the last applied sequence (parsed from the filename) in
+    * its `replseq.txt` pointer, written after each file's commit; a file
+    * whose sequence regresses below it ABORTS the batch with a
     * clear error — the reference's last.state.txt gate
     * (update/cmd.go:231-257). Skipping instead would LOSE the diff: the
     * stream checkpoint never re-delivers a file, so a regressed sequence
@@ -541,20 +541,5 @@ object DiffPipeline {
         store.writeReplSeq(last, batchId.getOrElse(-1L), seqBefore, firstName)
       }
     }
-    // retention: drop version dirs no longer referenced by the
-    // committed manifests (segments fold into a fresh base every
-    // maxSegments-th write, so old segment dirs become unreferenced
-    // in bounded time — without this a long stream accumulates one
-    // ins/del dir pair per table per batch forever)
-    if (files.nonEmpty) maintain(spark, mapping, stateDir)
-  }
-
-  /** Retention pass over every store table (elements, reverse-ref indexes,
-    * output tables): drop version dirs nothing committed references. This
-    * is exactly what [[runStream]] runs after each micro-batch. */
-  def maintain(spark: SparkSession, mapping: CompiledMapping,
-      stateDir: String, keep: Int = 2): Unit = {
-    val store = new StateStore(spark, stateDir)
-    store.vacuum(ElementTables.map(_.name) ++ allTableNames(mapping).map(tbl), keep = keep)
   }
 }

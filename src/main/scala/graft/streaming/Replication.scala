@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{InputStream, OutputStream}
+import java.io.{ByteArrayInputStream, InputStream}
 import java.time.{Duration, Instant}
 import java.time.format.DateTimeFormatter
 
@@ -37,10 +37,11 @@ object Replication {
       timestamp = kv.get("timestamp").map(Instant.parse).getOrElse(Instant.EPOCH))
   }
 
-  def writeState(s: State, out: OutputStream): Unit = {
+  /** The sequence line comes last, so a write cut short after any earlier
+    * line fails to parse and a [[Pointer]] tmp that parses is complete. */
+  private[graft] def stateText(s: State): String = {
     val ts = DateTimeFormatter.ISO_INSTANT.format(s.timestamp).replace(":", "\\:")
-    val txt = s"#${Instant.now()}\nsequenceNumber=${s.sequence}\ntimestamp=$ts\n"
-    out.write(txt.getBytes("UTF-8"))
+    s"#${Instant.now()}\ntimestamp=$ts\nsequenceNumber=${s.sequence}\n"
   }
 
   /** Sequence -> path within a replication endpoint: 9 digits split 3/3/3
@@ -207,19 +208,14 @@ object Replication {
     * command's `last.state.txt` and `.osc` sidecar states). */
   def readLocalStateAt(spark: SparkSession, path: String): Option[State] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(parseState(in)) finally in.close()
-    }
+    Pointer.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)(t =>
+      parseState(new ByteArrayInputStream(t.getBytes("UTF-8"))))
   }
 
+  /** Replace the state file at `path` through the [[Pointer]] protocol. */
   def writeLocalStateAt(spark: SparkSession, path: String, s: State): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try writeState(s, out) finally out.close()
+    Pointer.replace(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, stateText(s))
   }
 
   /** One full replication cycle (update/cmd.go:231-257 assembled):

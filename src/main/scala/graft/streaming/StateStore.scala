@@ -25,11 +25,12 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * store can't; copy-on-write bucket rewrites were measured to amplify
   * a spread-out 10³-element batch into a near-full store rewrite.
   *
-  * A batch writes all tables at `seq+1`, then atomically commits by
-  * rewriting `state.txt` — the analog of the reference's `last.state.txt`
-  * (update/cmd.go:369-384). A crash before commit leaves half-written
-  * `v<seq+1>` dirs that the retry simply overwrites: the delete-then-insert
-  * batch is idempotent (ST2).
+  * A batch writes all tables at `seq+1`, then commits by replacing the
+  * `state.txt` [[Pointer]] — the analog of the reference's
+  * `last.state.txt` (update/cmd.go:369-384). A crash before commit leaves
+  * half-written `v<seq+1>` dirs that the retry simply overwrites: the
+  * delete-then-insert batch is idempotent (ST2). The commit also reclaims
+  * the version dirs nothing committed can reach any more.
   */
 final class StateStore(spark: SparkSession, dir: String) {
 
@@ -37,28 +38,20 @@ final class StateStore(spark: SparkSession, dir: String) {
   private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def statePath = new Path(root, "state.txt")
-  private def tmpPath = new Path(root, ".state.txt.tmp")
   private def bucketsPath = new Path(root, "buckets.txt")
+  private def replSeqPath = new Path(root, "replseq.txt")
 
-  // ---- small control files --------------------------------------------------
+  // ---- manifest files -------------------------------------------------------
 
   private def readSmall(p: Path): String = {
     val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
   private def writeSmall(p: Path, s: String): Unit = {
     val out = fs.create(p, true)
     try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
-
-  private def readSeqFile(p: Path): Option[Long] = readSmall(p).trim.toLongOption
 
   // ---- bucketing ------------------------------------------------------------
 
@@ -71,19 +64,17 @@ final class StateStore(spark: SparkSession, dir: String) {
     * sparse or mangled id space. Pruning semantics are identical: the
     * bucket of an id is computable without a lookup, so a changed-id set
     * still maps to ≤ min(|ids|, n) buckets. */
-  def setHashBuckets(n: Int): Unit = writeSmall(bucketsPath, s"hash:$n")
+  def setHashBuckets(n: Int): Unit = Pointer.replace(fs, bucketsPath, s"hash:$n\n")
 
   // A pre-r13 store bucketed by id range (`bucketbits.txt`, id >> bits)
   // is refused: read as hash buckets, it would silently prune the wrong
   // buckets.
-  private lazy val nBuckets: Int = {
-    val rangeBits = new Path(root, "bucketbits.txt")
-    if (fs.exists(bucketsPath))
-      readSmall(bucketsPath).trim.stripPrefix("hash:").toInt
-    else if (fs.exists(rangeBits))
-      StateStore.unreadable(rangeBits, "id-range bucketing")
-    else 1024
-  }
+  private lazy val nBuckets: Int =
+    Pointer.read(fs, bucketsPath)(_.trim.stripPrefix("hash:").toInt).getOrElse {
+      val rangeBits = new Path(root, "bucketbits.txt")
+      if (fs.exists(rangeBits)) StateStore.unreadable(rangeBits, "id-range bucketing")
+      else 1024
+    }
 
   def bucketOf(idCol: Column): Column = pmod(xxhash64(idCol), lit(nBuckets.toLong))
 
@@ -97,30 +88,10 @@ final class StateStore(spark: SparkSession, dir: String) {
 
   // ---- sequencing -----------------------------------------------------------
 
-  /** Committed sequence, or -1 when the store is empty.
-    *
-    * Crash recovery: commit() writes the temp pointer only AFTER every
-    * table of that version is durably on disk, so a parseable temp file is
-    * itself proof of a committed version — a crash between the delete and
-    * the rename (the non-atomic window) leaves only the temp. Finish the
-    * interrupted rename here instead of refusing with "run init first".
-    */
-  def currentSeq: Long = {
-    if (fs.exists(tmpPath)) {
-      readSeqFile(tmpPath) match {
-        case Some(seq) =>
-          if (fs.exists(statePath)) fs.delete(statePath, false)
-          fs.rename(tmpPath, statePath)
-          return seq
-        case None => fs.delete(tmpPath, false) // torn write: not yet committed
-      }
-    }
-    if (!fs.exists(statePath)) -1L
-    else readSeqFile(statePath).getOrElse(-1L)
-  }
-
-  private def replSeqPath = new Path(root, "replseq.txt")
-  private def replSeqTmp = new Path(root, ".replseq.txt.tmp")
+  /** Committed sequence, or -1 when the store is empty. `state.txt` is a
+    * [[Pointer]]: a commit a crash cut short before its rename reads as
+    * the previous sequence. */
+  def currentSeq: Long = Pointer.read(fs, statePath)(_.trim.toLong).getOrElse(-1L)
 
   /** Sequence-order gate state for streaming replication replays (see
     * DiffPipeline.applyBatchFiles):
@@ -129,63 +100,50 @@ final class StateStore(spark: SparkSession, dir: String) {
     * sequence high-water before that batch started (the rollback baseline
     * when a crashed batch is re-delivered), and the basename of the
     * batch's first file (replay identity must not rest on batchId alone:
-    * a rebuilt checkpoint restarts batchIds at 0). Written tmp+rename
-    * like commit(): a plain truncating overwrite torn by a crash would
-    * parse as None and silently DISABLE the out-of-order gate in exactly
-    * the crash-and-replay scenario it exists for; with the rename, a torn
-    * write leaves the previous state intact. A crash after commit() but
-    * before this write just re-applies the file on restart, which
-    * delete-then-insert makes safe (ST2). */
-  def readReplSeq: Option[(Long, Long, Long, String)] = {
-    // Mirror currentSeq's crash recovery: writeReplSeq's delete→rename has a
-    // window where replseq.txt is absent but a fully-written tmp exists. A
-    // parseable tmp is proof of a completed write (writeSmall closed it), so
-    // finish the interrupted rename instead of returning None — None here
-    // silently DISABLES the out-of-order gate in exactly the crash-and-replay
-    // scenario it exists for. An unparseable tmp is a torn write: discard it.
-    if (fs.exists(replSeqTmp)) {
-      val parsed = parseReplSeq(readSmall(replSeqTmp))
-      parsed match {
-        case Some(state) =>
-          if (fs.exists(replSeqPath)) fs.delete(replSeqPath, false)
-          // a refused rename (rare fs semantics) is non-fatal on the READ
-          // side: the tmp still holds the newest committed state, so serve
-          // it either way and let the next read retry the rename
-          fs.rename(replSeqTmp, replSeqPath)
-          return Some(state)
-        case None => fs.delete(replSeqTmp, false)
-      }
-    }
-    if (!fs.exists(replSeqPath)) None
-    else parseReplSeq(readSmall(replSeqPath))
-  }
-
-  private def parseReplSeq(s: String): Option[(Long, Long, Long, String)] =
-    s.trim.split("\\s+", 4) match {
-      case Array(a, b, c, f) =>
-        for (x <- a.toLongOption; y <- b.toLongOption; z <- c.toLongOption)
-          yield (x, y, z, f)
-      case _ => None
-    }
+    * a rebuilt checkpoint restarts batchIds at 0). A [[Pointer]]: a torn
+    * overwrite that read as no state would DISABLE the out-of-order gate
+    * in exactly the crash-and-replay scenario it exists for. A crash after
+    * commit() but before this write just re-applies the file on restart,
+    * which delete-then-insert makes safe (ST2). */
+  def readReplSeq: Option[(Long, Long, Long, String)] =
+    Pointer.read(fs, replSeqPath)(_.trim.split("\\s+", 4) match {
+      case Array(a, b, c, f) => (a.toLong, b.toLong, c.toLong, f)
+      case other => throw new IllegalArgumentException(s"${other.length} fields, not 4")
+    })
 
   def writeReplSeq(lastSeq: Long, batchId: Long, seqBefore: Long,
-      firstFile: String): Unit = {
-    writeSmall(replSeqTmp, s"$lastSeq $batchId $seqBefore $firstFile\n")
-    if (fs.exists(replSeqPath)) fs.delete(replSeqPath, false)
-    // HDFS-style FileSystems report rename failure by returning false, not
-    // throwing; the gate's correctness hangs on this write landing, so a
-    // silent false would validate the next batch against a stale baseline.
-    if (!fs.rename(replSeqTmp, replSeqPath))
-      throw new java.io.IOException(
-        s"replseq gate state rename failed: $replSeqTmp -> $replSeqPath")
+      firstFile: String): Unit =
+    Pointer.replace(fs, replSeqPath, s"$lastSeq $batchId $seqBefore $firstFile\n")
+
+  /** Commit version `seq`: replace the `state.txt` pointer, then reclaim
+    * what no reader of `seq` or of the `Retained` versions before it can
+    * reach (see [[vacuum]]). Retention rides on every commit, so no caller
+    * can forget it: without it a long stream keeps one ins/del dir pair
+    * per table per batch forever. */
+  def commit(seq: Long): Unit = {
+    Pointer.replace(fs, statePath, s"$seq\n")
+    vacuum(seq)
   }
 
-  /** Commit via temp file + rename; see currentSeq for the crash story. */
-  def commit(seq: Long): Unit = {
-    writeSmall(tmpPath, s"$seq\n")
-    if (fs.exists(statePath)) fs.delete(statePath, false)
-    fs.rename(tmpPath, statePath)
-  }
+  /** In every table dir that holds `v<seq>/_manifest`, drop the version
+    * dirs older than `seq - Retained` that the committed manifest does not
+    * reference (a table carries its base buckets and delta segments
+    * forward until a compaction folds them into a new base). */
+  private def vacuum(seq: Long): Unit =
+    for (table <- fs.listStatus(root) if table.isDirectory) {
+      val name = table.getPath.getName
+      if (fs.exists(manifestPath(name, seq))) {
+        val m = readManifest(name, seq)
+        val referenced = (m.buckets.values ++ m.segments.flatMap(s => Seq(s.ins, s.del)))
+          .map(_.split("/")(0).stripPrefix("v").toLong).toSet
+        for (st <- fs.listStatus(table.getPath)) {
+          val v = st.getPath.getName.stripPrefix("v")
+          if (v.nonEmpty && v.forall(_.isDigit) && v.toLong < seq - StateStore.Retained &&
+            !referenced(v.toLong))
+            fs.delete(st.getPath, true)
+        }
+      }
+    }
 
   // ---- tables ---------------------------------------------------------------
 
@@ -386,31 +344,14 @@ final class StateStore(spark: SparkSession, dir: String) {
     val m = readManifest(name, prevSeq)
     writeManifest(name, seq, m.schema, m.buckets, m.segments)
   }
-
-  /** Drop version dirs older than `keep` behind the committed one — except
-    * dirs still referenced by the committed manifest (bucketed tables carry
-    * old bucket dirs and delta segments forward until a compaction). */
-  def vacuum(names: Seq[String], keep: Int = 1): Unit = {
-    val cur = currentSeq
-    for (name <- names) {
-      val referenced: Set[Long] =
-        if (fs.exists(manifestPath(name, cur))) {
-          val m = readManifest(name, cur)
-          (m.buckets.values ++ m.segments.flatMap(s => Seq(s.ins, s.del)))
-            .map(_.split("/")(0).stripPrefix("v").toLong).toSet
-        } else Set.empty
-      val d = new Path(root, name)
-      if (fs.exists(d)) fs.listStatus(d).foreach { st =>
-        val v = st.getPath.getName.stripPrefix("v")
-        if (v.forall(_.isDigit) && v.nonEmpty && v.toLong < cur - keep &&
-          !referenced.contains(v.toLong))
-          fs.delete(st.getPath, true)
-      }
-    }
-  }
 }
 
 private[streaming] object StateStore {
+  /** Versions a commit keeps behind the committed one, referenced or
+    * not: a reader that resolved its paths just before a commit still
+    * finds its files after it. */
+  private val Retained = 2
+
   /** Refuse a store in a format written before r13 (`what` names it). */
   private def unreadable(file: Path, what: String): Nothing =
     throw new IllegalStateException(s"$file: $what is a pre-r13 store " +

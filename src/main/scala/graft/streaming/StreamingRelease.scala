@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -17,7 +19,7 @@ import graft.operators.CorpusRelease
   *
   * Layout under `outRoot`:
   *   gen=<batchId>/   — one immutable release per applied micro-batch
-  *   HEAD             — the committed generation id (atomic tmp+rename)
+  *   HEAD             — the committed generation id (a [[Pointer]])
   *   _checkpoint/     — the stream's own progress
   *
   * Exactly-once without a lakehouse: generations are KEYED BY BATCH ID,
@@ -25,7 +27,7 @@ import graft.operators.CorpusRelease
   * (mode(overwrite)) and re-points HEAD at the same place — a replay of
   * an already-committed batch is detected from HEAD (generation ids are
   * monotone) and skipped entirely. Readers only ever follow HEAD, which
-  * is swapped by rename AFTER the generation is fully written, so a
+  * is replaced AFTER the generation is fully written, so a
   * half-written generation is never visible. Superseded generations are
   * the caller's retention decision (they are also the time-travel story:
   * every past release stays addressable until pruned with [[prune]]).
@@ -46,29 +48,22 @@ object StreamingRelease {
     StructField("n_chars", LongType),
     StructField("deleted", BooleanType)))
 
-  /** The committed generation id, or -1 before the first commit. An
-    * unparseable HEAD (empty/torn — possible if a crash interleaved with a
-    * non-atomic rename fallback) heals to the highest `gen=<id>` dir on
+  private lazy val fs = FileSystem.getLocal(new Configuration())
+
+  /** The committed generation id, or -1 before the first commit. HEAD is a
+    * [[Pointer]]; one it cannot parse (written by hand, or torn by a
+    * writer outside this protocol) heals to the highest `gen=<id>` dir on
     * disk rather than failing every later entry point permanently: the
     * generations themselves are immutable and keyed by id, so the largest
     * one present IS the last fully-written release. */
-  def headGeneration(outRoot: String): Long = {
-    val f = new java.io.File(s"$outRoot/HEAD")
-    val parsed: Option[Long] =
-      if (!f.isFile) None
-      else {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString.trim.toLongOption finally src.close()
-      }
-    parsed.getOrElse {
-      if (f.isFile) // HEAD exists but is unreadable — heal from the dirs
-        Option(new java.io.File(outRoot).listFiles()).getOrElse(Array.empty)
+  def headGeneration(outRoot: String): Long =
+    (try Pointer.read(fs, new Path(outRoot, "HEAD"))(_.trim.toLong) catch {
+      case _: IllegalStateException =>
+        Some(Option(new java.io.File(outRoot).listFiles()).getOrElse(Array.empty)
           .flatMap(d => Option.when(d.isDirectory && d.getName.startsWith("gen="))(
             d.getName.stripPrefix("gen=")).flatMap(_.toLongOption))
-          .foldLeft(-1L)(math.max)
-      else -1L
-    }
-  }
+          .foldLeft(-1L)(math.max))
+    }).getOrElse(-1L)
 
   /** Directory of the committed release (HEAD), or the base release when
     * nothing has been committed yet. */
@@ -77,24 +72,8 @@ object StreamingRelease {
     if (g < 0) baseDir else s"$outRoot/gen=$g"
   }
 
-  private[streaming] def commitHead(outRoot: String, gen: Long): Unit = {
-    val dir = new java.io.File(outRoot)
-    if (!dir.isDirectory) dir.mkdirs()
-    val tmp = new java.io.File(dir, s".HEAD.tmp.$gen")
-    val w = new java.io.FileOutputStream(tmp)
-    // fsync before the rename: without it a crash can promote an empty tmp
-    // file to HEAD (rename is atomic for the NAME, not the CONTENT)
-    try {
-      w.write(gen.toString.getBytes("UTF-8"))
-      w.getFD.sync()
-    } finally w.close()
-    val head = new java.io.File(dir, "HEAD")
-    // rename-over is atomic on POSIX; fall back to delete+rename elsewhere
-    if (!tmp.renameTo(head)) {
-      head.delete()
-      require(tmp.renameTo(head), s"cannot commit HEAD for gen=$gen")
-    }
-  }
+  private[streaming] def commitHead(outRoot: String, gen: Long): Unit =
+    Pointer.replace(fs, new Path(outRoot, "HEAD"), s"$gen\n")
 
   /** Apply one micro-batch: split tombstones from upserts, derive the new
     * generation from the previous one, commit HEAD last. Idempotent —

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path => JPath}
 import java.util.zip.GZIPOutputStream
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.{DiffPipeline, Replication}
 
 /** CLI dispatch end-to-end (cmd/imposm/main.go analog): import → deploy →
@@ -368,6 +370,41 @@ class MainSpec extends SparkSpecBase {
       .head().getAs[String]("name") == "Seven")
     assert(Replication.readLocalStateAt(spark, s"$state/last.state.txt")
       .map(_.sequence).contains(7L))
+  }
+
+  test("diff over 9 change files keeps only referenced and the last 2 versions") {
+    val mappingFile = writeMapping()
+    val state = Files.createTempDirectory("graft-retain-state").toString
+    val mapping = new graft.mapping.CompiledMapping(
+      graft.mapping.MappingConf.fromFile(mappingFile))
+    DiffPipeline.init(spark, mapping, state,
+      graft.sources.OsmXml.read(spark, writeBaseOsm()))
+    val dir = Files.createTempDirectory("graft-retain-osc")
+    // nine versions pass one compaction: a table's 9th segment folds the
+    // 8 before it into a fresh base
+    val files = (1 to 9).map(i => oscWithState(dir, i, s"N$i"))
+    Main.run(Array("diff", "-mapping", mappingFile, "-cachedir", state) ++ files)
+    val seq = new graft.streaming.StateStore(spark, state).currentSeq
+    assert(seq == 9)
+    assert(DiffPipeline.readTables(spark, mapping, state)("poi")
+      .head().getAs[String]("name") == "N9")
+    val root = java.nio.file.Paths.get(state)
+    def names(p: JPath): Set[String] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val tables = names(root).filter(t => Files.exists(root.resolve(s"$t/v$seq/_manifest")))
+    assert(tables.contains("coords") && tables.contains("tbl_poi"))
+    val coords = new String(Files.readAllBytes(root.resolve(s"coords/v$seq/_manifest")), "UTF-8")
+    assert(!coords.contains("SEGO\t") && coords.contains(s"v$seq/__b="),
+      "the 9th write must compact coords into a fresh base")
+    for (t <- tables) {
+      val manifest = Files.readAllLines(root.resolve(s"$t/v$seq/_manifest")).asScala.tail
+      val referenced = manifest.flatMap("(?:^|\t)v(\\d+)/".r.findAllMatchIn(_).map(_.group(1).toLong))
+      val stale = names(root.resolve(t)).filter(_.matches("v\\d+")).map(_.drop(1).toLong)
+        .filter(v => v < seq - 2 && !referenced.contains(v))
+      assert(stale.isEmpty, s"$t keeps unreferenced versions ${stale.toSeq.sorted}")
+    }
   }
 
   test("-config json supplies flags; command line overrides; schemas rename dirs") {

@@ -122,18 +122,20 @@ class ObsSpec extends SparkSpecBase {
     }
   }
 
-  test("one applyBatchFiles prints exactly one record, with the apply phases " +
-      "as its children") {
-    val mapping = new CompiledMapping(MappingConf.fromString(
-      """tables:
-        |  pois:
-        |    type: point
-        |    columns:
-        |    - {name: osm_id, type: id}
-        |    - {name: geometry, type: geometry}
-        |    mapping:
-        |      amenity: [cafe]
-        |""".stripMargin))
+  private val cafes = new CompiledMapping(MappingConf.fromString(
+    """tables:
+      |  pois:
+      |    type: point
+      |    columns:
+      |    - {name: osm_id, type: id}
+      |    - {name: geometry, type: geometry}
+      |    mapping:
+      |      amenity: [cafe]
+      |""".stripMargin))
+
+  /** A dir holding two cafes and a sequence-numbered change file that
+    * moves one and adds a third: (dir, base .osm, .osc). */
+  private def cafeFiles(): (String, String, String) = {
     def node(id: Long, lon: Double) =
       s"""<node id="$id" version="1" lat="43.73" lon="$lon"><tag k="amenity" v="cafe"/></node>"""
     val dir = Files.createTempDirectory("graft-obs").toString
@@ -142,37 +144,61 @@ class ObsSpec extends SparkSpecBase {
       Files.write(p, body.getBytes("UTF-8"))
       p.toString
     }
-    val osm = write("base.osm", s"""<osm version="0.6">${node(1, 7.42)}${node(2, 7.43)}</osm>""")
-    val osc = write("000000001.osc", s"""<osmChange version="0.6"><modify>${node(1, 7.421)}""" +
-      s"""</modify><create>${node(3, 7.44)}</create></osmChange>""")
-    def records(f: => Unit): Seq[com.fasterxml.jackson.databind.JsonNode] = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val err = System.err
-      System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-      try f finally System.setErr(err)
-      val json = new com.fasterxml.jackson.databind.ObjectMapper()
-      buf.toString("UTF-8").linesIterator.filter(_.startsWith("{\"record\":")).map(json.readTree).toSeq
-    }
-    def phases(n: com.fasterxml.jackson.databind.JsonNode): Set[String] =
-      Option(n.get("phases")).fold(Set.empty[String])(_.elements().asScala.map(_.get("name").asText).toSet)
+    (dir, write("base.osm", s"""<osm version="0.6">${node(1, 7.42)}${node(2, 7.43)}</osm>"""),
+      write("000000001.osc", s"""<osmChange version="0.6"><modify>${node(1, 7.421)}""" +
+        s"""</modify><create>${node(3, 7.44)}</create></osmChange>"""))
+  }
+
+  /** The `{"record":…}` lines `f` prints on stderr. */
+  private def records(f: => Unit): Seq[com.fasterxml.jackson.databind.JsonNode] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try f finally System.setErr(err)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    buf.toString("UTF-8").linesIterator.filter(_.startsWith("{\"record\":")).map(json.readTree).toSeq
+  }
+
+  private def phases(n: com.fasterxml.jackson.databind.JsonNode): Set[String] =
+    Option(n.get("phases")).fold(Set.empty[String])(_.elements().asScala.map(_.get("name").asText).toSet)
+
+  test("one applyBatchFiles prints exactly one record, with the apply phases " +
+      "as its children") {
+    val (dir, osm, osc) = cafeFiles()
     val state = s"$dir/state"
 
-    val Seq(init) = records(DiffPipeline.init(spark, mapping, state, OsmXml.read(spark, osm),
+    val Seq(init) = records(DiffPipeline.init(spark, cafes, state, OsmXml.read(spark, osm),
       nBuckets = 4))
     assert(init.get("record").asText == "diff.init" && init.get("version").asLong == 0)
     assert(init.get("changed").asLong == 2, "init wrote two coords")
-    assert(phases(init.get("span")) == Set("element-writes", "stages", "table-writes"))
+    assert(phases(init.get("span")) == Set("element-writes", "stages", "table-writes", "commit"))
 
-    val Seq(apply) = records(DiffPipeline.applyBatchFiles(spark, mapping, state, Seq(osc),
+    val Seq(apply) = records(DiffPipeline.applyBatchFiles(spark, cafes, state, Seq(osc),
       expireDir = Some(s"$dir/expire")))
     assert(apply.get("record").asText == "diff.apply")
     assert(apply.get("version").asLong == 1 && apply.get("changed").asLong == 2)
     val span = apply.get("span")
-    assert(phases(span) == Set("element-writes", "closure", "rebuild-stages", "output-writes"))
+    assert(phases(span) ==
+      Set("element-writes", "closure", "rebuild-stages", "output-writes", "commit"))
     val children = span.get("phases").elements().asScala.map(p => p.get("name").asText -> p).toMap
     assert(phases(children("element-writes")) ==
       Set("coords", "nodes", "ways", "relations", "wayrefs", "relrefs"))
     assert(phases(children("output-writes")) == Set("expire"))
     assert(span.get("jobs").asInt > 0 && span.get("tasks").asLong > 0)
+  }
+
+  test("the apply's named phases, commit among them, hold at least 90% of its jobs") {
+    // the rest is the change-file collect; a job outside every phase is
+    // time the record cannot attribute
+    val (dir, osm, osc) = cafeFiles()
+    val state = s"$dir/state"
+    records(DiffPipeline.init(spark, cafes, state, OsmXml.read(spark, osm), nBuckets = 4))
+    val Seq(apply) = records(DiffPipeline.applyBatchFiles(spark, cafes, state, Seq(osc),
+      expireDir = Some(s"$dir/expire")))
+    val span = apply.get("span")
+    val named = span.get("phases").elements().asScala.map(_.get("jobs").asInt).sum
+    val all = span.get("jobs").asInt
+    assert(phases(span).contains("commit"))
+    assert(named >= 0.9 * all, s"named phases hold $named of the apply's $all jobs")
   }
 }

@@ -68,7 +68,7 @@ class BucketingSpec extends SparkSpecBase {
 
   test("full import over the bucketed store equals the shuffle-join import") {
     // the bench's osm_import_bucketed A/B is only meaningful if the
-    // injected resolveStored assembler is semantics-identical to the
+    // injected resolveStore assembler is semantics-identical to the
     // default in-pipeline join — pin table-for-table row equality on the
     // real fixture
     val monaco = "/root/reference/vendor/github.com/omniscale/go-osm/" +
@@ -102,13 +102,8 @@ class BucketingSpec extends SparkSpecBase {
     val stored: (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame =
       (ways, coords) => {
-        val exploded = ways.select(col("id").as("way_id"),
-          size(col("refs")).as("nrefs"),
-          posexplode(col("refs")).as(Seq("pos", "id")))
-        Bucketing.writeBucketed(exploded, "imp_wayrefs_bkt", "id")
-        Bucketing.writeBucketed(coords, "imp_coords_bkt", "id")
-        WayAssembly.resolveStored(
-          spark.table("imp_wayrefs_bkt"), spark.table("imp_coords_bkt"))
+        WayAssembly.writeStore(ways, coords, "imp_bkt", nBuckets = 8)
+        WayAssembly.resolveStore(spark, "imp_bkt")
       }
     val base = tablesWith(None)
     val viaStore = tablesWith(Some(stored))

@@ -89,16 +89,22 @@ class BucketPruneSpec extends SparkSpecBase {
     val m5 = new String(Files.readAllBytes(
       Paths.get(dir, "t", "v5", "_manifest")), "UTF-8")
     assert(m5.contains("v4/ins"), "v5 manifest must carry v4's segment")
-    // vacuum reclaims the versions the committed manifest no longer names
-    // (v0–v2, folded away by the v3 compaction) and keeps the base and
-    // segment it still reads (v3, v4); the table reads the same after
+    // the commit reclaims the versions the committed manifest no longer
+    // names (v0–v2, folded away by the v3 compaction) and keeps the base
+    // and segment it still reads (v3, v4); the table reads the same after
+    def versions(): Set[String] = {
+      val kept = Files.list(Paths.get(dir, "t"))
+      try kept.iterator().asScala.map(_.getFileName.toString).toSet finally kept.close()
+    }
     store.commit(5)
-    store.vacuum(Seq("t"), keep = 0)
-    val kept = Files.list(Paths.get(dir, "t"))
-    try assert(kept.iterator().asScala.map(_.getFileName.toString).toSet ==
-      Set("v3", "v4", "v5"))
-    finally kept.close()
+    assert(versions() == Set("v3", "v4", "v5"))
     assert(rows(5) == Seq((1L, "A"), (2L, "B"), (4L, "d")))
+    // past the retained window (v6, v7 behind v8), the base and segment
+    // v8's manifest still reads (v3, v4) stay; the unreferenced v5 goes
+    for (v <- 6 to 8) store.writeUnchanged("t", v, v - 1)
+    store.commit(8)
+    assert(versions() == Set("v3", "v4", "v6", "v7", "v8"))
+    assert(rows(8) == Seq((1L, "A"), (2L, "B"), (4L, "d")))
   }
 
   test("a pre-r13 store (id-range buckets or an unstamped SEG segment) " +
@@ -233,13 +239,13 @@ class BucketPruneSpec extends SparkSpecBase {
       assert(storedRelrefs == derivedRelrefs, "relrefs drifted")
     }
 
-    // vacuum must NOT delete v0 while the committed manifest references it
-    store.vacuum(Seq("coords", "ways") ++
-      (mapping.conf.tables.keys ++ mapping.conf.generalizedTables.keys).map(t => s"tbl_$t"),
-      keep = 0)
+    // a commit past the retained versions must NOT delete v0 while the
+    // committed manifest still references it (the base under v1's segment)
+    for (t <- Seq("coords", "ways"); v <- 2 to 3) store.writeUnchanged(t, v, v - 1)
+    store.commit(3)
     assert(Files.isDirectory(Paths.get(stateDir, "coords", "v0")),
-      "vacuum deleted a version dir still referenced by the live manifest")
-    assert(store.read("coords", 1).count() == coords.count())
+      "retention deleted a version dir still referenced by the live manifest")
+    assert(store.read("coords", 3).count() == coords.count())
   }
 
   test("diff init+apply is identical under distributed file discovery") {

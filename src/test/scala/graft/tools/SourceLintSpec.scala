@@ -86,6 +86,25 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("in graft/streaming only Pointer.scala renames a file") {
+    // one commit protocol: every pointer file goes tmp -> sync -> rename
+    // through graft.streaming.Pointer; a rename of its own elsewhere is one
+    // more protocol for the crash-at-every-step checks to miss. The one
+    // other rename is Replication.httpFetch's `.part` download, which
+    // moves a change file, not a pointer, into place. The needles are
+    // split so this file does not match itself.
+    val needles = Seq("." + "rename(", "." + "renameTo(", "Files." + "move(")
+    val allowed = Set(("Replication.scala", "Files." + "move(tmp, dst"))
+    val offenders = for {
+      f <- scalaFiles("src/main/scala/graft/streaming")
+      if f.getName != "Pointer.scala"
+      (n, l) <- linesOf(f)
+      if needles.exists(l.contains)
+      if !allowed.exists { case (file, call) => f.getName == file && l.contains(call) }
+    } yield s"${f.getPath}:$n: $l"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("every SPARK_GRAFT_* name in src/main is documented in README.md") {
     // the env surface is what a user can set; a name the README does not
     // carry is an undocumented knob
